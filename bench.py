@@ -301,60 +301,6 @@ def _calib_worker(args):
 # ---------------------------------------------------------------------------
 
 
-HEADLINE_QUERIES = [
-    "extract_roundtrip", "extract_lang_profile", "text_stats",
-    "fingerprints", "exact_dup_groups", "ngram_jaccard",
-    "minhash_near_dups", "simhash", "knn_bruteforce", "ann_topk",
-    "report_agg", "join_revenue", "window_topk_events", "sessionize",
-    "event_pivot", "kv_pivot", "json_repair", "multipage_merge",
-    "image_extract", "image_link", "readability", "dedup_kept",
-    "customers_without_orders", "image_items", "formatting_render",
-    "page_chrome_layout", "bpe_token_counts", "gopher_flags",
-    "repetition_stats", "source_quantiles", "dup_clusters", "ivf_topk",
-    "winnowing", "drop_near_dups", "drop_dup_paragraphs",
-    "pdf_positions", "stream_dedup", "decontam_kept", "sample_mix",
-    "pii_redaction", "host_profile", "pdf_metadata", "curation_pipeline",
-    "embedding_near_dups", "lang_id", "c4_filter", "url_filter",
-    "drop_boilerplate", "snapshot_dedup", "shuffle_shards",
-    "dedup_best_kept", "pack_sequences", "outlinks", "link_graph",
-    "pagerank", "anchor_profile", "asof_policy", "range_campaigns",
-    "event_rollup", "kmv_distinct", "robots_policy", "nfc_normalize",
-    "top_terms", "canonical_urls", "snapshot_diff", "stratified_sample",
-    "warc_roundtrip", "dup_spans", "drop_dup_spans",
-    "snapshot_dedup_bloom", "inverted_index", "host_quality_filter",
-    "lm_perplexity", "perplexity_buckets", "tfidf_cosine_pairs",
-    "nb_confusion", "quality_gated_export", "index_delta_merge",
-    "hits_scores", "cap_per_host", "semantic_dedup", "dsir_select",
-    "domain_mixture", "lexical_diversity", "fix_mojibake", "page_metadata",
-    "pq_topk", "readability_grade", "segment_languages", "feed_items",
-    "sitemap_urls", "revisit_schedule", "jsonld_records",
-    "frequent_tokens", "hreflang_clusters", "sniff_types",
-    "script_profile", "weighted_sample", "url_templates",
-    "prototype_prune", "roc_auc", "cdx_fetch_plan", "triangle_counts",
-    "chunk_passages", "surt_keys", "meta_robots", "bitext_candidates",
-    "politeness_schedule", "host_dup_stats", "shingle_novelty",
-    "title_overlap", "assign_splits", "parse_robots",
-    "resolve_redirects", "calibration_buckets", "containment_pairs",
-    "block_profile", "count_min_freq", "dehyphenate", "bm25_topk",
-    "wilson_host_rank", "edit_near_dups", "char_entropy",
-    "extraction_prf", "zipf_diagnostics", "pdf_outline", "cdc_overlap",
-    "cdc_candidates", "vocab_coverage", "fim_transform",
-    "extract_span_profile", "quality_by_source", "token_counts",
-    "token_kl", "normalize_web_text", "table_cells", "pmi_collocations",
-    "span_corruption", "render_markdown", "trustrank", "change_rates",
-    "wet_roundtrip", "kn_perplexity", "blocked_terms", "sentence_align",
-    "wat_roundtrip", "template_farms", "zorder_keys", "bpe_merges",
-    "robots_wildcards", "compression_buckets", "ndcg_eval",
-    "matryoshka_trunc", "centroid_outliers", "skew_profile",
-    "sq8_topk", "image_dhash_dups", "hll_distinct", "bpe_encode",
-    "kmv_overlap", "hdr_quantiles", "rendezvous_routing", "stream_hll",
-    "zone_pruning", "percolate", "apportion_budget", "hashed_quality",
-    "soft_dedup", "reciprocal_links", "hard_negatives", "length_buckets",
-    "ingest_near_dups", "detect_moves", "sitemap_coverage",
-    "drop_near_dups_best", "stream_percolate", "mirror_families",
-    "stream_quality",
-]
-
 # Shuffle-bearing analytics queries also timed at local[8] so the N→4N
 # evidence is not extraction-only (VERDICT r1 item 10).
 ANALYTICS_PAIR_QUERIES = [
@@ -373,7 +319,7 @@ def _run_headline(spark, names=None) -> dict:
     qs["report_agg"](spark, SF_DIR).write.format("noop") \
         .mode("overwrite").save()
     times = {}
-    for name in (names or HEADLINE_QUERIES):
+    for name in (names or qs):
         # construction is INSIDE the timed region: operators with eager
         # materialization (dup_clusters' iterative localCheckpoints) do
         # their work at build time, not at the final write
