@@ -437,8 +437,9 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     connected components → keep one doc per cluster.
 
     ``keep_by``: optional NUMERIC column — the survivor is the cluster
-    member MAXIMIZING it (min id breaks ties) instead of the min-id
-    member, mirroring ``drop_exact_duplicates``' quality-aware rule:
+    member MAXIMIZING it (min id breaks ties; a NULL score ranks below
+    every real one) instead of the min-id member, mirroring
+    ``drop_exact_duplicates``' quality-aware rule:
     near-dup families are re-renders of the same content, and a
     production pipeline keeps the cleanest extraction, not the
     smallest id. Costs one extra narrow join of the (tiny) cluster
@@ -457,15 +458,18 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
         victims = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     else:
-        # min of (-score, id): max score, ties to min id — negating
-        # the score, never the id (the drop_exact_duplicates rule)
+        # min of (coalesce(-score, +inf), id): max score, ties to min
+        # id, unscored last — negating the score, never the id (the
+        # drop_exact_duplicates rule). A bare -score would put NULL
+        # first and hand the cluster to an unscored member.
         scored = clusters.join(
             df.select(F.col(id_col).alias("doc_id"), F.col(keep_by)),
             "doc_id")
         survivors = scored.groupBy("cluster_id").agg(
             F.min_by(
                 F.col("doc_id"),
-                F.struct((-F.col(keep_by)).alias("_ns"),
+                F.struct(F.col(keep_by).isNull().alias("_unscored"),
+                         (-F.col(keep_by)).alias("_ns"),
                          F.col("doc_id"))).alias("_keep"))
         victims = (scored.join(survivors, "cluster_id")
                    .filter(F.col("doc_id") != F.col("_keep"))
@@ -890,8 +894,19 @@ def minhash_index(df: DataFrame, id_col: str = "doc_id",
     bytes — vs re-shingling petabytes of historical text). Exact
     shingle storage would be the corpus itself; the k-component
     signature is the documented precision trade (estimator std ≈
-    sqrt(J(1-J)/k), ~0.07 at J=0.8, k=32)."""
-    sigs = minhash_signatures(df, id_col, text_col, n, k)
+    sqrt(J(1-J)/k), ~0.07 at J=0.8, k=32).
+
+    Documents with no token (NULL, empty or whitespace-only text)
+    shingle to one blank shingle and would all share one signature —
+    one hot bucket per band, joining every such new doc to every such
+    historical doc. They carry no near-dup evidence and get no index
+    rows; the probe side (``ingest_near_dups``) builds through here
+    too, so they never become candidates and are kept."""
+    sh = (shingles_df(df, text_col, n)
+          .where(F.exists("sh", lambda s: s.rlike(r"\S")))
+          .select(F.col(id_col), "sh"))
+    sigs = minhash_signatures(sh, id_col, text_col, n, k,
+                              _pre_shingled=True)
     r = k // bands
     return sigs.select(
         F.col(id_col).alias("id"), "sig",
@@ -978,7 +993,10 @@ def mirror_families(df: DataFrame, group_col: str = "source",
     fan-out to ≤ C²/2 pairs per hash, killing the celebrity-hash
     quadratic); a pair is a mirror EDGE when the overlap covers ≥
     ``overlap_ppm_threshold`` of the SMALLER side (containment, so a
-    full mirror of a subsection still links); families are the
+    full mirror of a subsection still links). Both sides of that ratio
+    count only the hashes that survive the cap — a byte-identical
+    mirror whose content is mostly syndicated still links; the
+    reported ``n_hashes`` is the host's uncapped count. Families are the
     connected components (``duplicate_clusters``' pointer-doubling,
     min host name as family id).
 
@@ -1003,14 +1021,15 @@ def mirror_families(df: DataFrame, group_col: str = "source",
             .where(F.col("_fan") <= max_hosts_per_hash)
             .select("_c"))
     slim = keyed.join(kept, "_c")
+    slim_totals = slim.groupBy("_h").agg(F.count(F.lit(1)).alias("_n"))
     b = slim.select(F.col("_c"), F.col("_h").alias("_hb"))
     shared = (slim.join(b, "_c")
               .where(F.col("_h") < F.col("_hb"))
               .groupBy("_h", "_hb")
               .agg(F.count(F.lit(1)).alias("_shared")))
-    ta = totals.select(F.col("_h"), F.col("n_hashes").alias("_na"))
-    tb = totals.select(F.col("_h").alias("_hb"),
-                       F.col("n_hashes").alias("_nb"))
+    ta = slim_totals.select(F.col("_h"), F.col("_n").alias("_na"))
+    tb = slim_totals.select(F.col("_h").alias("_hb"),
+                            F.col("_n").alias("_nb"))
     edges = (shared.join(ta, "_h").join(tb, "_hb")
              .where(F.expr("_shared * 1000000 div least(_na, _nb)")
                     >= F.lit(int(overlap_ppm_threshold)))

@@ -94,9 +94,67 @@ def test_drop_near_duplicates_keep_by(spark):
     assert default == {1, 3}
 
 
+def test_drop_near_duplicates_keep_by_null_score_loses(spark):
+    """An unscored member never wins its cluster: NULL ranks below
+    every real score, whatever the ids."""
+    from document_extractor_spark.operators.dedup import (
+        drop_near_duplicates)
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(1, base, None), (2, base + " tail", 10)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string, q int")
+    kept = {r["doc_id"] for r in drop_near_duplicates(
+        df, threshold=0.5, keep_by="q").collect()}
+    assert kept == {2}
+
+
+def test_blank_docs_share_no_bucket_and_stay_kept(spark):
+    """Token-less docs (empty, whitespace-only, NULL) carry no near-dup
+    evidence: they get no index rows, so N of them on each side neither
+    share a band_hash nor produce N x N candidates; long-doc verdicts
+    are unchanged."""
+    blanks = ["", "   ", None, "\n\t"]
+    hist = _hist(spark).unionByName(spark.createDataFrame(
+        [(10 + i, t) for i, t in enumerate(blanks)],
+        "doc_id bigint, text string"))
+    idx = minhash_index(hist)
+    assert {r["id"] for r in idx.select("id").distinct().collect()} == {
+        1, 2, 3, 4}
+    new = spark.createDataFrame(
+        [(100, "alpha beta gamma delta epsilon zeta eta theta"),  # clone
+         (101, "totally novel words nowhere in history corpus")]
+        + [(200 + i, t) for i, t in enumerate(blanks)],
+        "doc_id bigint, text string")
+    got = {r["id"]: (r["best_match_id"], r["jaccard_est"], r["keep"])
+           for r in ingest_near_dups(new, idx).collect()}
+    assert got[100] == (1, 1.0, False)
+    assert got[101] == (None, None, True)
+    for i in range(len(blanks)):
+        assert got[200 + i] == (None, None, True)
+    assert len(got) == 2 + len(blanks)
+
+
 # ---------------------------------------------------------------------------
 # mirror_families
 # ---------------------------------------------------------------------------
+
+
+def test_mirror_families_mostly_syndicated_mirrors_link(spark):
+    """Containment counts only the hashes that survive the fan-in cap
+    on BOTH sides: two byte-identical hosts whose pages are mostly
+    syndicated (capped away) still form one family; n_hashes stays the
+    uncapped per-host count."""
+    from document_extractor_spark.operators.dedup import mirror_families
+
+    syndicated = [f"wire story {i}" for i in range(4)]
+    site = syndicated + ["own mirror page"]
+    rows = ([("a.com", t) for t in site] + [("b.com", t) for t in site]
+            + [(f"s{j}.com", t) for j in range(3) for t in syndicated])
+    got = {r["host"]: (r["family_id"], r["n_hashes"])
+           for r in mirror_families(
+               spark.createDataFrame(rows, "source string, text string"),
+               max_hosts_per_hash=4).collect()}
+    assert got == {"a.com": ("a.com", 5), "b.com": ("a.com", 5)}
 
 
 def test_mirror_families_components(spark):
