@@ -63,12 +63,16 @@ def detect_moves(old: DataFrame, new: DataFrame, key_col: str = "url",
 
     Scale shape: both sides reduce to the narrow (fingerprint, url)
     projection, one groupBy per side on the 16-byte fingerprint
-    (map-side combinable; the pathological all-empty-docs key is
-    bounded by ``max_urls_per_hash``, which drops fingerprints with
-    absurd fan-in — boilerplate, not movable content — with a
-    ``capped`` marker row rather than silently), then one equi-join
-    of the two fingerprint tables. Text never shuffles. NULL text has
-    no fingerprint and cannot move.
+    (map-side combinable), then one equi-join of the two fingerprint
+    tables. Text never shuffles. NULL text has no fingerprint and
+    cannot move.
+
+    Fan-in cap: the emitted URL lists are the first 64 sorted URLs of
+    each side, and ``capped`` marks a fingerprint with more than 64
+    URLs on either side (the pathological all-empty-docs key —
+    boilerplate, not movable content). ``moved`` is decided on the
+    full URL sets, so a URL shared past the 64th position still
+    counts.
 
     Output: ``(content_hash, old_urls, new_urls, moved, capped)``, one
     row per fingerprint present on both sides.
@@ -82,16 +86,14 @@ def detect_moves(old: DataFrame, new: DataFrame, key_col: str = "url",
                 .select(fingerprint(text_col).alias("content_hash"),
                         F.col(key_col).alias("_u"))
                 .groupBy("content_hash")
-                .agg(F.slice(F.array_sort(F.collect_set("_u")), 1, cap)
-                     .alias(out),
-                     F.countDistinct("_u").alias(f"_n_{out}")))
+                .agg(F.array_sort(F.collect_set("_u")).alias(f"_all_{out}")))
 
-    o = side(old, "old_urls")
-    n = side(new, "new_urls")
-    j = o.join(n, "content_hash")
+    j = side(old, "old").join(side(new, "new"), "content_hash")
     return j.select(
-        "content_hash", "old_urls", "new_urls",
-        (F.size(F.array_intersect("old_urls", "new_urls")) == 0)
+        "content_hash",
+        F.slice("_all_old", 1, cap).alias("old_urls"),
+        F.slice("_all_new", 1, cap).alias("new_urls"),
+        (F.size(F.array_intersect("_all_old", "_all_new")) == 0)
         .alias("moved"),
-        ((F.col("_n_old_urls") > cap) | (F.col("_n_new_urls") > cap))
+        ((F.size("_all_old") > cap) | (F.size("_all_new") > cap))
         .alias("capped"))

@@ -79,6 +79,25 @@ def test_detect_moves_classification(spark):
     assert len(got) == 3
 
 
+def test_detect_moves_shared_url_past_cap_is_not_a_move(spark):
+    """moved is decided on the full URL sets: the only URL both sides
+    share sorts past the 64 emitted ones, so the content did not move."""
+    from document_extractor_spark.operators.diff import detect_moves
+
+    text = "syndicated story"
+    old = spark.createDataFrame(
+        [(f"https://a/{i:03d}", text) for i in range(70)]
+        + [("https://z/shared", text)], "url string, text string")
+    new = spark.createDataFrame(
+        [(f"https://b/{i:03d}", text) for i in range(70)]
+        + [("https://z/shared", text)], "url string, text string")
+    (row,) = detect_moves(old, new).collect()
+    assert len(row["old_urls"]) == len(row["new_urls"]) == 64
+    assert "https://z/shared" not in row["old_urls"]
+    assert row["capped"] is True
+    assert row["moved"] is False
+
+
 def test_detect_moves_payload_not_shuffled(spark):
     from document_extractor_spark.operators.diff import detect_moves
     from document_extractor_spark.plans import (
