@@ -754,8 +754,9 @@ def hard_negatives(corpus: DataFrame, anchors: DataFrame, k: int = 5,
 
     Cosine is rounded to 6 places BEFORE ranking (ties then break on
     candidate id) so the DuckDB twin ranks identically. Zero-norm
-    vectors score NULL and never reach a top-k. Output:
-    ``(anchor_id, neg_id, cosine, rnk)``, ``rnk`` in 1..k.
+    vectors score NULL and never reach a top-k. An anchor with a NULL
+    id, label or vector (component) raises ``ValueError`` naming it.
+    Output: ``(anchor_id, neg_id, cosine, rnk)``, ``rnk`` in 1..k.
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -767,6 +768,14 @@ def hard_negatives(corpus: DataFrame, anchors: DataFrame, k: int = 5,
             "bounded metadata — pre-block larger sets with ivf_index")
     if not rows:
         raise ValueError("anchor set is empty")
+    for pos, r in enumerate(rows):
+        nulls = [c for c in (id_col, vec_col, label_col) if r[c] is None]
+        if r[vec_col] is not None and None in r[vec_col]:
+            nulls.append(f"{vec_col} component")
+        if nulls:
+            who = (f"id {r[id_col]}" if r[id_col] is not None
+                   else f"at batch position {pos}")
+            raise ValueError(f"anchor {who} has NULL {', '.join(nulls)}")
     scored = F.array(*[
         F.struct(
             F.lit(r[id_col]).alias("_aid"),

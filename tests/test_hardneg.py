@@ -75,6 +75,19 @@ def test_guards(spark):
         hard_negatives(df, big)
 
 
+@pytest.mark.parametrize("anchor,message", [
+    ((7, None, 1), "anchor id 7 has NULL embedding"),
+    ((7, [1.0, None], 1), "anchor id 7 has NULL embedding component"),
+    ((7, [1.0, 0.0], None), "anchor id 7 has NULL label"),
+    ((None, [1.0, 0.0], 1), "anchor at batch position 0 has NULL vec_id"),
+])
+def test_null_anchor_fields_raise_value_error(spark, anchor, message):
+    anchors = spark.createDataFrame(
+        [anchor], "vec_id bigint, embedding array<double>, label int")
+    with pytest.raises(ValueError, match=message):
+        hard_negatives(_vecs(spark), anchors)
+
+
 def test_plan_no_python_no_cross_join(spark):
     df = _vecs(spark)
     out = hard_negatives(df, df.where(F.col("vec_id") == 0), k=2)
