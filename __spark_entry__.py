@@ -10,7 +10,7 @@ duplicate name raises at import, and there is no way to register a
 query without an oracle.
 
 ``queries()`` / ``oracle_sql()`` are derived views of that registry,
-in the same order. The correctness driver attests a prefix of
+in the same order. The external correctness run attests a prefix of
 ``queries()``, so the order is (attested, declaration index): names
 with no green row (rows and hash match, no error) in any
 ``CORRECTNESS_r*.json`` next to this module come first. With no such
@@ -7026,21 +7026,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_extract_lang_profile(spark, "/root/testdata/sf0.001")
 
 
-def _attested() -> set[str]:
-    """Names with a green row (rows and hash match, no error) in any
-    CORRECTNESS_r*.json next to this module."""
-    green = set()
+def _attestation_order() -> list[str]:
+    """Registry names sorted by (attested, declaration index). Attested
+    means a green row (rows and hash match, no error) in any
+    CORRECTNESS_r*.json next to this module; the external correctness
+    run attests a prefix of queries(), so never-attested names lead."""
+    attested = set()
     for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
         for name, row in json.loads(path.read_text()).items():
             if row.get("rows_match") and row.get("hash_match") and row.get("err") is None:
-                green.add(name)
-    return green
-
-
-def _attestation_order() -> list[str]:
-    # the correctness driver attests a prefix of queries(), so never-attested
-    # names lead; sorted() is stable, so ties keep declaration order
-    attested = _attested()
+                attested.add(name)
+    # sorted() is stable: ties keep declaration order
     return sorted(_REGISTRY, key=lambda name: name in attested)
 
 

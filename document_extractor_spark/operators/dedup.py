@@ -458,10 +458,10 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
         victims = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     else:
-        # min of (coalesce(-score, +inf), id): max score, ties to min
-        # id, unscored last — negating the score, never the id (the
-        # drop_exact_duplicates rule). A bare -score would put NULL
-        # first and hand the cluster to an unscored member.
+        # min of (score IS NULL, -score, id): max score, ties to min
+        # id, unscored members last — negating the score, never the id
+        # (the drop_exact_duplicates rule). Without the NULL flag a
+        # NULL -score sorts first and an unscored member wins.
         scored = clusters.join(
             df.select(F.col(id_col).alias("doc_id"), F.col(keep_by)),
             "doc_id")

@@ -77,9 +77,10 @@ def test_entry_smoke(spark):
 
 
 def test_query_order_puts_never_attested_first():
-    """The correctness driver attests a prefix of queries(): every name
-    with no green row in a checked-in CORRECTNESS_r*.json must precede
-    every attested one, and oracle_sql() must list the same order."""
+    """The external correctness run attests a prefix of queries():
+    every name with no green row in a checked-in CORRECTNESS_r*.json
+    must precede every attested one, and oracle_sql() must list the
+    same order."""
     green = set()
     for path in Path(entry_mod.__file__).parent.glob("CORRECTNESS_r*.json"):
         for name, row in json.loads(path.read_text()).items():
