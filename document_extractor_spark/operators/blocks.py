@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..extractor.html_extract import classify_blocks, flatten
-from .extract import _DEFAULT_BATCH_BYTES, _rechunk
 
 BLOCK_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -50,9 +49,10 @@ _COLS = ["url", "block_idx", "tag", "n_words", "n_link_words",
          "link_density", "is_content", "parse_error"]
 
 
-def _profile_map(it: Iterator[pd.DataFrame],
-                 cap_bytes: int) -> Iterator[pd.DataFrame]:
-    for pdf in _rechunk(it, cap_bytes):
+def _profile_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in it:
+        if len(pdf) == 0:
+            continue
         recs: list = []
         for url, payload in zip(pdf["url"].to_numpy(),
                                 pdf["html"].to_numpy()):
@@ -75,15 +75,13 @@ def _profile_map(it: Iterator[pd.DataFrame],
         yield pd.DataFrame.from_records(recs, columns=_COLS)
 
 
-def block_profile(pages: DataFrame,
-                  cap_bytes: int = _DEFAULT_BATCH_BYTES) -> DataFrame:
+def block_profile(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) → one row per flattened DOM block:
     ``(url, block_idx, tag, n_words, n_link_words, link_density,
     is_content, parse_error)``. Narrow (no shuffle); input pruned to
     the two columns the kernel reads."""
     narrow = pages.select("url", "html")
-    return narrow.mapInPandas(
-        lambda it: _profile_map(it, cap_bytes), schema=BLOCK_SCHEMA)
+    return narrow.mapInPandas(_profile_map, schema=BLOCK_SCHEMA)
 
 
 def template_profile(blocks: DataFrame, url_col: str = "url") -> DataFrame:

@@ -14,13 +14,17 @@ Four tiers, cheapest first — the standard web-corpus dedup ladder:
 4. **SimHash** — 64-bit near-dup signature, fully JVM-side: explode
    tokens → xxhash64 → per-bit sign votes via map-side partial aggregation.
 
+Every LSH tier here and its siblings (SRP bands in ``similarity.py``,
+dHash blocks in ``multimodal.py``) get candidate pairs from one
+(band, key) self-join, ``_band_pairs``.
+
 All operators avoid Python in the hot path entirely (plan shows no
 Python nodes at all — stricter than the Arrow-only rule).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import content_hash, shingles_df
@@ -44,6 +48,17 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _survivor_key(score: str, id_col: str) -> Column:
+    """``min_by`` ordering key of the survivor rules: max ``score``,
+    unscored (NULL) rows last, ties to the min id. Negates the score,
+    never the id: ids are arbitrary orderable types (urls, uuids), and
+    -F.col(id) on a string id throws under ANSI mode and silently NULLs
+    (arbitrary survivor) without it. Without the NULL flag a NULL
+    -score sorts first and an unscored row wins."""
+    return F.struct(F.col(score).isNull().alias("_unscored"),
+                    (-F.col(score)).alias("_ns"), F.col(id_col))
+
+
 def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text",
                           keep_by: str = None) -> DataFrame:
@@ -52,10 +67,11 @@ def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     (hash, id) instead, which AQE turns into a shuffled hash join.
 
     ``keep_by``: optional NUMERIC column name — the survivor is the row
-    MAXIMIZING it (min id breaks ties) instead of plain min id. This is
-    quality-aware canonical selection: exact clones usually differ in
-    provenance (fetch date, source tier, extraction quality score), and
-    a production pipeline keeps the best copy, not the smallest id.
+    MAXIMIZING it (min id breaks ties; a NULL score ranks below every
+    real one) instead of plain min id. This is quality-aware canonical
+    selection: exact clones usually differ in provenance (fetch date,
+    source tier, extraction quality score), and a production pipeline
+    keeps the best copy, not the smallest id.
     Same plan either way — ``min_by`` is one more map-side partial
     aggregate on the same single shuffle."""
     keyed = df.withColumn("content_hash", content_hash(text_col))
@@ -64,16 +80,9 @@ def drop_exact_duplicates(df: DataFrame, id_col: str = "doc_id",
             F.col("content_hash"), F.col("keep_id").alias(id_col)
         )
     else:
-        # min of (-score, id): max score, then MIN id — negating the
-        # score, never the id. Ids are arbitrary orderable types (urls,
-        # uuids); -F.col(id) on a string id throws under ANSI mode and
-        # silently NULLs (arbitrary survivor) without it. The score is
-        # numeric by contract, so its negation is always well-typed.
         survivors = keyed.groupBy("content_hash").agg(
-            F.min_by(
-                F.col(id_col),
-                F.struct((-F.col(keep_by)).alias("_ns"), F.col(id_col)),
-            ).alias(id_col)
+            F.min_by(F.col(id_col), _survivor_key(keep_by, id_col))
+            .alias(id_col)
         )
     return keyed.join(survivors, ["content_hash", id_col], "left_semi") \
         .drop("content_hash")
@@ -177,52 +186,88 @@ def optimal_lsh_params(threshold: float, k: int = 32,
     return best[1], best[2]
 
 
+def _band_pairs(rows: DataFrame, *carry: str) -> DataFrame:
+    """The near-dup family's one candidate-pair join. ``rows`` holds
+    ``(id, band, key[, *carry])``, one row per (doc, band); two docs are
+    candidates iff they share a key in some band. Returns DISTINCT
+    ``(id_a, id_b[, <c>_a…, <c>_b…])`` with id_a < id_b from a single
+    equi-join on (band, key) — the carried columns come back from both
+    sides so callers verify in the same join. Rows with a NULL id or
+    key can pair with nothing and are dropped before the shuffle."""
+    rows = rows.where(F.col("id").isNotNull() & F.col("key").isNotNull())
+
+    def side(s: str) -> DataFrame:
+        return rows.select("band", "key", F.col("id").alias(f"id_{s}"),
+                           *[F.col(c).alias(f"{c}_{s}") for c in carry])
+
+    return (side("a").join(side("b"), ["band", "key"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b",
+                    *[f"{c}_{s}" for s in "ab" for c in carry])
+            .distinct())
+
+
+def _perm_hash(i: int):
+    """Permutation ``i`` as a ONE-argument lambda. ``F.transform`` binds
+    a second lambda argument to the array position, so a default-bound
+    ``lambda s, i=i`` seeds every component with the shingle positions
+    and all k components come out equal."""
+    return lambda s: F.xxhash64(F.lit(i), s)
+
+
+def _shingled(df: DataFrame, id_col: str, text_col: str,
+              n: int) -> DataFrame:
+    """``(id_col, sh)`` shingle rows of the documents that have an id
+    and a token. Token-less documents (NULL, empty or whitespace-only
+    text) shingle to one blank shingle and would all share one MinHash
+    signature — one hot bucket per band joining every such doc to every
+    other; a NULL id can name no duplicate (and would win an index
+    probe's min-id tie). Neither gets rows. The token test runs on the
+    raw text: a filter on the shingle array would be pushed below the
+    staged shingle projection and rebuild the token array per gram,
+    quadratic in the length of a long document."""
+    usable = F.col(id_col).isNotNull() & F.col(text_col).rlike(r"\S")
+    return (shingles_df(df.where(usable), text_col, n)
+            .select(F.col(id_col), "sh"))
+
+
+def _minhash_bands(sh: DataFrame, id_col: str, k: int,
+                   bands: int) -> DataFrame:
+    """The one MinHash pass over :func:`_shingled` rows: sig[i] = min
+    over shingles of xxhash64(i, shingle), split into ``bands`` bands
+    of r = k/bands components, each band hashed with its band number.
+    Returns ``(id, sig, band, key)``, one row per (doc, band) — the
+    :func:`_band_pairs` input."""
+    r = k // bands
+    sig = F.array(*[F.array_min(F.transform("sh", _perm_hash(i)))
+                    for i in range(k)])
+    return (
+        sh.select(F.col(id_col).alias("id"), sig.alias("sig"))
+        .select("id", "sig", F.posexplode(F.array(*[
+            F.xxhash64(*[F.element_at("sig", b * r + j + 1)
+                         for j in range(r)], F.lit(b))
+            for b in range(bands)
+        ])).alias("band", "key"))
+    )
+
+
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", n: int = 3,
-                       k: int = 32, _pre_shingled: bool = False) -> DataFrame:
+                       k: int = 32) -> DataFrame:
     """k-permutation MinHash over n-gram shingles, entirely JVM-side:
-    sig[i] = min over shingles of xxhash64(i, shingle)."""
-    sh = (df.select(F.col(id_col), F.col("sh")) if _pre_shingled
-          else shingles_df(df, text_col, n).select(F.col(id_col), "sh"))
-    sig = F.array(*[
-        F.array_min(F.transform("sh", lambda s, i=i: F.xxhash64(F.lit(i), s)))
-        for i in range(k)
-    ])
-    return sh.select(F.col(id_col), sig.alias("sig"))
+    sig[i] = min over shingles of xxhash64(i, shingle). Token-less
+    documents get no row (see :func:`_shingled`)."""
+    return (_minhash_bands(_shingled(df, id_col, text_col, n), id_col, k, 1)
+            .select(F.col("id").alias(id_col), "sig"))
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text", n: int = 3,
-                           k: int = 32, bands: int = 8,
-                           _pre_shingled: bool = False) -> DataFrame:
+                           k: int = 32, bands: int = 8) -> DataFrame:
     """LSH banding: split the k-sig into ``bands`` rows of r = k/bands,
-    hash each band, bucket-join. Returns distinct candidate (id_a, id_b).
-    ``_pre_shingled``: df already carries the ``sh`` shingle column."""
-    r = k // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, k,
-                              _pre_shingled=_pre_shingled)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(*[F.element_at("sig", b * r + j + 1)
-                             for j in range(r)], F.lit(b))
-                for b in range(bands)
-            ])
-        ).alias("band", "band_hash"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    hash each band, bucket-join. Returns distinct candidate (id_a, id_b)."""
+    sh = _shingled(df, id_col, text_col, n)
+    return _band_pairs(_minhash_bands(sh, id_col, k, bands))
 
 
 def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -240,12 +285,10 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     DataFrame is unpersisted — nothing corpus-sized stays pinned in
     executor storage after the operator returns. The returned DataFrame
     is materialized; callers may ``unpersist()`` it when done."""
-    sh = shingles_df(df, text_col, n).select(F.col(id_col), "sh")
+    sh = _shingled(df, id_col, text_col, n)
     sh.persist()
     try:
-        cands = minhash_lsh_candidates(sh.select(id_col, "sh"), id_col,
-                                       text_col, n, k, bands,
-                                       _pre_shingled=True)
+        cands = _band_pairs(_minhash_bands(sh, id_col, k, bands))
         a = sh.alias("sa")
         b = sh.alias("sb")
         joined = (
@@ -304,38 +347,48 @@ def simhash(df: DataFrame, id_col: str = "doc_id",
     return votes.select(F.col(id_col), sig.alias("simhash"))
 
 
+def _hamming_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """Pairs of 64-bit signatures ``(id, sig)`` within Hamming distance
+    ``max_hamming`` → ``(id_a, id_b, hamming)``, id_a < id_b.
+
+    Pigeonhole blocking (Manku, Jain & Das Sarma, WWW 2007): the 64 bits
+    split into ``max_hamming + 1`` disjoint blocks, so two signatures
+    at most ``max_hamming`` bits apart agree on at least one whole
+    block. Candidates come from :func:`_band_pairs` on (block, value);
+    each is verified with one ``bit_count(xor)``. ``max_hamming`` is
+    capped at 7 (8 blocks of 8 bits): narrower blocks would put more
+    than 1/256 of the corpus in each bucket."""
+    if not 0 <= max_hamming <= 7:
+        raise ValueError(f"max_hamming must be in 0..7, got {max_hamming}")
+    m = max_hamming + 1
+    blocks, start = [], 0
+    for blk in range(m):
+        width = 64 // m + (blk < 64 % m)
+        mask = -1 if width == 64 else (1 << width) - 1
+        blocks.append(F.shiftright("sig", start).bitwiseAND(F.lit(mask)))
+        start += width
+    rows = sigs.select("id", "sig", F.posexplode(F.array(*blocks))
+                       .alias("band", "key"))
+    return (
+        _band_pairs(rows, "sig")
+        .select("id_a", "id_b",
+                F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+                .alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                             text_col: str = "text",
                             max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, using the
-    4-block pigeonhole trick: any pair within distance 3 shares at least
-    one of 4 16-bit blocks → join per block, verify full distance."""
-    sigs = simhash(df, id_col, text_col)
-    blocks = sigs.select(
-        F.col(id_col).alias("id"), F.col("simhash"),
-        F.posexplode(F.array(*[
-            F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF))
-            for b in range(4)
-        ])).alias("blk", "blk_val"),
-    )
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.blk_val") == F.col("b.blk_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, by the
+    pigeonhole block join of :func:`_hamming_pairs`. Token-less
+    documents (NULL, empty or whitespace-only text) would all share one
+    signature; they carry no evidence and are skipped."""
+    sigs = simhash(df.where(F.col(text_col).rlike(r"\S")), id_col, text_col)
+    return _hamming_pairs(
+        sigs.select(F.col(id_col).alias("id"), F.col("simhash").alias("sig")),
+        max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -458,19 +511,12 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
         victims = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     else:
-        # min of (score IS NULL, -score, id): max score, ties to min
-        # id, unscored members last — negating the score, never the id
-        # (the drop_exact_duplicates rule). Without the NULL flag a
-        # NULL -score sorts first and an unscored member wins.
         scored = clusters.join(
             df.select(F.col(id_col).alias("doc_id"), F.col(keep_by)),
             "doc_id")
         survivors = scored.groupBy("cluster_id").agg(
-            F.min_by(
-                F.col("doc_id"),
-                F.struct(F.col(keep_by).isNull().alias("_unscored"),
-                         (-F.col(keep_by)).alias("_ns"),
-                         F.col("doc_id"))).alias("_keep"))
+            F.min_by(F.col("doc_id"), _survivor_key(keep_by, "doc_id"))
+            .alias("_keep"))
         victims = (scored.join(survivors, "cluster_id")
                    .filter(F.col("doc_id") != F.col("_keep"))
                    .select("doc_id"))
@@ -896,26 +942,12 @@ def minhash_index(df: DataFrame, id_col: str = "doc_id",
     signature is the documented precision trade (estimator std ≈
     sqrt(J(1-J)/k), ~0.07 at J=0.8, k=32).
 
-    Documents with no token (NULL, empty or whitespace-only text)
-    shingle to one blank shingle and would all share one signature —
-    one hot bucket per band, joining every such new doc to every such
-    historical doc. They carry no near-dup evidence and get no index
-    rows; the probe side (``ingest_near_dups``) builds through here
-    too, so they never become candidates and are kept."""
-    sh = (shingles_df(df, text_col, n)
-          .where(F.exists("sh", lambda s: s.rlike(r"\S")))
-          .select(F.col(id_col), "sh"))
-    sigs = minhash_signatures(sh, id_col, text_col, n, k,
-                              _pre_shingled=True)
-    r = k // bands
-    return sigs.select(
-        F.col(id_col).alias("id"), "sig",
-        F.posexplode(F.array(*[
-            F.xxhash64(*[F.element_at("sig", b * r + j + 1)
-                         for j in range(r)], F.lit(b))
-            for b in range(bands)
-        ])).alias("band", "band_hash"),
-    ).select("band", "band_hash", "id", "sig")
+    Token-less documents get no index rows (see ``_shingled``); the
+    probe side (``ingest_near_dups``) builds through here too, so they
+    never become candidates and are kept."""
+    sh = _shingled(df, id_col, text_col, n)
+    return (_minhash_bands(sh, id_col, k, bands)
+            .select("band", F.col("key").alias("band_hash"), "id", "sig"))
 
 
 def ingest_near_dups(new_docs: DataFrame, index: DataFrame,
@@ -959,12 +991,9 @@ def ingest_near_dups(new_docs: DataFrame, index: DataFrame,
         .select(F.col("id"), F.col("_iid"),
                 F.round(est, 6).alias("_est"))
         .distinct())
-    # min of (-estimate, id): max estimate, ties to the smallest
-    # historical id — negating the score, never the id (ids are
-    # arbitrary orderable types; the drop_exact_duplicates rule)
+    # max estimate, ties to the smallest historical id
     best = (cand.groupBy("id")
-            .agg(F.min_by("_iid", F.struct((-F.col("_est")).alias("_ns"),
-                                           F.col("_iid")))
+            .agg(F.min_by("_iid", _survivor_key("_est", "_iid"))
                  .alias("best_match_id"),
                  F.max("_est").alias("jaccard_est")))
     ids = new_docs.select(F.col(id_col).alias("id")).distinct()

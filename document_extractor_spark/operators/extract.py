@@ -6,7 +6,7 @@ fix pipeline (``openai_content_extractor.py:63-307`` →
 ``content_structure_fixer.py:179-197`` → ``key_value_converter.py:359-397``
 in EricBui619/document-extractor), collapsed into ONE narrow stage:
 
-    select(url, html, lang) → salted repartition → mapInPandas(extract)
+    select(url, html, lang) [→ salted repartition] → mapInPandas(extract)
 
 Scale design (the 100 TB story):
 - **No per-row Python**: ``mapInPandas`` receives whole Arrow batches; the
@@ -20,16 +20,16 @@ Scale design (the 100 TB story):
   Zipfian host distribution cannot skew the *extraction* stage at all.
   Measured on this box: the payload shuffle costs 3.7× throughput at 32
   cores (9.5k → 2.6k docs/s); at 100 TB it would be a 100 TB shuffle.
-- **Skew, where it actually bites**: downstream per-host operators
-  (dedup groupBy, host aggregations) run on the ~10× smaller extracted
-  output — ``salted_repartition`` spreads those by ``(host,
+- **Skew**: ``salted_repartition`` spreads rows by ``(host,
   pmod(xxhash64(url), SALT))`` so a hot host fans out over SALT
   partitions instead of one straggler task (AQE only re-plans joins, not
-  UDF stages). Pass ``num_partitions`` to salt *before* extraction only
-  when the source layout itself is skewed (few giant unsplittable files).
-- **Bounded memory**: Arrow's ``maxRecordsPerBatch`` caps rows, not bytes;
-  giant pages would still blow the Python worker. ``_rechunk`` re-splits
-  each incoming batch on cumulative payload bytes (default 64 MiB).
+  UDF stages). Its only caller is this operator: pass ``num_partitions``
+  to salt *before* extraction when the source layout itself is skewed
+  (few giant unsplittable files).
+- **Bounded memory**: Spark's ``spark.sql.execution.arrow.maxBytesPerBatch``
+  (default 64 MiB) caps the bytes of each Arrow batch the worker
+  receives, alongside ``maxRecordsPerBatch`` for rows, so giant pages
+  arrive in size-capped batches; empty batches are skipped.
 - **Error isolation**: a malformed page NEVER fails the task — it emits a
   ``parse_error`` row (reference semantics: per-page try/except,
   ``pdf_processor.py:227-235``).
@@ -118,42 +118,13 @@ LAYOUT_TYPE = T.StructType([
     T.StructField("margin_right_percent", T.DoubleType(), True),
 ])
 
-_DEFAULT_BATCH_BYTES = 64 * 1024 * 1024
-
-
-def _rechunk(it: Iterator[pd.DataFrame], cap_bytes: int) -> Iterator[pd.DataFrame]:
-    """Split incoming Arrow batches so no chunk exceeds ``cap_bytes`` of
-    payload — size-capped batches per the north rule."""
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        # .str.len() stays C-level over the object/bytes column (a
-        # per-row Python ``map`` here was the only interpreted loop in
-        # the batch path); NaN for nulls → 0
-        sizes = pdf["html"].str.len().fillna(0).astype("int64")
-        total = int(sizes.sum())
-        if total <= cap_bytes:
-            yield pdf
-            continue
-        start = 0
-        acc = 0
-        vals = sizes.to_numpy()
-        for i in range(len(pdf)):
-            acc += int(vals[i])
-            if acc >= cap_bytes and i > start:
-                yield pdf.iloc[start:i]
-                start = i
-                acc = int(vals[i])
-        if start < len(pdf):
-            yield pdf.iloc[start:]
-
-
 def _extract_map(it: Iterator[pd.DataFrame],
-                 cap_bytes: int = _DEFAULT_BATCH_BYTES,
                  include_items: bool = False,
                  include_layout: bool = False,
                  emit_chrome: bool = False) -> Iterator[pd.DataFrame]:
-    for pdf in _rechunk(it, cap_bytes):
+    for pdf in it:
+        if len(pdf) == 0:
+            continue
         urls = pdf["url"].to_numpy()
         payloads = pdf["html"].to_numpy()
         langs = (
@@ -242,7 +213,6 @@ def skew_profile(df: DataFrame, key_col: str = "url",
 
 def extract_pages(df: DataFrame, num_partitions: Optional[int] = None,
                   salt: int = 16, keep_warc_day: bool = False,
-                  cap_bytes: int = _DEFAULT_BATCH_BYTES,
                   with_items: bool = False,
                   with_layout: bool = False,
                   emit_chrome: bool = False) -> DataFrame:
@@ -268,7 +238,7 @@ def extract_pages(df: DataFrame, num_partitions: Optional[int] = None,
     if keep_warc_day and "warc_day" in df.columns:
         fields.append(T.StructField("warc_day", T.StringType(), True))
     return narrow.mapInPandas(
-        lambda it: _extract_map(it, cap_bytes, include_items=with_items,
+        lambda it: _extract_map(it, include_items=with_items,
                                 include_layout=with_layout,
                                 emit_chrome=emit_chrome),
         schema=T.StructType(fields),

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _hamming_pairs
+
 # Deterministic fake frame format: b"RAW1" + uint16 w + uint16 h + w*h*3 bytes
 _MAGIC = b"RAW1"
 
@@ -268,37 +270,16 @@ def image_near_dups(df: DataFrame, max_hamming: int = 3,
                     payload_col: str = "payload",
                     url_col: str = "url") -> DataFrame:
     """Near-duplicate image pairs by dHash Hamming distance ≤
-    ``max_hamming``, via the same 4×16-bit pigeonhole block join as
-    ``simhash_near_duplicates`` (any pair within distance 3 shares a
-    block): candidates join on (block, value) — never all pairs — and
-    the full distance verifies with one JVM ``bit_count(xor)``.
-    Undecodable payloads carry a NULL hash and drop out of pairing."""
-    sigs = dhash64(df, payload_col, url_col).where(
-        F.col("dhash").isNotNull())
-    blocks = sigs.select(
-        F.col(url_col).alias("id"), F.col("dhash"),
-        F.posexplode(F.array(*[
-            F.shiftright("dhash", b * 16).bitwiseAND(F.lit(0xFFFF))
-            for b in range(4)
-        ])).alias("blk", "blk_val"),
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.blk_val") == F.col("b.blk_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("url_a"), F.col("b.id").alias("url_b"),
-            F.bit_count(
-                F.col("a.dhash").bitwiseXOR(F.col("b.dhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    ``max_hamming`` (0..7), via the same pigeonhole block join as
+    ``simhash_near_duplicates`` (``dedup._hamming_pairs``): candidates
+    join on (block, value) — never all pairs — and the full distance
+    verifies with one JVM ``bit_count(xor)``. Undecodable payloads
+    carry a NULL hash and drop out of pairing."""
+    sigs = dhash64(df, payload_col, url_col).select(
+        F.col(url_col).alias("id"), F.col("dhash").alias("sig"))
+    return _hamming_pairs(sigs, max_hamming).select(
+        F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b"),
+        "hamming")
 
 
 def image_features(df: DataFrame, payload_col: str = "payload",

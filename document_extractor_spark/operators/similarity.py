@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _band_pairs
+
 
 def _dot(vec_col: Column, qvec: list) -> Column:
     """<v, q> as zip_with + aggregate fold — whole-stage-codegen'd."""
@@ -173,22 +175,10 @@ def srp_band_candidates(df: DataFrame, dim: int, n_bands: int = 8,
     band. This replaces the single-table 8-plane design whose 256
     buckets made the in-bucket self-join quadratic at corpus scale."""
     udf = srp_band_buckets_udf(dim, n_bands, planes_per_band, seed)
-    banded = (
+    return _band_pairs(
         df.select(F.col(id_col).alias("id"),
                   udf(F.col(vec_col)).alias("bands"))
-        .select("id", F.posexplode("bands").alias("band", "bucket"))
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+        .select("id", F.posexplode("bands").alias("band", "key"))
     )
 
 

@@ -12,9 +12,9 @@ The default plan is ZERO-shuffle: extraction maps directly over
 Zipfian host skew cannot unbalance a stateless per-row map, and at
 100 TB a pre-extraction repartition would shuffle all 100 TB of raw
 payload (measured 3.7× slower even at bench scale). Salting
-(``num_partitions=``) remains as an explicit knob for source layouts
-whose *files* are skewed, and ``salted_repartition`` is applied by the
-downstream per-host operators on the ~10× smaller extracted output.
+(``extract_pages(num_partitions=…)``, the only caller of
+``salted_repartition``) remains as an explicit knob for source layouts
+whose *files* are skewed.
 
 One partition = one job = one checkpoint grain. Killing the process
 between jobs loses at most the in-flight partition, which the next run

@@ -90,6 +90,68 @@ def test_minhash_plan_jvm_only(spark, docs):
     assert_no_python(minhash_near_duplicates(docs))
 
 
+def test_minhash_signature_components_independent(spark, docs):
+    """Each of the k components hashes with its own permutation number:
+    a multi-shingle doc gets (nearly) k distinct minima, not one value
+    repeated k times."""
+    from document_extractor_spark.operators.dedup import minhash_signatures
+
+    sig = minhash_signatures(docs.where("doc_id = 0"), k=32).first()["sig"]
+    assert len(sig) == 32
+    assert len(set(sig)) > 16
+
+
+def test_near_dup_paths_skip_degenerate_rows(spark):
+    """NULL ids, NULL or token-less texts produce no candidate pairs and
+    no shared bucket in any near-dup path; the real clone pair stays."""
+    from document_extractor_spark.operators.dedup import (
+        _band_pairs, _minhash_bands, _shingled, drop_near_duplicates,
+        ingest_near_dups, minhash_index)
+
+    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(1, body), (2, body), (None, body), (None, body),
+            (3, ""), (4, "   "), (5, None), (6, "\n\t"), (7, ""),
+            (8, None)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    assert {(r["id_a"], r["id_b"]) for r in
+            minhash_lsh_candidates(df).collect()} == {(1, 2)}
+    assert {(r["id_a"], r["id_b"]) for r in
+            minhash_near_duplicates(df, threshold=0.5).collect()} == {(1, 2)}
+    assert {(r["id_a"], r["id_b"]) for r in
+            simhash_near_duplicates(df).collect()} == {(1, 2)}
+    # token-less docs are all kept (no cluster); only the clone dies
+    kept = sorted(r["doc_id"] for r in drop_near_duplicates(df, threshold=0.5)
+                  .where("doc_id IS NOT NULL").collect())
+    assert kept == [1, 3, 4, 5, 6, 7, 8]
+    # no bucket rows at all for token-less or id-less docs
+    bands = _minhash_bands(_shingled(df, "doc_id", "text", 3), "doc_id",
+                           32, 8)
+    assert {r["id"] for r in bands.select("id").distinct().collect()} == {
+        1, 2}
+    # an id-less clone in the index cannot become the best match
+    idx = minhash_index(df.where("doc_id IS NULL OR doc_id = 2"))
+    got = ingest_near_dups(df.where("doc_id = 1"), idx).first()
+    assert (got["best_match_id"], got["keep"]) == (2, False)
+    # NULL ids and NULL keys pair with nothing
+    keyed = spark.createDataFrame(
+        [(1, 0, 7), (2, 0, 7), (None, 0, 7), (3, 0, None), (4, 0, None)],
+        "id bigint, band int, key bigint")
+    assert [(r["id_a"], r["id_b"]) for r in
+            _band_pairs(keyed).collect()] == [(1, 2)]
+
+
+@pytest.mark.parametrize("max_hamming", [-1, 8])
+def test_hamming_pairs_reject_out_of_range(spark, docs, max_hamming):
+    from document_extractor_spark.operators.multimodal import image_near_dups
+
+    imgs = spark.createDataFrame([("img://a", b"")],
+                                 "url string, payload binary")
+    with pytest.raises(ValueError, match="max_hamming"):
+        simhash_near_duplicates(docs, max_hamming=max_hamming)
+    with pytest.raises(ValueError, match="max_hamming"):
+        image_near_dups(imgs, max_hamming=max_hamming)
+
+
 def test_simhash_properties(spark, docs):
     sigs = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
     assert sigs[7] == sigs[200]  # identical text → identical signature
@@ -100,6 +162,14 @@ def test_simhash_properties(spark, docs):
     near = {(r["id_a"], r["id_b"])
             for r in simhash_near_duplicates(docs, max_hamming=3).collect()}
     assert (7, 200) in near
+    # every block layout (1×64 bits … 8×8) finds exactly the pairs an
+    # all-pairs scan finds
+    for mh in (0, 4, 7):
+        truth = {(a, b): ham(sigs[a], sigs[b]) for a in sigs for b in sigs
+                 if a < b and ham(sigs[a], sigs[b]) <= mh}
+        got = {(r["id_a"], r["id_b"]): r["hamming"] for r in
+               simhash_near_duplicates(docs, max_hamming=mh).collect()}
+        assert got == truth
 
 
 def test_simhash_plan_jvm_only(spark, docs):
@@ -461,6 +531,18 @@ def test_drop_exact_duplicates_keep_by_quality(spark):
     default = sorted(r["doc_id"] for r in
                      drop_exact_duplicates(df).collect())
     assert default == [1, 4]
+
+
+def test_drop_exact_duplicates_keep_by_null_score_loses(spark):
+    """An unscored clone never survives its group: NULL ranks below
+    every real score, even when it holds the min id."""
+    df = spark.createDataFrame(
+        [(1, "same body", None), (2, "same body", 0.5)],
+        "doc_id bigint, text string, q double")
+    kept = [r["doc_id"] for r in
+            drop_exact_duplicates(df, keep_by="q").collect()]
+    assert kept == [2]
+
 
 def test_drop_exact_duplicates_keep_by_string_ids(spark):
     """keep_by must work when the id column is a STRING (urls): the

@@ -53,6 +53,22 @@ def test_near_clone_estimate_between(spark):
         assert r["keep"]          # below the 0.99 bar
 
 
+def test_partial_overlap_estimate_strictly_between(spark):
+    """Independent MinHash components make the estimator graded: a doc
+    sharing most shingles with a historical one is a candidate with an
+    estimate strictly between 0 and 1, not the all-or-nothing 0/1."""
+    words = [f"tok{i}" for i in range(40)]
+    hist = spark.createDataFrame([(1, " ".join(words))],
+                                 "doc_id bigint, text string")
+    new = spark.createDataFrame(
+        [(300, " ".join(words[:-1] + ["CHANGED"]))],
+        "doc_id bigint, text string")
+    r = ingest_near_dups(new, minhash_index(hist), threshold=0.99).first()
+    assert r["best_match_id"] == 1
+    assert 0.0 < r["jaccard_est"] < 1.0
+    assert r["keep"]
+
+
 def test_index_shape_and_guards(spark):
     hist = _hist(spark)
     idx = minhash_index(hist, k=32, bands=8)

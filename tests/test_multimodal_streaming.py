@@ -273,6 +273,28 @@ def test_image_near_dups_clones_only(spark):
                      ("img://a1", "img://a2"): 0}
 
 
+def test_image_near_dups_pigeonhole_finds_distance_4(spark):
+    """max_hamming=4 needs 5 blocks: two 9×8 frames whose dHashes differ
+    in one bit of each 16-bit quarter (column 8 of rows 0, 2, 4, 6 flips
+    only that row's last gradient bit) still pair, at distance 4."""
+    import numpy as np
+    from document_extractor_spark.operators.multimodal import _encode
+
+    base = np.tile(np.arange(9, dtype="uint8")[None, :, None] * 20, (8, 1, 3))
+    edited = base.copy()
+    edited[[0, 2, 4, 6], 8] = 0
+    df = spark.createDataFrame(
+        [("img://base", _encode(base)), ("img://edit", _encode(edited))],
+        "url string, payload binary")
+    hashes = {r["url"]: r["dhash"] for r in dhash64(df).collect()}
+    diff = (hashes["img://base"] ^ hashes["img://edit"]) & ((1 << 64) - 1)
+    assert [bin((diff >> (16 * b)) & 0xFFFF).count("1")
+            for b in range(4)] == [1, 1, 1, 1]
+    pairs = [(r["url_a"], r["url_b"], r["hamming"])
+             for r in image_near_dups(df, max_hamming=4).collect()]
+    assert pairs == [("img://base", "img://edit", 4)]
+
+
 # ---------------------------------------------------------------------------
 # stream_percolate
 # ---------------------------------------------------------------------------

@@ -67,13 +67,36 @@ def test_plan_has_no_per_row_python(spark, pages_df):
     assert "MapInPandas" in plan
 
 
-def test_batch_rechunking_small_cap(spark, pages_df, golden):
-    """Byte-capped re-chunking must not change results (cap far below one
-    page forces max splitting)."""
-    out = {r["url"]: r["extracted_text"]
-           for r in extract_pages(pages_df, cap_bytes=1024).collect()}
+def test_arrow_max_bytes_per_batch_caps_worker_batches(spark, pages_df,
+                                                       golden):
+    """Spark's ``maxBytesPerBatch`` bounds the Arrow batches the
+    extraction worker receives: set to a few KB, one partition of the
+    fixture arrives as several batches, and the text stays
+    byte-identical to the goldens. The setting is restored afterwards."""
+    import pandas as pd
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    one = pages_df.coalesce(1)
+
+    def batch_rows(it):
+        for pdf in it:
+            yield pd.DataFrame({"n": [len(pdf)]})
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        # the columns extract_pages hands its worker, batched identically
+        batches = [r["n"] for r in one.select("url", "html", "lang")
+                   .mapInPandas(batch_rows, "n long").collect()]
+        out = {r["url"]: r["extracted_text"]
+               for r in extract_pages(one).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert spark.conf.get(key) == prev
+    assert len(batches) > 1 and sum(batches) == len(golden)
+    assert set(out) == set(golden)
     for url, exp in golden.items():
-        assert out[url] == exp["extracted_text"]
+        assert out[url] == exp["extracted_text"], url
 
 
 def test_salted_repartition_spreads_hot_host(spark):
