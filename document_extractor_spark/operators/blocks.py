@@ -15,24 +15,21 @@ dashboards — "which hosts' pages started classifying 40% of their
 blocks as chrome this snapshot?" — without re-running extraction in a
 debugger.
 
-Scale shape — identical to the main extraction operator
-(operators/extract.py): a zero-shuffle ``mapInPandas`` over the
-pruned ``(url, html)`` scan, byte-capped Arrow batches, per-page error
-isolation (a malformed page yields a single ``parse_error`` row, never
-a task failure). Output fan-out is ~10-60 rows/page of fixed-width
-features — a fraction of the input payload bytes — so the profile is
-cheaper than extraction itself at any corpus size.
+Scale shape: a zero-shuffle map over the pruned ``(url, html)`` scan
+through ``extract._map_payloads`` — the same batch loop and error-row
+rule as extraction (a NULL page yields a single ``parse_error`` row,
+never a task failure). Output fan-out is ~10-60 rows/page of
+fixed-width features — a fraction of the input payload bytes — so the
+profile is cheaper than extraction itself at any corpus size.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..extractor.html_extract import classify_blocks, flatten
+from .extract import _map_payloads, host_col
 
 BLOCK_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -45,34 +42,17 @@ BLOCK_SCHEMA = T.StructType([
     T.StructField("parse_error", T.StringType(), True),
 ])
 
-_COLS = ["url", "block_idx", "tag", "n_words", "n_link_words",
-         "link_density", "is_content", "parse_error"]
 
-
-def _profile_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        recs: list = []
-        for url, payload in zip(pdf["url"].to_numpy(),
-                                pdf["html"].to_numpy()):
-            if payload is None:
-                recs.append((url, None, None, None, None, None, None,
-                             "null payload"))
-                continue
-            try:
-                html = payload.decode("utf-8", errors="replace") \
-                    if isinstance(payload, (bytes, bytearray)) else payload
-                fl = flatten(html)
-                classify_blocks(fl.blocks)
-                for b in fl.blocks:
-                    recs.append((url, b.index, b.tag, b.n_words,
-                                 b.n_link_words, round(b.link_density, 6),
-                                 b.is_content, None))
-            except Exception as exc:  # per-page isolation, never the task
-                recs.append((url, None, None, None, None, None, None,
-                             f"{type(exc).__name__}: {exc}"))
-        yield pd.DataFrame.from_records(recs, columns=_COLS)
+def _profile_rows(url, payload) -> list:
+    if payload is None:
+        return [(url, None, None, None, None, None, None, "null payload")]
+    html = payload.decode("utf-8", errors="replace") \
+        if isinstance(payload, (bytes, bytearray)) else payload
+    fl = flatten(html)
+    classify_blocks(fl.blocks)
+    return [(url, b.index, b.tag, b.n_words, b.n_link_words,
+             round(b.link_density, 6), b.is_content, None)
+            for b in fl.blocks]
 
 
 def block_profile(pages: DataFrame) -> DataFrame:
@@ -80,8 +60,8 @@ def block_profile(pages: DataFrame) -> DataFrame:
     ``(url, block_idx, tag, n_words, n_link_words, link_density,
     is_content, parse_error)``. Narrow (no shuffle); input pruned to
     the two columns the kernel reads."""
-    narrow = pages.select("url", "html")
-    return narrow.mapInPandas(_profile_map, schema=BLOCK_SCHEMA)
+    return _map_payloads(pages, ["url", "html"], _profile_rows,
+                         BLOCK_SCHEMA, "parse_error")
 
 
 def template_profile(blocks: DataFrame, url_col: str = "url") -> DataFrame:
@@ -105,8 +85,6 @@ def template_profile(blocks: DataFrame, url_col: str = "url") -> DataFrame:
     share is exact integer division, engine-identical.
     """
     from pyspark.sql import functions as F
-
-    from .extract import host_col
 
     valid = blocks.where(
         F.col("parse_error").isNull() & F.col("block_idx").isNotNull())

@@ -6,7 +6,7 @@ fix pipeline (``openai_content_extractor.py:63-307`` →
 ``content_structure_fixer.py:179-197`` → ``key_value_converter.py:359-397``
 in EricBui619/document-extractor), collapsed into ONE narrow stage:
 
-    select(url, html, lang) [→ salted repartition] → mapInPandas(extract)
+    select(url, html, lang) [→ salted repartition] → mapInPandas (extract)
 
 Scale design (the 100 TB story):
 - **No per-row Python**: ``mapInPandas`` receives whole Arrow batches; the
@@ -30,14 +30,20 @@ Scale design (the 100 TB story):
   (default 64 MiB) caps the bytes of each Arrow batch the worker
   receives, alongside ``maxRecordsPerBatch`` for rows, so giant pages
   arrive in size-capped batches; empty batches are skipped.
-- **Error isolation**: a malformed page NEVER fails the task — it emits a
-  ``parse_error`` row (reference semantics: per-page try/except,
-  ``pdf_processor.py:227-235``).
+- **Error isolation — a malformed payload never fails the task.** A
+  row whose kernel raises becomes exactly one error row: its key, the
+  error column set to ``"<ExcType>: <message>"``, every other field
+  NULL (reference semantics: per-page try/except,
+  ``pdf_processor.py:227-235``). ``_map_payloads`` is the only place
+  that rule is enforced: it is the one ``mapInPandas`` batch loop
+  behind every per-document kernel — this operator,
+  ``blocks.block_profile``, the PDF probes in ``media`` and the image
+  kernels in ``multimodal``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -118,41 +124,44 @@ LAYOUT_TYPE = T.StructType([
     T.StructField("margin_right_percent", T.DoubleType(), True),
 ])
 
-def _extract_map(it: Iterator[pd.DataFrame],
-                 include_items: bool = False,
-                 include_layout: bool = False,
-                 emit_chrome: bool = False) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        urls = pdf["url"].to_numpy()
-        payloads = pdf["html"].to_numpy()
-        langs = (
-            pdf["lang"].to_numpy()
-            if "lang" in pdf.columns
-            else [None] * len(pdf)
-        )
-        recs = [
-            extract_payload(p, url=u,
-                            lang_hint=l if isinstance(l, str) and l else None,
-                            include_items=include_items,
-                            include_layout=include_layout,
-                            emit_chrome=emit_chrome)
-            for u, p, l in zip(urls, payloads, langs)
-        ]
-        out = pd.DataFrame.from_records(recs)
-        for extra in ("warc_day",):
-            if extra in pdf.columns:
-                out[extra] = pdf[extra].to_numpy()
-        cols = ["url", "extracted_text", "spans", "lang", "parse_error",
-                "n_blocks", "n_bytes_in", "n_bytes_out"]
-        if include_items:
-            cols.append("content_items")
-        if include_layout:
-            cols.append("layout")
-        if "warc_day" in out.columns:
-            cols.append("warc_day")
-        yield out[cols]
+def _map_payloads(df: DataFrame, cols: list[str],
+                  fn: Callable[..., list], schema: T.StructType,
+                  error_col: Optional[str]) -> DataFrame:
+    """The one per-document ``mapInPandas`` loop every payload kernel
+    runs on (``extract_pages``, ``blocks.block_profile``, the PDF probes
+    in ``media``, the image kernels in ``multimodal``).
+
+    Selects only ``cols`` (the scan's ``ReadSchema`` prunes to them),
+    skips empty Arrow batches, zips each batch's column arrays and calls
+    ``fn(*values)`` per row; ``fn`` returns a list of output tuples in
+    ``schema`` order (one per output row — fan-out kernels return many).
+    If ``fn`` raises, the row becomes exactly one error row: the key
+    (the first of ``cols``), ``error_col = "<ExcType>: <message>"`` and
+    NULL everywhere else. ``error_col=None`` lets the exception fail the
+    task — only for schemas without an error column whose ``fn`` is
+    already total."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            rows: list = []
+            for values in zip(*(pdf[c].to_numpy() for c in cols)):
+                try:
+                    rows += fn(*values)
+                except Exception as exc:  # per-row isolation, never the task
+                    if error_col is None:
+                        raise
+                    err = dict.fromkeys(names)
+                    err[names[0]] = values[0]
+                    err[error_col] = f"{type(exc).__name__}: {exc}"
+                    rows.append(tuple(err.values()))
+            # object dtype: a NULL must not turn an int64 column into
+            # float64 (a dHash would lose its low bits)
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.select(*cols).mapInPandas(run, schema=schema)
 
 
 def host_col(url: Column = None) -> Column:
@@ -235,14 +244,24 @@ def extract_pages(df: DataFrame, num_partitions: Optional[int] = None,
         fields.append(T.StructField("content_items", ITEM_TYPE, True))
     if with_layout:
         fields.append(T.StructField("layout", LAYOUT_TYPE, True))
-    if keep_warc_day and "warc_day" in df.columns:
+    if "warc_day" in cols:
         fields.append(T.StructField("warc_day", T.StringType(), True))
-    return narrow.mapInPandas(
-        lambda it: _extract_map(it, include_items=with_items,
-                                include_layout=with_layout,
-                                emit_chrome=emit_chrome),
-        schema=T.StructType(fields),
-    )
+    schema = T.StructType(fields)
+    names = schema.fieldNames()
+
+    def extract_one(*values) -> list:
+        row = dict(zip(cols, values))
+        lang = row.get("lang")
+        rec = extract_payload(row["html"], url=row["url"],
+                              lang_hint=lang if isinstance(lang, str)
+                              and lang else None,
+                              include_items=with_items,
+                              include_layout=with_layout,
+                              emit_chrome=emit_chrome)
+        rec["warc_day"] = row.get("warc_day")
+        return [tuple(rec[n] for n in names)]
+
+    return _map_payloads(narrow, cols, extract_one, schema, "parse_error")
 
 
 def observe_extract(df: DataFrame):

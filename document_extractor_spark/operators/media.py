@@ -22,6 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..extractor.pdf_extract import is_pdf, pdf_metadata, pdf_outline
+from .extract import _map_payloads
 
 _IMG_TAG = r"<img[^>]*>"
 _SRC = r"""src=['"]([^'"]+)['"]"""
@@ -87,13 +91,9 @@ def link_images_to_content(images: DataFrame, captions: DataFrame,
 
 def pdf_metadata_probe(df: DataFrame, url_col: str = "url",
                        html_col: str = "html") -> DataFrame:
-    """S1 — per-row PDF metadata over the binary column (mapInPandas;
-    non-PDF payloads yield is_pdf=false with null fields)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..extractor.pdf_extract import is_pdf, pdf_metadata
-
+    """S1 — per-row PDF metadata over the binary column (one row per
+    input through ``extract._map_payloads``; non-PDF payloads yield
+    is_pdf=false with null fields)."""
     schema = T.StructType([
         T.StructField("url", T.StringType()),
         T.StructField("is_pdf", T.BooleanType()),
@@ -108,29 +108,15 @@ def pdf_metadata_probe(df: DataFrame, url_col: str = "url",
         T.StructField("page_width", T.DoubleType()),
         T.StructField("page_height", T.DoubleType()),
     ])
-    _meta_cols = ("title", "author", "subject", "creator", "producer",
-                  "creation_date", "modification_date")
+    meta_cols = schema.fieldNames()[2:]
 
-    def probe(it):
-        for pdf in it:
-            recs = []
-            for u, payload in zip(pdf[url_col], pdf[html_col]):
-                if payload is not None and is_pdf(bytes(payload)):
-                    m = pdf_metadata(bytes(payload))
-                    rec = {"url": u, "is_pdf": True,
-                           "total_pages": m["total_pages"],
-                           "page_width": m["page_width"],
-                           "page_height": m["page_height"]}
-                    rec.update({k: m[k] for k in _meta_cols})
-                    recs.append(rec)
-                else:
-                    rec = {"url": u, "is_pdf": False, "total_pages": None,
-                           "page_width": None, "page_height": None}
-                    rec.update({k: None for k in _meta_cols})
-                    recs.append(rec)
-            yield pd.DataFrame(recs, columns=[f.name for f in schema.fields])
+    def probe(url, payload) -> list:
+        if payload is None or not is_pdf(payload):
+            return [(url, False, *[None] * len(meta_cols))]
+        m = pdf_metadata(payload)
+        return [(url, True, *(m[k] for k in meta_cols))]
 
-    return df.select(url_col, html_col).mapInPandas(probe, schema)
+    return _map_payloads(df, [url_col, html_col], probe, schema, None)
 
 
 def pdf_outline_probe(df: DataFrame, url_col: str = "url",
@@ -141,12 +127,7 @@ def pdf_outline_probe(df: DataFrame, url_col: str = "url",
     renders pixels; /Outlines dies there). Non-PDF or bookmark-less
     payloads yield no rows; malformed trees are cycle-guarded in the
     parser and never fail the task. Same narrow zero-shuffle
-    mapInPandas shape as the metadata probe above."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..extractor.pdf_extract import is_pdf, pdf_outline
-
+    ``extract._map_payloads`` shape as the metadata probe above."""
     schema = T.StructType([
         T.StructField("url", T.StringType()),
         T.StructField("pos", T.IntegerType()),
@@ -155,16 +136,10 @@ def pdf_outline_probe(df: DataFrame, url_col: str = "url",
         T.StructField("page_idx", T.IntegerType()),
     ])
 
-    def probe(it):
-        for pdf in it:
-            recs = []
-            for u, payload in zip(pdf[url_col], pdf[html_col]):
-                if payload is None or not is_pdf(bytes(payload)):
-                    continue
-                for node in pdf_outline(bytes(payload)):
-                    recs.append((u, node["pos"], node["level"],
-                                 node["title"], node["page_idx"]))
-            yield pd.DataFrame(
-                recs, columns=[f.name for f in schema.fields])
+    def probe(url, payload) -> list:
+        if payload is None or not is_pdf(payload):
+            return []
+        return [(url, n["pos"], n["level"], n["title"], n["page_idx"])
+                for n in pdf_outline(payload)]
 
-    return df.select(url_col, html_col).mapInPandas(probe, schema)
+    return _map_payloads(df, [url_col, html_col], probe, schema, None)

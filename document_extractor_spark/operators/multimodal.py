@@ -6,21 +6,22 @@ Mirrors the reference's image handling (embedded-image extraction
 ``pdf_processor.py:407-508``, whitespace crop ``image_processor.py:20-120``,
 resize ``image_processor.py:162-226``) re-shaped for Spark: payloads never
 touch disk, rows carry ``(payload BINARY, media_type, width, height, …)``,
-and per-batch numpy does the pixel math.
+and per-payload numpy does the pixel math.
 
 The sandbox has no image/audio codecs (no Pillow/ffmpeg — SURVEY.md §7),
 so the DECODE step is stubbed: ``decode_image_stub`` understands only the
 engine's own deterministic fake "RAW1" frame format (magic + w + h + RGB
 bytes) and raises ``NotImplementedError`` for real codecs. Everything
-around the decode — schema, Arrow batch shape, ``mapInPandas`` fan-out,
-partitioning — is real and tested; swapping in a real codec touches one
-function.
+around the decode — schema, fan-out, partitioning — is real and tested;
+swapping in a real codec touches one function. Every kernel here is one
+per-payload function run by ``extract._map_payloads``, which owns the
+batch loop and turns a raising payload (NULL, truncated, unsupported
+codec) into one ``decode_error`` row instead of a task failure.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import _hamming_pairs
+from .extract import _map_payloads
 
 # Deterministic fake frame format: b"RAW1" + uint16 w + uint16 h + w*h*3 bytes
 _MAGIC = b"RAW1"
@@ -50,16 +52,29 @@ def encode_fake_image_white_border(w: int, h: int, border: int,
     return _MAGIC + struct.pack("<HH", w, h) + px.tobytes()
 
 
+def _raw1_size(payload: bytes) -> tuple[int, int]:
+    """(w, h) from a RAW1 header; ``ValueError`` unless the body is
+    exactly w*h*3 bytes."""
+    w, h = struct.unpack_from("<HH", payload, 4)
+    if len(payload) - 8 != w * h * 3:
+        raise ValueError(f"RAW1 header declares {w}x{h} ({w * h * 3} "
+                         f"bytes), body has {len(payload) - 8}")
+    return w, h
+
+
 def decode_image_stub(payload: bytes) -> np.ndarray:
     """STUB decode: only the deterministic RAW1 format is supported in
     this sandbox. Real deployments replace this one function with a
-    Pillow/libvips call — the Spark plumbing does not change."""
+    Pillow/libvips call — the Spark plumbing does not change. Raises
+    ``ValueError`` for a NULL payload or a truncated RAW1 body."""
+    if payload is None:
+        raise ValueError("null payload")
     if payload[:4] != _MAGIC:
         raise NotImplementedError(
             "real image codecs unavailable in sandbox; only RAW1 fakes decode"
         )
-    w, h = struct.unpack("<HH", payload[4:8])
-    return np.frombuffer(payload[8:], dtype=np.uint8).reshape(h, w, 3)
+    w, h = _raw1_size(payload)
+    return np.frombuffer(payload, dtype=np.uint8, offset=8).reshape(h, w, 3)
 
 
 def _encode(px: np.ndarray) -> bytes:
@@ -79,25 +94,19 @@ MEDIA_META_SCHEMA = T.StructType([
 
 def probe_media(df: DataFrame, payload_col: str = "payload",
                 url_col: str = "url") -> DataFrame:
-    """Typed metadata without decoding pixels — header-only probe."""
+    """Typed metadata without decoding pixels — header-only probe. A
+    RAW1 header whose body is not w*h*3 bytes gets a ``decode_error``."""
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                if p is None or len(p) < 8 or p[:4] != _MAGIC:
-                    recs.append((u, "unknown", None, None,
-                                 len(p) if p is not None else 0,
-                                 "UnsupportedCodec"))
-                else:
-                    w, h = struct.unpack("<HH", bytes(p[4:8]))
-                    recs.append((u, "image/raw1", w, h, len(p), None))
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "media_type", "width", "height",
-                               "n_bytes", "decode_error"])
+    def probe(url, payload) -> list:
+        if payload is None or len(payload) < 8 or payload[:4] != _MAGIC:
+            return [(url, "unknown", None, None,
+                     len(payload) if payload is not None else 0,
+                     "UnsupportedCodec")]
+        w, h = _raw1_size(payload)
+        return [(url, "image/raw1", w, h, len(payload), None)]
 
-    return df.select(url_col, payload_col).mapInPandas(
-        probe, schema=MEDIA_META_SCHEMA)
+    return _map_payloads(df, [url_col, payload_col], probe,
+                         MEDIA_META_SCHEMA, "decode_error")
 
 
 CROP_SCHEMA = T.StructType([
@@ -116,35 +125,24 @@ def whitespace_crop(df: DataFrame, payload_col: str = "payload",
     vectorized axis reductions (``is_white = all(RGB >= 240)``, row/col
     ``any``), pad, crop. Per-row errors isolate into ``decode_error``."""
 
-    def crop(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                try:
-                    px = decode_image_stub(bytes(p))
-                    nonwhite = ~np.all(px >= threshold, axis=2)
-                    rows = np.any(nonwhite, axis=1)
-                    cols = np.any(nonwhite, axis=0)
-                    if not rows.any():
-                        recs.append((u, bytes(p), px.shape[1], px.shape[0],
-                                     None))  # fully white → unchanged
-                        continue
-                    r0, r1 = np.argmax(rows), len(rows) - np.argmax(rows[::-1])
-                    c0, c1 = np.argmax(cols), len(cols) - np.argmax(cols[::-1])
-                    r0 = max(0, r0 - pad)
-                    c0 = max(0, c0 - pad)
-                    r1 = min(px.shape[0], r1 + pad)
-                    c1 = min(px.shape[1], c1 + pad)
-                    out = px[r0:r1, c0:c1]
-                    recs.append((u, _encode(out), out.shape[1], out.shape[0],
-                                 None))
-                except NotImplementedError as exc:
-                    recs.append((u, None, None, None, str(exc)))
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "payload", "width", "height",
-                               "decode_error"])
+    def crop(url, payload) -> list:
+        px = decode_image_stub(payload)
+        nonwhite = ~np.all(px >= threshold, axis=2)
+        rows = np.any(nonwhite, axis=1)
+        cols = np.any(nonwhite, axis=0)
+        if not rows.any():  # fully white → unchanged
+            return [(url, payload, px.shape[1], px.shape[0], None)]
+        r0, r1 = np.argmax(rows), len(rows) - np.argmax(rows[::-1])
+        c0, c1 = np.argmax(cols), len(cols) - np.argmax(cols[::-1])
+        r0 = max(0, r0 - pad)
+        c0 = max(0, c0 - pad)
+        r1 = min(px.shape[0], r1 + pad)
+        c1 = min(px.shape[1], c1 + pad)
+        out = px[r0:r1, c0:c1]
+        return [(url, _encode(out), out.shape[1], out.shape[0], None)]
 
-    return df.select(url_col, payload_col).mapInPandas(crop, schema=CROP_SCHEMA)
+    return _map_payloads(df, [url_col, payload_col], crop, CROP_SCHEMA,
+                         "decode_error")
 
 
 def resize_max_width(df: DataFrame, max_width: int = 1200,
@@ -154,27 +152,18 @@ def resize_max_width(df: DataFrame, max_width: int = 1200,
     nearest-neighbor sampling (deterministic stand-in for LANCZOS — the
     resampling kernel is codec territory, stubbed like decode)."""
 
-    def resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                try:
-                    px = decode_image_stub(bytes(p))
-                    h, w, _ = px.shape
-                    if w > max_width:
-                        nh = max(1, int(h * max_width / w))
-                        ys = (np.arange(nh) * h // nh)
-                        xs = (np.arange(max_width) * w // max_width)
-                        px = px[ys][:, xs]
-                    recs.append((u, _encode(px), px.shape[1], px.shape[0],
-                                 None))
-                except NotImplementedError as exc:
-                    recs.append((u, None, None, None, str(exc)))
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "payload", "width", "height",
-                               "decode_error"])
+    def resize(url, payload) -> list:
+        px = decode_image_stub(payload)
+        h, w, _ = px.shape
+        if w > max_width:
+            nh = max(1, int(h * max_width / w))
+            ys = (np.arange(nh) * h // nh)
+            xs = (np.arange(max_width) * w // max_width)
+            px = px[ys][:, xs]
+        return [(url, _encode(px), px.shape[1], px.shape[0], None)]
 
-    return df.select(url_col, payload_col).mapInPandas(resize, schema=CROP_SCHEMA)
+    return _map_payloads(df, [url_col, payload_col], resize, CROP_SCHEMA,
+                         "decode_error")
 
 
 FRAME_SCHEMA = T.StructType([
@@ -189,28 +178,29 @@ def sample_frames(df: DataFrame, every_n: int = 2,
                   url_col: str = "url") -> DataFrame:
     """Frame-sampling plumbing for video-like payloads: a concatenation of
     RAW1 frames → exploded (url, frame_idx, frame) rows — the row fan-out
-    shape (mapInPandas yielding more rows than it receives) that a real
-    ffmpeg-backed sampler would use."""
+    shape (more rows out than in) that a real ffmpeg-backed sampler
+    would use. Sampling stops at the first frame whose declared body runs
+    past the buffer (that frame is dropped); a NULL payload has no
+    frames."""
 
-    def frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                buf = bytes(p)
-                idx = 0
-                off = 0
-                while off + 8 <= len(buf) and buf[off:off + 4] == _MAGIC:
-                    w, h = struct.unpack("<HH", buf[off + 4:off + 8])
-                    end = off + 8 + w * h * 3
-                    if idx % every_n == 0:
-                        recs.append((u, idx, buf[off:end]))
-                    idx += 1
-                    off = end
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "frame_idx", "payload"])
+    def frames(url, payload) -> list:
+        buf = payload or b""
+        out = []
+        idx = 0
+        off = 0
+        while off + 8 <= len(buf) and buf[off:off + 4] == _MAGIC:
+            w, h = struct.unpack_from("<HH", buf, off + 4)
+            end = off + 8 + w * h * 3
+            if end > len(buf):
+                break
+            if idx % every_n == 0:
+                out.append((url, idx, buf[off:end]))
+            idx += 1
+            off = end
+        return out
 
-    return df.select(url_col, payload_col).mapInPandas(frames,
-                                                       schema=FRAME_SCHEMA)
+    return _map_payloads(df, [url_col, payload_col], frames, FRAME_SCHEMA,
+                         None)
 
 
 @F.pandas_udf(T.BinaryType())
@@ -238,32 +228,24 @@ def dhash64(df: DataFrame, payload_col: str = "payload",
     signed BIGINT. Per-row decode failures isolate into
     ``decode_error`` with a NULL hash — extraction totality."""
 
-    def hasher(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                try:
-                    px = decode_image_stub(bytes(p))
-                    h, w, _ = px.shape
-                    luma = px.astype(np.int64) @ np.array([299, 587, 114],
-                                                          dtype=np.int64)
-                    ys = np.arange(8) * h // 8
-                    xs = np.arange(9) * w // 9
-                    g = luma[ys][:, xs]                      # (8, 9)
-                    bits = (g[:, :-1] < g[:, 1:]).ravel()    # (64,)
-                    v = 0
-                    for bit in bits:                          # MSB-first
-                        v = (v << 1) | int(bit)
-                    if v >= 1 << 63:                          # wrap signed
-                        v -= 1 << 64
-                    recs.append((u, v, None))
-                except NotImplementedError as exc:
-                    recs.append((u, None, str(exc)))
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "dhash", "decode_error"])
+    def hasher(url, payload) -> list:
+        px = decode_image_stub(payload)
+        h, w, _ = px.shape
+        luma = px.astype(np.int64) @ np.array([299, 587, 114],
+                                              dtype=np.int64)
+        ys = np.arange(8) * h // 8
+        xs = np.arange(9) * w // 9
+        g = luma[ys][:, xs]                      # (8, 9)
+        bits = (g[:, :-1] < g[:, 1:]).ravel()    # (64,)
+        v = 0
+        for bit in bits:                          # MSB-first
+            v = (v << 1) | int(bit)
+        if v >= 1 << 63:                          # wrap signed
+            v -= 1 << 64
+        return [(url, v, None)]
 
-    return df.select(url_col, payload_col).mapInPandas(hasher,
-                                                       schema=DHASH_SCHEMA)
+    return _map_payloads(df, [url_col, payload_col], hasher, DHASH_SCHEMA,
+                         "decode_error")
 
 
 def image_near_dups(df: DataFrame, max_hamming: int = 3,
@@ -293,20 +275,13 @@ def image_features(df: DataFrame, payload_col: str = "payload",
         T.StructField("decode_error", T.StringType(), True),
     ])
 
-    def feats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                try:
-                    px = decode_image_stub(bytes(p)).astype(np.float64)
-                    mean_rgb = px.mean(axis=(0, 1)) / 255.0
-                    luma = px @ np.array([0.299, 0.587, 0.114])
-                    hist, _ = np.histogram(luma, bins=8, range=(0, 255))
-                    hist = hist / max(1, luma.size)
-                    recs.append((u, [*mean_rgb, *hist], None))
-                except NotImplementedError as exc:
-                    recs.append((u, None, str(exc)))
-            yield pd.DataFrame.from_records(
-                recs, columns=[url_col, "features", "decode_error"])
+    def feats(url, payload) -> list:
+        px = decode_image_stub(payload).astype(np.float64)
+        mean_rgb = px.mean(axis=(0, 1)) / 255.0
+        luma = px @ np.array([0.299, 0.587, 0.114])
+        hist, _ = np.histogram(luma, bins=8, range=(0, 255))
+        hist = hist / max(1, luma.size)
+        return [(url, [*mean_rgb, *hist], None)]
 
-    return df.select(url_col, payload_col).mapInPandas(feats, schema=schema)
+    return _map_payloads(df, [url_col, payload_col], feats, schema,
+                         "decode_error")

@@ -1,9 +1,18 @@
-"""Multimodal plumbing (stubbed decode, real Spark shape) + Structured
-Streaming jobs driven synchronously to completion."""
+"""Multimodal plumbing (stubbed decode, real Spark shape), the totality
+and plan shape of every per-document kernel on ``extract._map_payloads``,
+and Structured Streaming jobs driven synchronously to completion."""
+
+import struct
 
 import pytest
 from pyspark.sql import functions as F
 
+from document_extractor_spark.operators.blocks import block_profile
+from document_extractor_spark.operators.extract import extract_pages
+from document_extractor_spark.operators.media import (
+    pdf_metadata_probe,
+    pdf_outline_probe,
+)
 from document_extractor_spark.operators.multimodal import (
     decode_image_stub,
     dhash64,
@@ -16,6 +25,7 @@ from document_extractor_spark.operators.multimodal import (
     sample_frames,
     whitespace_crop,
 )
+from document_extractor_spark.sources.generator import build_pdf
 from document_extractor_spark.streaming.jobs import (
     run_stream_to_memory,
     stream_event_counts,
@@ -23,6 +33,15 @@ from document_extractor_spark.streaming.jobs import (
     stream_pages,
     stream_sessionize,
 )
+
+
+_GOOD_HTML = (b"<html><body><main><h1>Title</h1><p>A real paragraph with"
+              b" quite enough words to pass the block classifier.</p>"
+              b"</main></body></html>")
+_GOOD_PDF = build_pdf([[(72, 720, 12, ["page one"])]],
+                      info={"Title": "T"}, outlines=[("Intro", 0, [])])
+_TRUNC_RAW1 = b"RAW1" + struct.pack("<HH", 100, 100) + b"abc"
+_TRUNC_PDF = b"%PDF-1.4\n1 0 obj\n<< /Type /Cat"
 
 
 @pytest.fixture(scope="module")
@@ -45,6 +64,10 @@ def test_probe_media(spark, media):
 def test_decode_stub_raises_for_real_codecs():
     with pytest.raises(NotImplementedError):
         decode_image_stub(b"\x89PNG\r\n\x1a\n....")
+    with pytest.raises(ValueError, match="null payload"):
+        decode_image_stub(None)
+    with pytest.raises(ValueError, match="100x100"):
+        decode_image_stub(_TRUNC_RAW1)
 
 
 def test_whitespace_crop(spark, media):
@@ -80,6 +103,131 @@ def test_image_features(spark, media):
     feats = out["img://a"]["features"]
     assert len(feats) == 11  # 3 mean RGB + 8 histogram bins
     assert abs(sum(feats[3:]) - 1.0) < 1e-9  # histogram normalized
+
+
+# ---------------------------------------------------------------------------
+# Every per-document kernel on the one payload map (extract._map_payloads)
+# ---------------------------------------------------------------------------
+
+# name → (operator, payload column, good payload, truncated payload,
+#         error column, expected output for the NULL / empty / truncated
+#         rows: "error" = exactly one row with the error column set,
+#         "none" = no rows, "one" = exactly one row with no error)
+_KERNELS = {
+    "extract_pages": (extract_pages, "html", _GOOD_HTML, _TRUNC_PDF,
+                      "parse_error", ("error", "error", "error")),
+    # an empty page has no blocks; a cut PDF is text with one block
+    "block_profile": (block_profile, "html", _GOOD_HTML, _TRUNC_PDF,
+                      "parse_error", ("error", "none", "one")),
+    "pdf_metadata_probe": (pdf_metadata_probe, "html", _GOOD_PDF, _TRUNC_PDF,
+                           None, ("one", "one", "one")),
+    "pdf_outline_probe": (pdf_outline_probe, "html", _GOOD_PDF, _TRUNC_PDF,
+                          None, ("none", "none", "none")),
+    "probe_media": (probe_media, "payload", encode_fake_image(12, 9, seed=4),
+                    _TRUNC_RAW1, "decode_error", ("error", "error", "error")),
+    "whitespace_crop": (whitespace_crop, "payload",
+                        encode_fake_image_white_border(30, 30, 8, seed=5),
+                        _TRUNC_RAW1, "decode_error",
+                        ("error", "error", "error")),
+    "resize_max_width": (resize_max_width, "payload",
+                         encode_fake_image(1300, 2, seed=6), _TRUNC_RAW1,
+                         "decode_error", ("error", "error", "error")),
+    "sample_frames": (sample_frames, "payload",
+                      b"".join(encode_fake_image(4, 4, seed=s)
+                               for s in range(3)),
+                      _TRUNC_RAW1, None, ("none", "none", "none")),
+    "dhash64": (dhash64, "payload", encode_fake_image(16, 16, seed=8),
+                _TRUNC_RAW1, "decode_error", ("error", "error", "error")),
+    "image_features": (image_features, "payload",
+                       encode_fake_image(10, 10, seed=9), _TRUNC_RAW1,
+                       "decode_error", ("error", "error", "error")),
+}
+
+
+def _by_url(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["url"], []).append(r)
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_KERNELS))
+def test_kernel_total_on_hostile_payloads(spark, name):
+    """One good row next to a NULL, an empty and a truncated payload:
+    no task fails, the good row's output equals its output alone, and
+    each bad row gets the kernel's error row (or no rows)."""
+    op, col, good, trunc, error_col, expect = _KERNELS[name]
+    schema = f"url string, {col} binary"
+    bad = {"bad://null": None, "bad://empty": b"", "bad://trunc": trunc}
+    alone = _by_url(op(spark.createDataFrame([("ok://1", good)], schema)))
+    got = _by_url(op(spark.createDataFrame(
+        [("ok://1", good), *bad.items()], schema).coalesce(1)))
+    assert alone["ok://1"]
+    assert got.get("ok://1") == alone["ok://1"]
+    for url, want in zip(bad, expect):
+        rows = got.get(url, [])
+        if want == "none":
+            assert rows == [], url
+            continue
+        assert len(rows) == 1, url
+        if error_col is not None:
+            assert (rows[0][error_col] is not None) == (want == "error"), url
+
+
+def test_map_payloads_error_row_shape(spark):
+    """A raising payload becomes one row: its key, the exception as
+    ``"<ExcType>: <message>"`` and NULL in every other field."""
+    df = spark.createDataFrame(
+        [("bad://trunc", _TRUNC_RAW1), ("bad://null", None)],
+        "url string, payload binary")
+    got = {r["url"]: r.asDict() for r in dhash64(df).collect()}
+    assert got["bad://null"] == {"url": "bad://null", "dhash": None,
+                                 "decode_error": "ValueError: null payload"}
+    err = got["bad://trunc"]["decode_error"]
+    assert err.startswith("ValueError: ") and "100x100" in err
+
+
+def test_sample_frames_drops_truncated_tail(spark):
+    first = encode_fake_image(4, 4, seed=7)
+    df = spark.createDataFrame([("vid://x", first + _TRUNC_RAW1)],
+                               "url string, payload binary")
+    got = [(r["frame_idx"], bytes(r["payload"]))
+           for r in sample_frames(df, every_n=1).collect()]
+    assert got == [(0, first)]
+
+
+@pytest.fixture(scope="module")
+def kernel_scan(spark, tmp_path_factory):
+    """A parquet scan with more columns than any kernel reads."""
+    d = str(tmp_path_factory.mktemp("kernel_scan") / "pages")
+    spark.createDataFrame(
+        [("u", _GOOD_HTML, encode_fake_image(4, 4), "en", "body text")],
+        "url string, html binary, payload binary, lang string, text string",
+    ).write.parquet(d)
+    return spark.read.parquet(d)
+
+
+@pytest.mark.parametrize("name", sorted(_KERNELS))
+def test_kernel_plans_one_map_and_prunes_scan(kernel_scan, name):
+    """Each kernel plans as exactly one MapInPandas over the scan, with no
+    Exchange, and the scan reads only the columns the kernel needs."""
+    import re
+
+    from document_extractor_spark.plans import (
+        assert_vectorized_python_only,
+        physical_plan,
+        scan_read_schema,
+    )
+
+    op, col = _KERNELS[name][:2]
+    out = op(kernel_scan)
+    plan = physical_plan(out)
+    assert_vectorized_python_only(out)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
+    read = set(re.findall(r"(\w+):", scan_read_schema(out)))
+    want = {"url", col} | ({"lang"} if name == "extract_pages" else set())
+    assert read == want, scan_read_schema(out)
 
 
 # ---------------------------------------------------------------------------
@@ -244,12 +392,17 @@ def test_dhash_gradient_extremes(spark):
 
 
 def test_dhash_decode_error_isolates(spark):
+    """The error row shares a batch with the good one: its NULL hash must
+    not round the good hash through float64."""
+    ok = encode_fake_image(16, 16, seed=3)
+    alone = dhash64(spark.createDataFrame(
+        [("img://ok", ok)], "url string, payload binary")).head()["dhash"]
     df = spark.createDataFrame(
-        [("img://ok", encode_fake_image(16, 16, seed=3)),
+        [("img://ok", ok),
          ("img://bad", b"\x89PNG....not-supported")],
-        "url string, payload binary")
+        "url string, payload binary").coalesce(1)
     got = {r["url"]: r for r in dhash64(df).collect()}
-    assert got["img://ok"]["dhash"] is not None
+    assert got["img://ok"]["dhash"] == alone
     assert got["img://ok"]["decode_error"] is None
     assert got["img://bad"]["dhash"] is None
     assert "RAW1" in got["img://bad"]["decode_error"]
@@ -263,7 +416,8 @@ def test_image_near_dups_clones_only(spark):
         [(f"img://a{i}", encode_fake_image(16, 16, seed=7)) for i in range(3)]
         + [("img://x", encode_fake_image(16, 16, seed=8)),
            ("img://y", encode_fake_image(16, 16, seed=9)),
-           ("img://junk", b"GIF89a not supported")]
+           ("img://junk", b"GIF89a not supported"),
+           ("img://null", None), ("img://trunc", _TRUNC_RAW1)]
     )
     df = spark.createDataFrame(rows, "url string, payload binary")
     pairs = {(r["url_a"], r["url_b"]): r["hamming"]
