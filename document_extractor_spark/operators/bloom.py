@@ -16,11 +16,12 @@ has NO false negatives, so it splits an incoming crawl batch into:
   index.
 
 The final result is therefore EXACTLY ``drop_known_duplicates``'s (the
-bloom is a pre-filter, never the verdict). Build shape mirrors the KMV
-sketch (``sketch.py``): partition-local numpy bitmaps (mapInPandas, one
-~bits/8-byte row per partition), OR-merged — the merge is a semilattice
-(commutative/associative/idempotent), so the result is
-partitioning-invariant — then shipped to the probe as a closure.
+bloom is a pre-filter, never the verdict). The build is Spark built-ins
+only: probe positions as column expressions, set into 32768-bit buckets
+by the ``bitmap_construct_agg`` aggregate (an OR — commutative,
+associative, idempotent — so the bytes are partitioning-invariant and
+no task merges the whole bitmap), then shipped to the probe as a
+closure.
 ``num_bits`` is the executor/driver memory bound: 2^30 bits = 128 MiB
 handles ~10^8 keys at 1% fpp; past ~10^10 keys the bitmap itself stops
 fitting and the plain anti-join (or a per-index-partition bloom) is the
@@ -36,7 +37,6 @@ and runs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,50 +52,35 @@ def _probe_positions(hex_fps, num_bits: int) -> np.ndarray:
     return words.astype(np.int64) % num_bits
 
 
+_BUCKET_BITS = 15   # bitmap_construct_agg's fixed 32768-bit (4 KiB) bitmap
+
+
 def build_fingerprint_bloom(known: DataFrame,
                             fingerprint_col: str = "fingerprint",
                             num_bits: int = 1 << 23) -> tuple:
     """Known-fingerprint index → ``(bitmap_bytes, n_keys)``
     (little-endian bit order within each byte; n_keys counts non-null
-    fingerprints, riding the same pass as the build). Distributed:
-    one bitmap per partition, OR-merged in a single final task, ONE
-    row collected."""
+    fingerprints). JVM-side: each key's four ``_probe_positions`` as
+    column expressions, one ``bitmap_construct_agg`` row per 32768-bit
+    bucket, and the buckets laid end to end on the driver."""
     if num_bits % 8 != 0 or num_bits <= 0:
         raise ValueError("num_bits must be a positive multiple of 8")
-    nbytes = num_bits // 8
-
-    def partial(batches):
-        bitmap = np.zeros(nbytes, dtype=np.uint8)
-        n = 0
-        for pdf in batches:
-            fps = pdf[fingerprint_col].dropna()
-            if len(fps) == 0:
-                continue
-            n += len(fps)
-            pos = _probe_positions(fps.to_numpy(), num_bits).ravel()
-            np.bitwise_or.at(bitmap, pos >> 3,
-                             (1 << (pos & 7)).astype(np.uint8))
-        if n:
-            yield pd.DataFrame({"bm": [bitmap.tobytes()], "n": [n]})
-
-    def merge(batches):
-        bitmap = np.zeros(nbytes, dtype=np.uint8)
-        n = 0
-        for pdf in batches:
-            for bm, pn in zip(pdf["bm"], pdf["n"]):
-                bitmap |= np.frombuffer(bm, dtype=np.uint8)
-                n += int(pn)
-        yield pd.DataFrame({"bm": [bitmap.tobytes()], "n": [n]})
-
-    partials = (
-        known.select(fingerprint_col)
-        .mapInPandas(partial, "bm binary, n long")
-    )
-    rows = (partials.repartition(1)
-            .mapInPandas(merge, "bm binary, n long").collect())
-    if not rows:
-        return bytes(nbytes), 0
-    return bytes(rows[0]["bm"]), int(rows[0]["n"])
+    fp = F.col(fingerprint_col)
+    pos = known.where(fp.isNotNull()).select(F.explode(F.array(*(
+        F.pmod(F.conv(F.substring(fp, 1 + 8 * w, 8), 16, 10)
+               .cast("bigint"), F.lit(num_bits))
+        for w in range(4)))).alias("p"))
+    offset = F.col("p").bitwiseAND((1 << _BUCKET_BITS) - 1)
+    buckets = pos.groupBy(F.shiftright("p", _BUCKET_BITS).alias("b")).agg(
+        F.bitmap_construct_agg(offset).alias("bm"), F.count("*").alias("n"))
+    bitmap = bytearray(num_bits // 8)
+    n_positions = 0
+    for b, bm, n in buckets.collect():
+        start = b << (_BUCKET_BITS - 3)
+        chunk = bytes(bm)[:len(bitmap) - start]
+        bitmap[start:start + len(chunk)] = chunk
+        n_positions += n
+    return bytes(bitmap), n_positions // 4
 
 
 def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
@@ -109,11 +94,11 @@ def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
     exactly re-checked), but only bit-HIT rows pay the index anti-join.
     The in-batch min-id dedup still sees every row — same contract.
 
-    The index side builds the bitmap (two jobs, one collected row);
-    the batch side is a vectorized Arrow probe (4 bit tests/row)
-    against the closure-captured bitmap — Spark serializes it into the
-    task binary once per executor, the same distribution path a
-    broadcast variable takes.
+    The index side builds the bitmap (one aggregate, ≤ num_bits/32768
+    collected bucket rows); the batch side is a vectorized Arrow probe
+    (4 bit tests/row) against the closure-captured bitmap — Spark
+    serializes it into the task binary once per executor, the same
+    distribution path a broadcast variable takes.
 
     An UNDERSIZED bitmap silently saturates — every row becomes a
     candidate and the pre-filter buys nothing while still paying the

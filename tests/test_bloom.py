@@ -11,6 +11,7 @@ from document_extractor_spark.operators.bloom import (
     drop_known_duplicates_bloom,
 )
 from document_extractor_spark.operators.dedup import drop_known_duplicates
+from document_extractor_spark.plans import physical_plan
 
 
 def _corpus(spark, n=200):
@@ -37,14 +38,28 @@ def test_bloom_dedup_identical_to_exact(spark):
     assert bloom == exact and len(bloom) == 100
 
 
-def test_bloom_build_partitioning_invariant(spark):
+def test_bloom_build_partitioning_invariant(spark, monkeypatch):
     """The bitmap OR-merge is a semilattice: identical bytes (and key
     count) whatever the index partitioning — same invariance bar as the
-    KMV sketch."""
+    KMV sketch. The build runs JVM-side: no Python node and no
+    single-partition exchange in any plan it collects from a
+    many-partition index."""
     known = _corpus(spark).select(fingerprint("text").alias("fingerprint"))
     one = build_fingerprint_bloom(known.repartition(1))
+    plans = []
+    collect = type(known).collect
+
+    def spy(df):
+        plans.append(physical_plan(df))
+        return collect(df)
+
+    monkeypatch.setattr(type(known), "collect", spy)
     many = build_fingerprint_bloom(known.repartition(16))
     assert one == many and one[1] == 200
+    assert plans
+    for plan in plans:
+        assert "Python" not in plan and "MapInPandas" not in plan, plan
+        assert "SinglePartition" not in plan, plan
 
 
 def test_bloom_no_false_negatives_and_fpp_sane(spark):

@@ -359,10 +359,30 @@ def test_is_catalog_table_routing():
 # ---------------------------------------------------------------------------
 
 
+def _corrupt_middle_member(build, recs):
+    """One gzip member per record, the middle member's deflate stream
+    overwritten (header and trailer kept) — zlib raises on inflate."""
+    members = [build([r]) for r in recs]
+    m = members[1]
+    members[1] = m[:10] + b"\xff" * (len(m) - 18) + m[-8:]
+    return b"".join(members)
+
+
+def _negative_length_middle(build, recs):
+    """Plain records, the middle one framed with ``Content-Length: -1``."""
+    import re
+
+    plain = [build([r], per_record_gzip=False) for r in recs]
+    plain[1] = re.sub(rb"Content-Length: \d+", b"Content-Length: -1",
+                      plain[1], count=1)
+    return b"".join(plain)
+
+
 def test_warc_roundtrip_unit():
     """Pure parser: per-record-gzip and plain WARCs round-trip; hostile
-    bytes (truncated, garbage, non-response records) yield no rows and
-    no exception."""
+    bytes (truncated, garbage, non-response records, a corrupt gzip
+    member, a negative Content-Length) keep the records before the
+    damage and never raise."""
     from document_extractor_spark.sources.warc import (
         build_warc,
         iter_warc_pages,
@@ -384,6 +404,11 @@ def test_warc_roundtrip_unit():
     req = (b"WARC/1.0\r\nWARC-Type: request\r\n"
            b"WARC-Target-URI: u\r\nContent-Length: 2\r\n\r\nhi\r\n\r\n")
     assert list(iter_warc_pages(req)) == []
+    three = recs + [("https://c.example/z", "2026-03-06T00:00:00Z", b"z")]
+    for hostile in (_corrupt_middle_member(build_warc, three),
+                    _negative_length_middle(build_warc, three)):
+        got = list(iter_warc_pages(hostile))
+        assert [(g[0], g[2]) for g in got] == [(recs[0][0], recs[0][2])]
 
 
 def test_warc_ingest_to_extract_end_to_end(spark, tmp_path):
@@ -537,7 +562,11 @@ def test_table_partition_values_other_partition_column(spark, tmp_path):
 def test_wet_roundtrip_unit():
     """WET conversion records round-trip in both wire shapes; the
     warcinfo record and hostile bytes yield no rows; non-UTF-8 body
-    bytes are replaced, never raised."""
+    bytes are replaced, never raised; a corrupt gzip member or a
+    negative Content-Length ends the archive after the records before
+    it."""
+    from functools import partial
+
     from document_extractor_spark.sources.warc import (
         build_wet,
         iter_wet_docs,
@@ -562,6 +591,97 @@ def test_wet_roundtrip_unit():
            b"Content-Length: 3\r\n\r\n\xff\xfeA\r\n\r\n")
     got = list(iter_wet_docs(bad))
     assert len(got) == 1 and got[0][2].endswith("A")
+    one = partial(build_wet, with_warcinfo=False)
+    three = recs + [("https://c.example/z", "2026-03-06T00:00:00Z", "z")]
+    for hostile in (_corrupt_middle_member(one, three),
+                    _negative_length_middle(one, three)):
+        got = list(iter_wet_docs(hostile))
+        assert [(g[0], g[2]) for g in got] == [(recs[0][0], recs[0][2])]
+
+
+def test_warc_fractional_second_dates(spark, tmp_path):
+    """WARC/1.1 allows a fraction of seconds in WARC-Date: such a record
+    keeps its row (and its sub-second timestamp) through
+    ``warc_to_pages_table``; malformed dates still parse to NULL."""
+    from document_extractor_spark.sources.warc import (
+        _warc_ts,
+        build_warc,
+        warc_to_pages_table,
+    )
+
+    (tmp_path / "w").mkdir()
+    (tmp_path / "w" / "seg.warc").write_bytes(build_warc([
+        ("https://f.example/frac", "2024-01-01T00:00:00.25Z", b"<p>a</p>"),
+        ("https://f.example/whole", "2024-01-02T00:00:00Z", b"<p>b</p>"),
+    ], per_record_gzip=False))
+    table = str(tmp_path / "pages")
+    warc_to_pages_table(spark, str(tmp_path / "w"), table)
+    got = sorted(spark.read.parquet(table)
+                 .select("url", F.unix_micros("warc_ts"),
+                         F.col("warc_day").cast("string"))
+                 .collect())
+    assert [tuple(r) for r in got] == [
+        ("https://f.example/frac", 1704067200250000, "2024-01-01"),
+        ("https://f.example/whole", 1704153600000000, "2024-01-02"),
+    ]
+    assert _warc_ts({"warc-date": "2024-01-01T00:00:00.123456789Z"}) \
+        .microsecond == 123456
+    for bad in ("2024-01-01T00:00:00.Z", "2024-01-01T00:00:00.5",
+                "2024-01-01T00:00:00.5+01:00", "2024-01-01 00:00:00Z"):
+        assert _warc_ts({"warc-date": bad}) is None, bad
+
+
+def _archive_kind(kind):
+    """(builder, reader, file suffix, record i, row → comparable,
+    record → comparable) for one Common Crawl archive kind."""
+    from functools import partial
+
+    from document_extractor_spark.sources import warc
+
+    ts = "2026-03-04T12:00:00Z"
+    if kind == "warc":
+        return (warc.build_warc, warc.read_warc_pages, ".warc",
+                lambda u: (u, ts, f"<p>{u}</p>".encode()),
+                lambda r: (r.url, r.warc_day, bytes(r.html)),
+                lambda rec: (rec[0], ts[:10], rec[2]))
+    if kind == "wet":
+        return (partial(warc.build_wet, with_warcinfo=False),
+                warc.read_wet_docs, ".warc.wet",
+                lambda u: (u, ts, f"text of {u} é"),
+                lambda r: (r.url, r.warc_day, r.text),
+                lambda rec: (rec[0], ts[:10], rec[2]))
+    return (warc.build_wat, warc.read_wat_meta, ".warc.wat",
+            lambda u: (u, ts, f"title {u}", [u + "/out"]),
+            lambda r: (r.url, r.warc_day, r.title, list(r.link_urls)),
+            lambda rec: (rec[0], ts[:10], rec[2], rec[3]))
+
+
+@pytest.mark.parametrize("kind", ["warc", "wet", "wat"])
+def test_archive_reader_total_on_hostile_archives(spark, tmp_path, kind):
+    """A good archive next to one with a corrupt middle gzip member and
+    one with a negative Content-Length: the job finishes, every good
+    record comes back unchanged, each hostile archive keeps the record
+    before the damage, and the reader plans as one MapInPandas with no
+    Exchange."""
+    from document_extractor_spark.plans import physical_plan
+
+    build, read, suffix, make, row_key, rec_key = _archive_kind(kind)
+
+    def recs(name):
+        return [make(f"https://{name}.example/{i}") for i in range(3)]
+
+    (tmp_path / f"good{suffix}.gz").write_bytes(build(recs("good")))
+    (tmp_path / f"corrupt{suffix}.gz").write_bytes(
+        _corrupt_middle_member(build, recs("corrupt")))
+    (tmp_path / f"negative{suffix}").write_bytes(
+        _negative_length_middle(build, recs("negative")))
+    df = read(spark, str(tmp_path))
+    plan = physical_plan(df)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
+    expected = recs("good") + recs("corrupt")[:1] + recs("negative")[:1]
+    assert sorted(map(row_key, df.collect())) == \
+        sorted(map(rec_key, expected))
 
 
 def test_wet_ingest_spark(spark, tmp_path):
