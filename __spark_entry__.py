@@ -536,6 +536,7 @@ def _augmented_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Exact all-pairs 3-shingle Jaccard over the planted clones: the
 # ngram_jaccard answer, and the verified pair set of minhash_near_dups.
+# Token-less texts get no shingles (dedup._shingled's \S test).
 _JACCARD_SQL = r"""
     WITH aug AS (
       SELECT doc_id, text FROM documents WHERE doc_id < 120
@@ -548,7 +549,7 @@ _JACCARD_SQL = r"""
           range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '\s+')) - 2, 1) + 1),
           i -> array_to_string((regexp_split_to_array(lower(trim(text)), '\s+'))[i:i+2], ' ')
         )) AS s
-      FROM aug),
+      FROM aug WHERE regexp_matches(text, '\S')),
     ex AS (SELECT id, len(s) AS n_sh, unnest(s) AS tok FROM sh),
     common AS (
       SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b,

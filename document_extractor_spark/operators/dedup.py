@@ -100,11 +100,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 
     explode → self-join on shingle → count common → Jaccard. The
     shingle join is the shuffle; at scale run AFTER MinHash has cut
-    candidates (this operator doubles as the verifier)."""
-    # staged shingling (shingles_df): hostile 100k-token docs stay
-    # O(n), not O(n²) — see functions/text.py HOF re-evaluation notes
+    candidates (this operator doubles as the verifier). Token-less
+    documents get no shingle rows (see :func:`_shingled`), so they
+    pair with nothing."""
     sh = (
-        shingles_df(df, text_col, n)
+        _shingled(df, id_col, text_col, n)
         .select(F.col(id_col).alias("id"), "sh")
         .withColumn("n_sh", F.size("sh"))
     )

@@ -14,6 +14,14 @@ groupBy on (src_host, dst_host) — a metadata-scale shuffle (hosts, not
 pages). At 100 TB the anchor regex runs inside whole-stage codegen over
 the scan, and the only shuffled payload is (host, host, 1) rows.
 
+The three host rankers (``pagerank``, ``trustrank``, ``hits``) share
+one edge and vertex prep, ``_rank_graph``: only an edge with both
+endpoints and a positive, finite weight carries rank, and a host whose
+edges all carry none stays a dangling vertex. They share one round
+loop, ``_power_iterate`` (per-round ``localCheckpoint``, L1-delta
+early exit, ``stats``). PageRank is TrustRank with every host a seed;
+both run ``_teleport_rank``.
+
 Deliberate simplifications, mirrored exactly in the DuckDB oracle:
 - anchors with nested markup are skipped (``[^<]`` body — boilerplate
   chrome links, the bulk of the web graph's edges, are plain text);
@@ -84,6 +92,135 @@ def extract_outlinks(pages: DataFrame, url_col: str = "url",
     )
 
 
+def _rank_graph(edges: DataFrame, src: str, dst: str, weight: str):
+    """The one edge and vertex prep of the rankers → ``(edges, verts)``.
+
+    Rows with a NULL endpoint (unresolvable links) are not part of the
+    graph: kept, they would send their share of rank to a NULL sink.
+    ``verts`` is ``(host)``, every endpoint of the other rows,
+    checkpointed (every round joins it). ``edges`` is ``(_src, _dst,
+    _w DOUBLE)``, the rows whose weight is positive and finite. Any
+    other weight carries no rank: a NULL one would keep its source out
+    of the dangling set while passing nothing on (rank leaks), a zero
+    or negative one makes an out-weight zero (a division by zero) or a
+    score negative. A host whose edges all drop stays a vertex, and
+    dangles."""
+    edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+    verts = (
+        edges.select(F.col(src).alias("host"))
+        .unionByName(edges.select(F.col(dst).alias("host")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    w = F.col("_w")
+    e = (
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"),
+                     F.col(weight).cast("double").alias("_w"))
+        .where((w > 0) & (w < float("inf")))   # NaN sorts above +inf
+    )
+    return e, verts
+
+
+def _power_iterate(scores: DataFrame, step, col: str, iterations: int,
+                   tol: float, stats: dict) -> DataFrame:
+    """The one round loop of the rankers: ``scores`` (host, ``col``)
+    becomes ``step(scores)`` each round, ``localCheckpoint``ed so the
+    lineage stays one round deep (the iterative-plan re-execution trap,
+    same as ``duplicate_clusters``). ``iterations`` is the hard cap;
+    the loop exits EARLY when the L1 delta of ``col`` between
+    consecutive rounds drops below ``tol`` — one extra host-scale
+    aggregate per round, over the two checkpointed frames (regular
+    graphs converge in one round and pay for one instead of
+    ``iterations``). ``tol=0`` skips that job entirely. When a
+    ``stats`` dict is passed, the executed round count and final delta
+    are recorded in it (run observability, mirroring
+    ``duplicate_clusters``' counters)."""
+    if stats is None:
+        stats = {}
+    stats["iterations"] = 0
+    stats["l1_delta"] = None
+    for _ in range(iterations):
+        stats["iterations"] += 1
+        prev, scores = scores, step(scores).localCheckpoint(eager=True)
+        if tol > 0:
+            delta = (
+                scores.join(prev.withColumnRenamed(col, "_prev"), "host")
+                .agg(F.coalesce(
+                    F.sum(F.abs(F.col(col) - F.col("_prev"))),
+                    F.lit(0.0)))
+                .collect()[0][0]
+            )
+            stats["l1_delta"] = delta
+            if delta < tol:
+                break
+    return scores
+
+
+def _teleport_rank(e: DataFrame, verts: DataFrame, n_seeds: int,
+                   damping: float, iterations: int, tol: float,
+                   stats: dict) -> DataFrame:
+    """Personalized PageRank over :func:`_rank_graph` output whose
+    ``verts`` carry a boolean ``_seed`` flag → ``(host, pr)``, summing
+    to 1. Rank starts uniform over the ``n_seeds`` seeds; each round
+    the teleport share (1-d)/|S| and the damped dangling mass land on
+    the seeds only.
+
+    The transition table (edge weight / source out-weight) is built
+    ONCE and persisted pre-partitioned on the source key, so each round
+    costs one co-partitioned join (only the rank table — host
+    cardinality, not page cardinality — reshuffles) plus one
+    map-side-combined groupBy on the destination. Dangling mass is a
+    1-row aggregate collected on the driver — metadata-scale, like the
+    convergence counters in ``duplicate_clusters``."""
+    out_w = e.groupBy(F.col("_src").alias("host")).agg(
+        F.sum("_w").alias("_out"))
+    trans = (
+        e.join(out_w, e._src == out_w.host)
+        .select("_src", "_dst", (F.col("_w") / F.col("_out")).alias("_p"))
+        .repartition("_src")
+        .persist()
+    )
+    dangling = verts.join(out_w, "host", "left_anti").persist()
+    # Graphs where every vertex has outlinks (most host graphs) skip
+    # the per-round dangling-mass job entirely — it would collect a
+    # constant 0.0 while serializing ahead of the real contribs job.
+    has_dangling = bool(dangling.head(1))
+    seed = F.col("_seed")
+
+    def step(ranks):
+        d_mass = 0.0
+        if has_dangling:
+            d_mass = (
+                dangling.join(ranks, "host")
+                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
+                .collect()[0][0]
+            )
+        contribs = (
+            ranks.join(trans, ranks.host == trans._src)
+            .groupBy(F.col("_dst").alias("host"))
+            .agg(F.sum(F.col("pr") * F.col("_p")).alias("_in"))
+        )
+        return verts.join(contribs, "host", "left").select(
+            "host",
+            (F.when(seed, F.lit((1.0 - damping) / n_seeds))
+             .otherwise(F.lit(0.0))
+             + damping * (
+                 F.coalesce(F.col("_in"), F.lit(0.0))
+                 + F.when(seed, F.lit(d_mass / n_seeds))
+                 .otherwise(F.lit(0.0))
+             )).alias("pr"),
+        )
+
+    ranks = verts.select(
+        "host",
+        F.when(seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("pr"))
+    try:
+        return _power_iterate(ranks, step, "pr", iterations, tol, stats)
+    finally:
+        trans.unpersist()
+        dangling.unpersist()
+
+
 def pagerank(edges: DataFrame, damping: float = 0.85,
              iterations: int = 10, src_col: str = "src_host",
              dst_col: str = "dst_host",
@@ -95,105 +232,19 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     Gopher-style per-document scores). Returns ``(host, pagerank)`` for
     every vertex; ranks sum to 1.
 
-    Power iteration, the scale-correct DataFrame shape: the transition
-    table (edge weight / source out-weight) is computed ONCE and
-    persisted pre-partitioned on the source key, so each round costs one
-    co-partitioned join (only the rank table — host cardinality, not
-    page cardinality — reshuffles) plus one map-side-combined groupBy on
-    the destination. ``localCheckpoint`` per round truncates the lineage
-    (the iterative-plan re-execution trap, same as
-    ``duplicate_clusters``). Dangling mass (vertices with no outlinks)
-    is redistributed uniformly each round via a 1-row aggregate
-    collected on the driver — metadata-scale, like the convergence
-    counters in ``duplicate_clusters``.
-
-    ``iterations`` is the hard cap; the loop exits EARLY when the L1
-    rank delta between consecutive rounds drops below ``tol`` — one
-    extra host-scale aggregate per round, reusing the two frames the
-    round already checkpointed (regular graphs converge in one round
-    and pay for one instead of ``iterations``). ``tol=0`` disables the
-    check (and its per-round job) entirely. When a ``stats`` dict is
-    passed, the executed round count and final delta are recorded in it
-    (run observability, mirroring ``duplicate_clusters``' counters).
-    """
-    src, dst, w = F.col(src_col), F.col(dst_col), F.col(weight_col)
-    # Unresolvable links (null src/dst) are excluded from the graph
-    # entirely — keeping them in the out-weights would leak their share
-    # of each source's rank mass to a NULL sink and break sum(pr) == 1.
-    edges = edges.where(src.isNotNull() & dst.isNotNull())
-    verts = (
-        edges.select(src.alias("host"))
-        .unionByName(edges.select(dst.alias("host")))
-        .where(F.col("host").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    PageRank is :func:`trustrank` with every vertex a seed: uniform
+    teleport, dangling mass redistributed uniformly. It runs the same
+    :func:`_teleport_rank` power iteration, so the scale shape, the
+    ``tol`` early exit (``tol=0`` runs every round) and the ``stats``
+    counters are those of :func:`_power_iterate`. Edges with a NULL
+    endpoint or a NULL, zero, negative or non-finite weight carry no
+    rank (see :func:`_rank_graph`)."""
+    e, verts = _rank_graph(edges, src_col, dst_col, weight_col)
     n = verts.count()
     if n == 0:
         return verts.withColumn("pagerank", F.lit(0.0))
-    out_w = edges.groupBy(src.alias("host")).agg(F.sum(w).alias("_out"))
-    trans = (
-        edges.join(out_w, edges[src_col] == out_w.host)
-        .select(
-            src.alias("_src"), dst.alias("_dst"),
-            (w.cast("double") / F.col("_out")).alias("_p"),
-        )
-        .repartition("_src")
-        .persist()
-    )
-    dangling = verts.join(out_w, "host", "left_anti").persist()
-    # Graphs where every vertex has outlinks (most host graphs) skip
-    # the per-round dangling-mass job entirely — it would collect a
-    # constant 0.0 while serializing ahead of the real contribs job.
-    has_dangling = bool(dangling.head(1))
-    ranks = verts.withColumn("pr", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    if stats is None:
-        stats = {}
-    stats["iterations"] = 0
-    stats["l1_delta"] = None
-    try:
-        for _ in range(iterations):
-            stats["iterations"] += 1
-            d_mass = 0.0
-            if has_dangling:
-                d_mass = (
-                    dangling.join(ranks, "host")
-                    .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                    .collect()[0][0]
-                )
-            contribs = (
-                ranks.join(trans, ranks.host == trans._src)
-                .groupBy(F.col("_dst").alias("host"))
-                .agg(F.sum(F.col("pr") * F.col("_p")).alias("_in"))
-            )
-            prev = ranks
-            ranks = (
-                verts.join(contribs, "host", "left")
-                .select(
-                    "host",
-                    (F.lit(base) + damping * (
-                        F.coalesce(F.col("_in"), F.lit(0.0))
-                        + F.lit(d_mass / n)
-                    )).alias("pr"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if tol > 0:
-                delta = (
-                    ranks.join(prev.withColumnRenamed("pr", "_prev"),
-                               "host")
-                    .agg(F.coalesce(
-                        F.sum(F.abs(F.col("pr") - F.col("_prev"))),
-                        F.lit(0.0)))
-                    .collect()[0][0]
-                )
-                stats["l1_delta"] = delta
-                if delta < tol:
-                    break
-    finally:
-        trans.unpersist()
-        dangling.unpersist()
+    ranks = _teleport_rank(e, verts.withColumn("_seed", F.lit(True)), n,
+                           damping, iterations, tol, stats)
     return ranks.select("host", F.col("pr").alias("pagerank"))
 
 
@@ -210,78 +261,53 @@ def hits(edges: DataFrame, iterations: int = 30,
     Returns ``(host, hub, authority)`` for every vertex; each score
     vector is L1-normalized (sums to 1 — L1 instead of the textbook L2
     so a regular fixture's fixed point stays exactly rational and the
-    oracle can state it in closed form).
+    oracle can state it in closed form). Only positive weights count
+    (see :func:`_rank_graph`), so every score is ≥ 0.
 
-    Same scale shape as ``pagerank``: the edge table is persisted TWICE,
-    pre-partitioned on each join key (``_src`` for the authority step,
-    ``_dst`` for the hub step), so every round is two co-partitioned
-    joins + map-side-combined groupBys on host-scale keys;
-    ``localCheckpoint`` truncates lineage per round; the normalizers
-    are 1-row driver aggregates (metadata budget, like pagerank's
-    dangling mass).  Early exit when the hub L1 delta drops below
-    ``tol``."""
-    src, dst, w = F.col(src_col), F.col(dst_col), F.col(weight_col)
-    edges = edges.where(src.isNotNull() & dst.isNotNull())
-    verts = (
-        edges.select(src.alias("host"))
-        .unionByName(edges.select(dst.alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    The edge table is persisted TWICE, pre-partitioned on each join key
+    (``_src`` for the authority step, ``_dst`` for the hub step), so
+    every round is two co-partitioned joins + map-side-combined
+    groupBys on host-scale keys; the normalizers are 1-row driver
+    aggregates. The rounds run in :func:`_power_iterate` on the hub
+    vector (early exit on its L1 delta); each round's authority vector
+    is checkpointed beside it, never joined into the loop state."""
+    e, verts = _rank_graph(edges, src_col, dst_col, weight_col)
     n = verts.count()
     if n == 0:
         return verts.select(
             "host", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority"))
-    e = edges.select(src.alias("_src"), dst.alias("_dst"),
-                     w.cast("double").alias("_w"))
     e_by_src = e.repartition("_src").persist()
     e_by_dst = e.repartition("_dst").persist()
-    hub = verts.withColumn("hub", F.lit(1.0 / n))
-    auth = verts.withColumn("authority", F.lit(0.0))
-    if stats is None:
-        stats = {}
-    stats["iterations"] = 0
-    stats["l1_delta"] = None
 
     def _normalize(raw, col, out):
         total = raw.agg(
             F.coalesce(F.sum(col), F.lit(0.0))).collect()[0][0]
         scale = 1.0 / total if total > 0 else 0.0
-        return (
-            verts.join(raw, "host", "left")
-            .select("host",
-                    (F.coalesce(F.col(col), F.lit(0.0))
+        return verts.join(raw, "host", "left").select(
+            "host", (F.coalesce(F.col(col), F.lit(0.0))
                      * F.lit(scale)).alias(out))
-            .localCheckpoint(eager=True)
+
+    auth = verts.withColumn("authority", F.lit(0.0))
+
+    def step(hub):
+        nonlocal auth
+        a_raw = (
+            e_by_src.join(hub, e_by_src._src == hub.host)
+            .groupBy(F.col("_dst").alias("host"))
+            .agg(F.sum(F.col("hub") * F.col("_w")).alias("_a"))
         )
+        auth = _normalize(a_raw, "_a", "authority").localCheckpoint(
+            eager=True)
+        h_raw = (
+            e_by_dst.join(auth, e_by_dst._dst == auth.host)
+            .groupBy(F.col("_src").alias("host"))
+            .agg(F.sum(F.col("authority") * F.col("_w")).alias("_h"))
+        )
+        return _normalize(h_raw, "_h", "hub")
 
     try:
-        for _ in range(iterations):
-            stats["iterations"] += 1
-            a_raw = (
-                e_by_src.join(hub, e_by_src._src == hub.host)
-                .groupBy(F.col("_dst").alias("host"))
-                .agg(F.sum(F.col("hub") * F.col("_w")).alias("_a"))
-            )
-            auth = _normalize(a_raw, "_a", "authority")
-            h_raw = (
-                e_by_dst.join(auth, e_by_dst._dst == auth.host)
-                .groupBy(F.col("_src").alias("host"))
-                .agg(F.sum(F.col("authority") * F.col("_w")).alias("_h"))
-            )
-            prev = hub
-            hub = _normalize(h_raw, "_h", "hub")
-            if tol > 0:
-                delta = (
-                    hub.join(prev.withColumnRenamed("hub", "_prev"), "host")
-                    .agg(F.coalesce(
-                        F.sum(F.abs(F.col("hub") - F.col("_prev"))),
-                        F.lit(0.0)))
-                    .collect()[0][0]
-                )
-                stats["l1_delta"] = delta
-                if delta < tol:
-                    break
+        hub = _power_iterate(verts.withColumn("hub", F.lit(1.0 / n)), step,
+                             "hub", iterations, tol, stats)
     finally:
         e_by_src.unpersist()
         e_by_dst.unpersist()
@@ -302,31 +328,23 @@ def trustrank(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
     densely they interlink). Returns ``(host, trustrank)`` for every
     graph vertex; scores sum to 1.
 
-    Same scale shape as :func:`pagerank` — ONE transition table built
-    and persisted pre-partitioned on the source key, per-round cost one
-    co-partitioned join + map-side-combined groupBy on host-scale keys,
-    ``localCheckpoint`` lineage truncation, L1-delta early exit. The
-    two TrustRank-specific differences: the teleport base lands only on
-    seed vertices ((1-d)/|S|), and dangling mass is redistributed over
-    the SEED set (mass must re-enter through trust, never uniformly —
-    uniform redistribution would leak trust to unlinked spam). The seed
-    table is vertex-cardinality metadata (hundreds of hosts in
-    practice); it is broadcast-joined as a flag onto the vertex table
-    once. Raises ``ValueError`` when no seed intersects the graph —
-    the teleport distribution would be undefined."""
-    src, dst, w = F.col(src_col), F.col(dst_col), F.col(weight_col)
-    edges = edges.where(src.isNotNull() & dst.isNotNull())
+    The :func:`_teleport_rank` iteration of :func:`pagerank`, with the
+    teleport base and the dangling mass landing on the SEED set only
+    (mass must re-enter through trust, never uniformly — uniform
+    redistribution would leak trust to unlinked spam). The seed table
+    is vertex-cardinality metadata (hundreds of hosts in practice); it
+    is broadcast-joined as a flag onto the vertex table once. Raises
+    ``ValueError`` when no seed intersects the graph — the teleport
+    distribution would be undefined."""
+    e, verts = _rank_graph(edges, src_col, dst_col, weight_col)
     seed_set = (
         seeds.select(F.col(seed_col).alias("host"))
         .where(F.col("host").isNotNull())
         .distinct()
     )
     verts = (
-        edges.select(src.alias("host"))
-        .unionByName(edges.select(dst.alias("host")))
-        .distinct()
-        .join(F.broadcast(seed_set).withColumn("_seed", F.lit(True)),
-              "host", "left")
+        verts.join(F.broadcast(seed_set).withColumn("_seed", F.lit(True)),
+                   "host", "left")
         .select("host", F.coalesce("_seed", F.lit(False)).alias("_seed"))
         .localCheckpoint(eager=True)
     )
@@ -336,70 +354,8 @@ def trustrank(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
             "trustrank: no seed host appears in the edge graph — the "
             "teleport distribution is undefined (check seed spelling / "
             "host normalization)")
-    out_w = edges.groupBy(src.alias("host")).agg(F.sum(w).alias("_out"))
-    trans = (
-        edges.join(out_w, edges[src_col] == out_w.host)
-        .select(
-            src.alias("_src"), dst.alias("_dst"),
-            (w.cast("double") / F.col("_out")).alias("_p"),
-        )
-        .repartition("_src")
-        .persist()
-    )
-    dangling = verts.join(out_w, "host", "left_anti").persist()
-    has_dangling = bool(dangling.head(1))
-    ranks = verts.withColumn(
-        "pr", F.when(F.col("_seed"), F.lit(1.0 / n_seeds))
-        .otherwise(F.lit(0.0)))
-    base = (1.0 - damping) / n_seeds
-    if stats is None:
-        stats = {}
-    stats["iterations"] = 0
-    stats["l1_delta"] = None
-    try:
-        for _ in range(iterations):
-            stats["iterations"] += 1
-            d_mass = 0.0
-            if has_dangling:
-                d_mass = (
-                    dangling.join(ranks, "host")
-                    .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                    .collect()[0][0]
-                )
-            contribs = (
-                ranks.join(trans, ranks.host == trans._src)
-                .groupBy(F.col("_dst").alias("host"))
-                .agg(F.sum(F.col("pr") * F.col("_p")).alias("_in"))
-            )
-            prev = ranks
-            ranks = (
-                verts.join(contribs, "host", "left")
-                .select(
-                    "host", "_seed",
-                    (F.when(F.col("_seed"),
-                            F.lit(base) + F.lit(damping * d_mass / n_seeds))
-                     .otherwise(F.lit(0.0))
-                     + F.lit(damping)
-                     * F.coalesce(F.col("_in"), F.lit(0.0))).alias("pr"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if tol > 0:
-                delta = (
-                    ranks.join(
-                        prev.select("host",
-                                    F.col("pr").alias("_prev")), "host")
-                    .agg(F.coalesce(
-                        F.sum(F.abs(F.col("pr") - F.col("_prev"))),
-                        F.lit(0.0)))
-                    .collect()[0][0]
-                )
-                stats["l1_delta"] = delta
-                if delta < tol:
-                    break
-    finally:
-        trans.unpersist()
-        dangling.unpersist()
+    ranks = _teleport_rank(e, verts, n_seeds, damping, iterations, tol,
+                           stats)
     return ranks.select("host", F.col("pr").alias("trustrank"))
 
 

@@ -103,7 +103,8 @@ def test_minhash_signature_components_independent(spark, docs):
 
 def test_near_dup_paths_skip_degenerate_rows(spark):
     """NULL ids, NULL or token-less texts produce no candidate pairs and
-    no shared bucket in any near-dup path; the real clone pair stays."""
+    no shared bucket or shingle in any near-dup path; the real clone
+    pair stays."""
     from document_extractor_spark.operators.dedup import (
         _band_pairs, _minhash_bands, _shingled, drop_near_duplicates,
         ingest_near_dups, minhash_index)
@@ -119,6 +120,9 @@ def test_near_dup_paths_skip_degenerate_rows(spark):
             minhash_near_duplicates(df, threshold=0.5).collect()} == {(1, 2)}
     assert {(r["id_a"], r["id_b"]) for r in
             simhash_near_duplicates(df).collect()} == {(1, 2)}
+    # the exact verifier too: no blank shingle joins token-less docs
+    assert {(r["id_a"], r["id_b"]) for r in
+            ngram_jaccard_pairs(df, threshold=0.0).collect()} == {(1, 2)}
     # token-less docs are all kept (no cluster); only the clone dies
     kept = sorted(r["doc_id"] for r in drop_near_duplicates(df, threshold=0.5)
                   .where("doc_id IS NOT NULL").collect())

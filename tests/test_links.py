@@ -1,5 +1,6 @@
 """Outlink extraction + host link graph (operators/links.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from document_extractor_spark.operators.links import (
@@ -456,6 +457,52 @@ def test_pagerank_tol_zero_runs_all_iterations(spark):
     stats = {}
     pagerank(df, iterations=4, tol=0, stats=stats).collect()
     assert stats["iterations"] == 4 and stats["l1_delta"] is None
+
+
+@pytest.mark.parametrize("ranker", ["pagerank", "trustrank", "hits"])
+def test_rankers_drop_hostile_edge_weights(spark, ranker):
+    """A zero, NULL, negative, NaN or infinite edge weight carries no
+    rank: its source stays a vertex and dangles. No division by zero,
+    no leaked PageRank mass, no negative HITS score."""
+    from document_extractor_spark.operators.links import (
+        hits,
+        pagerank,
+        trustrank,
+    )
+
+    clean = [("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0)]
+    hostile = [("d", "a", 0.0), ("e", "b", None), ("f", "c", -1.0),
+               ("g", "a", float("nan")), ("h", "b", float("inf"))]
+    schema = "src_host string, dst_host string, n_links double"
+    df = spark.createDataFrame(clean + hostile, schema)
+    if ranker == "hits":
+        got = {r["host"]: (r["hub"], r["authority"])
+               for r in hits(df, iterations=8, tol=0).collect()}
+        want = {r["host"]: (r["hub"], r["authority"]) for r in hits(
+            spark.createDataFrame(clean, schema), iterations=8,
+            tol=0).collect()}
+        assert all(v >= 0.0 for pair in got.values() for v in pair)
+        for s, _, _ in hostile:
+            assert got.pop(s) == (0.0, 0.0)
+        assert set(got) == set(want)
+        for h in want:
+            for x, y in zip(got[h], want[h]):
+                assert abs(x - y) < 1e-12, (h, got[h], want[h])
+        return
+    # a zero-weight edge adds a vertex but no transition
+    ref = clean + [(s, d, 0.0) for s, d, _ in hostile]
+    if ranker == "pagerank":
+        out = pagerank(df, iterations=8)
+        want = _numpy_pagerank(ref, 0.85, 8)
+    else:
+        seeds = spark.createDataFrame([("a",), ("d",)], "host string")
+        out = trustrank(df, seeds, iterations=8)
+        want = _numpy_trustrank(ref, ["a", "d"], 0.85, 8)
+    got = {r["host"]: r[ranker] for r in out.collect()}
+    assert set(got) == set(want)
+    for h in want:
+        assert abs(got[h] - want[h]) < 1e-12, (h, got[h], want[h])
+    assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
 # --- triangle counting -------------------------------------------------------
