@@ -89,7 +89,7 @@ FMT_BOLD, FMT_ITALIC, FMT_UNDERLINE = 1, 2, 4
 # ---------------------------------------------------------------------------
 
 
-@dataclass
+@dataclass(slots=True)
 class Block:
     """One flattened DOM text block."""
 
@@ -152,17 +152,29 @@ class ExtractResult:
 # ---------------------------------------------------------------------------
 
 
-# Tokenizer patterns — the hand-rolled replacement for stdlib
-# ``html.parser`` (which spends ~90% of extraction time in per-tag regex
-# machinery and line/column bookkeeping we never use). One compiled scan
-# per construct; C-speed ``str.find`` for the common paths.
+# Tokenizer — the hand-rolled replacement for stdlib ``html.parser``
+# (which spends ~90% of extraction time in per-tag regex machinery and
+# line/column bookkeeping we never use). One compiled alternation,
+# matched once per token by ``finditer``: every position of a page
+# starts exactly one branch, so the tokens tile the page and the scan
+# for the next tag runs in C.
 _TAGNAME = r"[a-zA-Z][^\t\n\r\f />\x00]*"
-_START_TAG_RE = re.compile(
-    "<(" + _TAGNAME + ")"                       # 1: name
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)"        # 2: attrs blob (quote-aware)
-    ">"
+# quote-aware attrs blob; possessive, so a run of plain characters is
+# one regex step rather than one per character (no parse it gives up
+# could have matched: a `>` can only end it outside quotes)
+_ATTRS = r"(?:[^>\"']++|\"[^\"]*+\"|'[^']*+')*+"
+_TOKEN_RE = re.compile(
+    r"([^<]+)"                                   # 1: text run
+    r"|</\s*(" + _TAGNAME + ")" + _ATTRS + ">"   # 2: end tag name
+    r"|<(" + _TAGNAME + ")(" + _ATTRS + ")>"     # 3: start tag name, 4: attrs
+    # 5: dropped — a comment (to EOF when unclosed), a declaration, a
+    # processing instruction or a bogus end tag like `</>` (to next '>')
+    r"|(<!--.*?-->|<!--.*|<![^>]*>?|<\?[^>]*>?|</[^>]*>?)"
+    r"|(<[a-zA-Z].*)"                   # 6: unterminated tag: text to EOF
+    r"|<",                              # any other '<' is text
+    re.DOTALL,
 )
-_END_TAG_RE = re.compile(r"</\s*(" + _TAGNAME + r")(?:\"[^\"]*\"|'[^']*'|[^>\"'])*>")
+_END_TAG_RE = re.compile(r"</\s*" + _TAGNAME + _ATTRS + ">")
 # A trailing "/" marks a self-closing tag only when it is a standalone
 # token — i.e. NOT the last character of an unquoted attribute value
 # (`<a href=/about/>`: html.parser and the HTML spec treat that slash as
@@ -175,6 +187,48 @@ _RAWTEXT_END = {
     "script": re.compile(r"</\s*script", re.IGNORECASE),
     "style": re.compile(r"</\s*style", re.IGNORECASE),
 }
+
+# Tag -> action tables of ``_Flattener.run``. A tag takes the action of
+# its first category in the order invisible, link, formatting, br, hr,
+# img, table part, block; any other tag is ``_S_OTHER`` / ``_E_OTHER``.
+# The structural start actions (``_S_OTHER`` and up) honour a
+# ``column-count`` style.
+(_S_SKIP, _S_LINK, _S_FMT, _S_BR, _S_HR, _S_IMG, _S_OTHER, _S_BLOCK,
+ _S_PRE, _S_HEADER, _S_FOOTER, _S_ROW, _S_CELL, _S_TABLE) = range(14)
+_START_ACTIONS = {
+    **dict.fromkeys(BLOCK_TAGS, _S_BLOCK),
+    "pre": _S_PRE, "header": _S_HEADER, "footer": _S_FOOTER, "tr": _S_ROW,
+    "td": _S_CELL, "th": _S_CELL, "table": _S_TABLE,
+    "br": _S_BR, "hr": _S_HR, "img": _S_IMG, "a": _S_LINK,
+    **dict.fromkeys(_FMT_TAGS, _S_FMT),
+    **dict.fromkeys(SKIP_TAGS, _S_SKIP),
+}
+(_E_SKIP, _E_LINK, _E_FMT, _E_OTHER, _E_BLOCK, _E_PRE, _E_CELL,
+ _E_TABLE) = range(8)
+_END_ACTIONS = {
+    **dict.fromkeys(BLOCK_TAGS, _E_BLOCK),
+    "pre": _E_PRE, "td": _E_CELL, "th": _E_CELL, "table": _E_TABLE,
+    "a": _E_LINK,
+    **dict.fromkeys(_FMT_TAGS, _E_FMT),
+    **dict.fromkeys(SKIP_TAGS, _E_SKIP),
+}
+_BR_FRAG = ("br", "", False, 0)
+
+
+def _collapse_ws(s: str) -> str:
+    """``_WS_RE.sub(" ", s)``, skipping the regex when ``s`` has no
+    whitespace run to rewrite (the common case for prose)."""
+    if ("  " in s or "\n" in s or "\t" in s or "\r" in s or "\f" in s
+            or "\v" in s):
+        return _WS_RE.sub(" ", s)
+    return s
+
+
+def _fmt_bits(open_counts: list) -> int:
+    """FMT_* bitmask of the open b/strong, i/em, u/ins counts."""
+    return ((FMT_BOLD if open_counts[0] else 0)
+            | (FMT_ITALIC if open_counts[1] else 0)
+            | (FMT_UNDERLINE if open_counts[2] else 0))
 
 
 def _style_attr(attrs_blob: str) -> str:
@@ -190,388 +244,346 @@ def _style_attr(attrs_blob: str) -> str:
     return val
 
 
+def _cell_spans(attrs_blob: str) -> tuple:
+    """(colspan, rowspan) of a cell, clamped to the HTML-spec limits —
+    the E4/E5 grid normalization (openai_content_extractor.py:355-444
+    semantics)."""
+    cs = rs = 1
+    for am in _ATTR_RE.finditer(attrs_blob):
+        k = am.group(1).lower()
+        if k in ("colspan", "rowspan"):
+            v = (am.group(2) or "").strip("\"'")
+            try:
+                iv = int(v)
+            except ValueError:
+                iv = 1
+            if k == "colspan":
+                cs = min(_MAX_COLSPAN, max(1, iv))
+            else:
+                rs = min(_MAX_ROWSPAN, max(1, iv))
+    return cs, rs
+
+
 class _Flattener:
     """Error-tolerant single-pass DOM flattener.
 
     Produces ``self.blocks`` — the ordered list of text blocks — plus layout
     hints. Unclosed / mis-nested tags are tolerated: end tags pop to the
     nearest matching open tag, stray end tags are ignored, and everything
-    left open is flushed at close. Driven by the fast tokenizer in
-    ``run()`` rather than stdlib html.parser — same observable semantics
-    (verified by the byte-frozen golden fixtures), ~2× faster.
+    left open is flushed at close. ``run()`` drives the tokenizer and the
+    tag -> action tables above in one loop (stdlib html.parser semantics,
+    pinned by the byte-frozen goldens and ``tests/test_flatten_digest.py``).
     """
 
     def __init__(self, raw: str):
         self.raw = raw
         self.blocks: list[Block] = []
         self.stack: list[str] = []
-        self._skip = 0
-        self._link = 0
-        self._pre = 0
-        self._fmt = [0, 0, 0]       # open b/strong, i/em, u/ins counts
         # (stack_len_at_push, align) — alignment valid while its owning
         # block tag is still open; _pop_to trims stale entries
         self._align_stack: list = []
-        self._frags: list = []      # (kind, text, in_link, fmt) kind: 'txt'|'br'
-        # table state
-        self._tdepth = 0
-        self._tstart = -1
-        self._grid: list[list[str]] = []
-        self._cell: Optional[list[str]] = None
-        self._twords = 0
-        self._tlink_words = 0
+        self._frags: list = []      # (kind, text, in_link, fmt) kind: 'txt'|'pre'|'br'
         # layout
         self.columns = 1
         self.has_header = False
         self.has_footer = False
 
+    # -- open-tag stack ---------------------------------------------------
+    def _pop_to(self, tag):
+        stack = self.stack
+        if tag in stack:
+            while stack.pop() != tag:
+                pass
+            depth = len(stack)
+            align = self._align_stack
+            while align and align[-1][0] > depth:
+                align.pop()
+
     # -- block assembly ---------------------------------------------------
     def _flush(self):
-        if not self._frags:
-            return
-        if len(self._frags) == 1:
+        """The pending fragments -> one text block (none when blank)."""
+        frags = self._frags
+        if len(frags) == 1:
             # fast path: the overwhelmingly common single-fragment block
-            kind, txt, in_link, fmt = self._frags[0]
-            self._frags = []
-            if kind == "br":
-                return
-            if kind == "pre":
+            kind, txt, in_link, fmt = frags.pop()
+            if kind == "txt":
+                if txt.isspace():
+                    return
+                text = _collapse_ws(txt).strip()
+            elif kind == "pre":
                 text = txt.strip("\n")
-            elif txt.isspace():
-                return
+                if not text:
+                    return
             else:
-                text = _WS_RE.sub(" ", txt).strip()
+                return
+            words = len(text.split())
+            link_words = words if in_link else 0
+        else:
+            parts = []
+            words = link_words = 0
+            has_pre = any_nl = False
+            fmt_acc = -1        # AND over word-carrying frags; -1 = none yet
+            for kind, txt, in_link, fmt in frags:
+                if kind == "txt":
+                    if txt.isspace():
+                        # whitespace-only inter-tag run — collapses to one
+                        # space, zero words
+                        parts.append(" ")
+                        continue
+                    txt = _collapse_ws(txt)
+                elif kind == "pre":
+                    has_pre = True
+                else:
+                    parts.append("\n")
+                    any_nl = True
+                    continue
+                parts.append(txt)
+                w = len(txt.split())
+                if w:
+                    words += w
+                    if in_link:
+                        link_words += w
+                    fmt_acc = fmt if fmt_acc < 0 else (fmt_acc & fmt)
+            frags.clear()
+            text = "".join(parts)
+            if has_pre:
+                text = text.strip("\n")
+            elif any_nl:
+                text = _NL_TRIM_RE.sub("\n", text).strip()
+            else:
+                text = text.strip()
             if not text:
                 return
-            w = len(text.split())
-            self._emit_block(text, w, w if in_link else 0, fmt)
-            return
-        parts = []
-        words = 0
-        link_words = 0
-        has_pre = False
-        any_nl = False
-        fmt_acc = -1            # AND over word-carrying frags; -1 = none yet
-        for kind, txt, in_link, fmt in self._frags:
-            if kind == "br":
-                parts.append("\n")
-                any_nl = True
-                continue
-            if self._pre_frag(kind):
-                has_pre = True
-                norm = txt
-            elif txt.isspace():
-                # whitespace-only inter-tag run — collapses to one space,
-                # zero words; skip the regex machinery
-                parts.append(" ")
-                continue
-            else:
-                norm = _WS_RE.sub(" ", txt)
-            parts.append(norm)
-            w = len(norm.split())
-            words += w
-            if in_link:
-                link_words += w
-            if w:
-                fmt_acc = fmt if fmt_acc < 0 else (fmt_acc & fmt)
-        self._frags = []
-        text = "".join(parts)
-        if has_pre:
-            text = text.strip("\n")
-        elif any_nl:
-            text = _NL_TRIM_RE.sub("\n", text).strip()
+            fmt = max(fmt_acc, 0)
+        stack = self.stack
+        if stack:
+            tag = stack[-1]
+            if tag not in BLOCK_TAGS:
+                tag = next((t for t in reversed(stack) if t in BLOCK_TAGS),
+                           "body")
+            ancestors = tuple(stack[:-1])
         else:
-            text = text.strip()
-        if not text:
-            return
-        self._emit_block(text, words, link_words, max(fmt_acc, 0))
+            tag, ancestors = "body", ()
+        align = self._align_stack
+        self.blocks.append(Block(
+            len(self.blocks), tag, ancestors, text, words, link_words,
+            fmt=fmt, alignment=align[-1][1] if align else None))
 
-    def _emit_block(self, text: str, words: int, link_words: int,
-                    fmt: int = 0):
-        tag = "body"
-        for t in reversed(self.stack):
-            if t in BLOCK_TAGS:
-                tag = t
-                break
-        self.blocks.append(
-            Block(
-                index=len(self.blocks),
-                tag=tag,
-                ancestors=tuple(self.stack[:-1] if self.stack else ()),
-                text=text,
-                n_words=words,
-                n_link_words=link_words,
-                fmt=fmt,
-                alignment=self._align_stack[-1][1] if self._align_stack
-                else None,
-            )
-        )
+    def _emit_image(self, attrs_blob: str):
+        """Block-level images become typed blocks (reference emits
+        `image` items, openai_content_extractor.py:164,186)."""
+        src = alt = ""
+        width = height = None
+        for am in _ATTR_RE.finditer(attrs_blob):
+            k = am.group(1).lower()
+            if k in ("src", "alt", "width", "height"):
+                v = (am.group(2) or "").strip("\"'")
+                if k == "src":
+                    src = unescape(v) if "&" in v else v
+                elif k == "alt":
+                    alt = unescape(v) if "&" in v else v
+                else:
+                    try:
+                        iv = int(v)
+                    except ValueError:
+                        continue
+                    if k == "width":
+                        width = iv
+                    else:
+                        height = iv
+        self.blocks.append(Block(
+            len(self.blocks), "img", tuple(self.stack),
+            _collapse_ws(alt).strip(), src=src or None,
+            image_type=classify_image_type(src, alt, width, height)))
 
-    @staticmethod
-    def _pre_frag(kind: str) -> bool:
-        return kind == "pre"
+    def _emit_table(self, start: int, end: int, rows: list, words: int,
+                    link_words: int):
+        grid = _expand_grid(rows)
+        if grid:
+            self.blocks.append(Block(
+                len(self.blocks), "table", tuple(self.stack),
+                "\n".join("\t".join(r) for r in grid), words, link_words,
+                table_html=self.raw[start:end], table_grid=grid))
 
-    # -- handlers ---------------------------------------------------------
-    def handle_starttag(self, tag, attrs_blob, tag_off):
-        if tag in SKIP_TAGS:
-            self._skip += 1
-            return
-        if self._skip:
-            return
-        if tag == "br":
-            if self._tdepth and self._cell is not None:
-                self._cell.append("\n")
-            else:
-                self._frags.append(("br", "", False, 0))
-            return
-        if tag == "hr":
-            self._flush()
-            return
-        if tag == "a":
-            self._link += 1
-            return
-        fi = _FMT_TAGS.get(tag)
-        if fi is not None:
-            self._fmt[fi] += 1
-            return
-        if tag == "img":
-            # Block-level images become typed blocks (reference emits
-            # `image` items, openai_content_extractor.py:164,186). Inline
-            # images mid-paragraph (pending frags) are ignored — emitting
-            # them would split the paragraph, changing the north-star text
-            # for decorative icons.
-            if not self._tdepth and not self._frags:
-                src = alt = ""
-                width = height = None
-                if attrs_blob:
-                    for am in _ATTR_RE.finditer(attrs_blob):
-                        k = am.group(1).lower()
-                        if k in ("src", "alt", "width", "height"):
-                            v = (am.group(2) or "").strip("\"'")
-                            if k == "src":
-                                src = unescape(v) if "&" in v else v
-                            elif k == "alt":
-                                alt = unescape(v) if "&" in v else v
-                            else:
-                                try:
-                                    iv = int(v)
-                                except ValueError:
-                                    continue
-                                if k == "width":
-                                    width = iv
-                                else:
-                                    height = iv
-                self.blocks.append(Block(
-                    index=len(self.blocks), tag="img",
-                    ancestors=tuple(self.stack),
-                    text=_WS_RE.sub(" ", alt).strip(),
-                    n_words=0, src=src or None,
-                    image_type=classify_image_type(src, alt, width, height),
-                ))
-            return
-        if attrs_blob and "column-count" in attrs_blob:
-            m = _COLCOUNT_RE.search(_style_attr(attrs_blob))
-            if m:
-                self.columns = max(self.columns, int(m.group(1)))
-        if tag == "table":
-            if self._tdepth == 0:
-                self._flush()
-                self._tstart = tag_off
-                self._grid = []
-                self._cell = None
-                self._twords = 0
-                self._tlink_words = 0
-            self._tdepth += 1
-            self.stack.append(tag)
-            return
-        if self._tdepth:
-            if tag == "tr":
-                self._grid.append([])
-                self._cell = None
-            elif tag in ("td", "th"):
-                if not self._grid:
-                    self._grid.append([])
-                cs = rs = 1
-                if attrs_blob and "span" in attrs_blob:
-                    # colspan/rowspan for the E4/E5 grid normalization
-                    # (openai_content_extractor.py:355-444 semantics)
-                    for am in _ATTR_RE.finditer(attrs_blob):
-                        k = am.group(1).lower()
-                        if k in ("colspan", "rowspan"):
-                            v = (am.group(2) or "").strip("\"'")
-                            try:
-                                iv = int(v)
-                            except ValueError:
-                                iv = 1
-                            if k == "colspan":
-                                cs = min(_MAX_COLSPAN, max(1, iv))
-                            else:
-                                rs = min(_MAX_ROWSPAN, max(1, iv))
-                self._cell = []
-                self._grid[-1].append((self._cell, cs, rs))
-            self.stack.append(tag)
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-            if tag == "pre":
-                self._pre += 1
-            if tag == "header":
-                self.has_header = True
-            if tag == "footer":
-                self.has_footer = True
-            self.stack.append(tag)
-            if attrs_blob and "text-align" in attrs_blob:
-                m = _TEXT_ALIGN_RE.search(_style_attr(attrs_blob))
-                if m:
-                    self._align_stack.append((len(self.stack), m.group(1)))
-
-    def handle_endtag(self, tag, end_off):
-        if tag in SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-            return
-        if self._skip:
-            return
-        if tag == "a":
-            self._link = max(0, self._link - 1)
-            return
-        fi = _FMT_TAGS.get(tag)
-        if fi is not None:
-            if self._fmt[fi]:
-                self._fmt[fi] -= 1
-            return
-        if tag == "table" and self._tdepth:
-            self._tdepth -= 1
-            self._pop_to(tag)
-            if self._tdepth == 0:
-                self._emit_table(end_off)
-            return
-        if self._tdepth:
-            if tag in ("td", "th"):
-                self._cell = None
-            self._pop_to(tag)
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-            if tag == "pre":
-                self._pre = max(0, self._pre - 1)
-            self._pop_to(tag)
-
-    def _pop_to(self, tag):
-        if tag in self.stack:
-            while self.stack:
-                if self.stack.pop() == tag:
-                    break
-            if self._align_stack:
-                depth = len(self.stack)
-                while self._align_stack and self._align_stack[-1][0] > depth:
-                    self._align_stack.pop()
-
-    def handle_data(self, data):
-        if self._skip:
-            return
-        if self._tdepth:
-            if self._cell is not None:
-                self._cell.append(data)
-                w = len(data.split())
-                self._twords += w
-                if self._link:
-                    self._tlink_words += w
-            return
-        if not data:
-            return
-        kind = "pre" if self._pre else "txt"
-        f = self._fmt
-        fmt = ((FMT_BOLD if f[0] else 0) | (FMT_ITALIC if f[1] else 0)
-               | (FMT_UNDERLINE if f[2] else 0)) if (f[0] or f[1] or f[2]) \
-            else 0
-        self._frags.append((kind, data, self._link > 0, fmt))
-
-    # -- table finalize ---------------------------------------------------
-    def _emit_table(self, end: int):
-        html = self.raw[self._tstart:end] if self._tstart >= 0 else ""
-        grid = _expand_grid(self._grid)
-        text = "\n".join("\t".join(r) for r in grid)
-        if not grid:
-            return
-        blk = Block(
-            index=len(self.blocks),
-            tag="table",
-            ancestors=tuple(self.stack),
-            text=text,
-            n_words=self._twords,
-            n_link_words=self._tlink_words,
-            table_html=html,
-            table_grid=grid,
-        )
-        self.blocks.append(blk)
-
-    # -- tokenizer --------------------------------------------------------
+    # -- the one loop -----------------------------------------------------
     def run(self) -> None:
         """Single pass over ``self.raw``: text runs split at tags, entities
-        decoded per run, script/style consumed as rawtext, comments /
-        declarations / PIs discarded — the html.parser behaviors this
-        pipeline actually observes, without its per-tag overhead."""
+        decoded per run (not in trailing text after the last tag),
+        script/style consumed as rawtext, comments / declarations / PIs
+        discarded — the html.parser behaviors this pipeline actually
+        observes, without its per-tag overhead. Each token costs one
+        regex match, one dict lookup for its tag's action and that
+        action's few statements."""
         html = self.raw
         n = len(html)
-        pos = 0
-        find = html.find
-        emit = self.handle_data
-        while pos < n:
-            lt = find("<", pos)
-            if lt < 0:
-                if not self._skip:
-                    emit(html[pos:])
-                break
-            if lt > pos and not self._skip:
-                # (skip-region text — head/script/style — is dropped by
-                # handle_data anyway; not slicing it here saves the
-                # allocation + entity decode for that dead content)
-                seg = html[pos:lt]
-                emit(unescape(seg) if "&" in seg else seg)
-            nxt = html[lt + 1: lt + 2]
-            if nxt == "/":
-                m = _END_TAG_RE.match(html, lt)
-                if m:
-                    self.handle_endtag(m.group(1).lower(), m.end())
-                    pos = m.end()
-                else:  # bogus end tag / `</>` — discard to next '>'
-                    gt = find(">", lt)
-                    pos = (gt + 1) if gt >= 0 else n
-            elif nxt == "!":
-                if html[lt + 2: lt + 4] == "--":        # comment
-                    cend = find("-->", lt + 4)
-                    pos = (cend + 3) if cend >= 0 else n
-                else:                                    # <!DOCTYPE …>
-                    gt = find(">", lt)
-                    pos = (gt + 1) if gt >= 0 else n
-            elif nxt == "?":                             # processing instr.
-                gt = find(">", lt)
-                pos = (gt + 1) if gt >= 0 else n
-            elif nxt and (("a" <= nxt <= "z") or ("A" <= nxt <= "Z")):
-                m = _START_TAG_RE.match(html, lt)
-                if not m:
-                    # unterminated tag at EOF → trailing text, html.parser-style
-                    emit(html[lt:])
-                    break
-                tag = m.group(1).lower()
-                attrs = m.group(2)
-                pos = m.end()
-                self.handle_starttag(tag, attrs, lt)
-                if attrs.endswith("/") and _SELFCLOSE_RE.search(attrs):
-                    self.handle_endtag(tag, pos)
-                elif tag in _RAWTEXT_END:                # script/style rawtext
-                    e = _RAWTEXT_END[tag].search(html, pos)
-                    if e:
-                        m2 = _END_TAG_RE.match(html, e.start())
-                        self.handle_endtag(tag, m2.end() if m2 else e.start())
-                        pos = m2.end() if m2 else (
-                            (find(">", e.start()) + 1) or n)
+        stack = self.stack
+        frags = self._frags
+        align = self._align_stack
+        flush = self._flush
+        pop_to = self._pop_to
+        skip = link = pre = tdepth = 0
+        in_link = False
+        kind = "txt"                # fragment kind of text: 'txt' | 'pre'
+        fmt_open = [0, 0, 0]        # open b/strong, i/em, u/ins counts
+        fmt = 0                     # FMT_* bitmask of the open ones
+        # table state: start offset, rows of (cell chunks, colspan,
+        # rowspan), the open cell's chunks, word counts
+        tstart = -1
+        grid: list = []
+        cell: Optional[list] = None
+        twords = tlink_words = 0
+        tokens = _TOKEN_RE.finditer(html)
+        while tokens is not None:
+            it, tokens = tokens, None
+            for m in it:
+                k = m.lastindex
+                if k == 4:                                  # start tag
+                    tag = m[3].lower()
+                    attrs = m[4]
+                    act = _START_ACTIONS.get(tag, _S_OTHER)
+                    if act == _S_SKIP:
+                        skip += 1
+                    elif skip:
+                        pass
+                    elif act == _S_LINK:
+                        link += 1
+                        in_link = True
+                    elif act >= _S_OTHER:
+                        if "column-count" in attrs:
+                            cm = _COLCOUNT_RE.search(_style_attr(attrs))
+                            if cm:
+                                self.columns = max(self.columns,
+                                                   int(cm.group(1)))
+                        if tdepth:
+                            # inside a table every tag is pushed
+                            if act == _S_TABLE:
+                                tdepth += 1
+                            elif act == _S_ROW:
+                                grid.append([])
+                                cell = None
+                            elif act == _S_CELL:
+                                if not grid:
+                                    grid.append([])
+                                cell = []
+                                grid[-1].append(
+                                    (cell, *_cell_spans(attrs))
+                                    if "span" in attrs else (cell, 1, 1))
+                            stack.append(tag)
+                        elif act == _S_TABLE:
+                            if frags:
+                                flush()
+                            tstart = m.start()
+                            grid = []
+                            cell = None
+                            twords = tlink_words = 0
+                            tdepth = 1
+                            stack.append(tag)
+                        elif act != _S_OTHER:               # block tag
+                            if frags:
+                                flush()
+                            if act == _S_PRE:
+                                pre += 1
+                                kind = "pre"
+                            elif act == _S_HEADER:
+                                self.has_header = True
+                            elif act == _S_FOOTER:
+                                self.has_footer = True
+                            stack.append(tag)
+                            if "text-align" in attrs:
+                                am = _TEXT_ALIGN_RE.search(_style_attr(attrs))
+                                if am:
+                                    align.append((len(stack), am.group(1)))
+                    elif act == _S_BR:
+                        if tdepth and cell is not None:
+                            cell.append("\n")
+                        else:
+                            frags.append(_BR_FRAG)
+                    elif act == _S_HR:
+                        if frags:
+                            flush()
+                    elif act == _S_FMT:
+                        fmt_open[_FMT_TAGS[tag]] += 1
+                        fmt = _fmt_bits(fmt_open)
+                    elif not tdepth and not frags:          # _S_IMG
+                        # inline images mid-paragraph (pending frags)
+                        # are ignored — emitting them would split the
+                        # paragraph for decorative icons
+                        self._emit_image(attrs)
+                    if not (attrs.endswith("/")
+                            and _SELFCLOSE_RE.search(attrs)):
+                        if act == _S_SKIP and tag in _RAWTEXT_END:
+                            # script/style: its text is raw up to the
+                            # first `</script` / `</style`
+                            e = _RAWTEXT_END[tag].search(html, m.end())
+                            if e is None:
+                                break                       # runs to EOF
+                            skip -= 1
+                            m2 = _END_TAG_RE.match(html, e.start())
+                            pos = m2.end() if m2 else (
+                                (html.find(">", e.start()) + 1) or n)
+                            tokens = _TOKEN_RE.finditer(html, pos)
+                            break
+                        continue
+                    # a self-closing tag closes at once: fall through
+                elif k == 2:                                # end tag
+                    tag = m[2].lower()
+                elif k == 5:            # comment, declaration, PI, bogus
+                    continue
+                else:                                       # text
+                    if skip:
+                        continue
+                    if k == 1:
+                        data = m[1]
+                        if "&" in data and m.end() < n:
+                            data = unescape(data)
+                    else:       # an unterminated tag, or a stray '<'
+                        data = m[6] if k else "<"
+                    if tdepth:
+                        if cell is not None:
+                            cell.append(data)
+                            w = len(data.split())
+                            twords += w
+                            if link:
+                                tlink_words += w
+                    elif data:  # (a run of invalid char refs decodes to "")
+                        frags.append((kind, data, in_link, fmt))
+                    continue
+                act = _END_ACTIONS.get(tag, _E_OTHER)
+                if act == _E_SKIP:
+                    if skip:
+                        skip -= 1
+                elif skip:
+                    pass
+                elif act == _E_LINK:
+                    if link:
+                        link -= 1
+                        in_link = link > 0
+                elif act == _E_FMT:
+                    fi = _FMT_TAGS[tag]
+                    if fmt_open[fi]:
+                        fmt_open[fi] -= 1
+                        fmt = _fmt_bits(fmt_open)
+                elif tdepth:
+                    if act == _E_TABLE:
+                        tdepth -= 1
+                        pop_to(tag)
+                        if not tdepth:
+                            self._emit_table(tstart, m.end(), grid, twords,
+                                             tlink_words)
                     else:
-                        break                            # unterminated rawtext
-            else:
-                emit("<")
-                pos = lt + 1
-        self._flush()
+                        if act == _E_CELL:
+                            cell = None
+                        pop_to(tag)
+                elif act != _E_OTHER:                       # block tag
+                    if frags:
+                        flush()
+                    if act == _E_PRE and pre:
+                        pre -= 1
+                        if not pre:
+                            kind = "txt"
+                    pop_to(tag)
+        if frags:
+            flush()
 
 
 def flatten(html: str) -> _Flattener:
@@ -622,7 +634,7 @@ def _expand_grid(rows) -> list:
             while (r, c) in occ:
                 exp_row.append(occ.pop((r, c)))
                 c += 1
-            parts = [x if x == "\n" else _WS_RE.sub(" ", x) for x in cell]
+            parts = [x if x == "\n" else _collapse_ws(x) for x in cell]
             txt = _NL_TRIM_RE.sub("\n", "".join(parts)).strip()
             rem = _MAX_GRID_CELLS - total
             if rem <= 1:
@@ -677,15 +689,26 @@ def refine_table_html(table_html: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _in_chrome(b: Block) -> bool:
-    if b.tag in CHROME_TAGS:
-        return True
-    return any(t in CHROME_TAGS or t in ("header", "footer") for t in b.ancestors) \
-        or b.tag in ("header", "footer")
+# A block under (or being) one of these is page chrome.
+_CHROME_SCOPE = CHROME_TAGS | {"header", "footer"}
 
 
-def _in_main(b: Block) -> bool:
-    return "main" in b.ancestors or "article" in b.ancestors
+def _scope_flags(blocks: list[Block]) -> tuple[list, list]:
+    """(in_chrome, in_main) per block, scanning each distinct ancestors
+    tuple once."""
+    by_ancestors: dict = {}
+    chrome = []
+    main = []
+    for b in blocks:
+        f = by_ancestors.get(b.ancestors)
+        if f is None:
+            anc = b.ancestors
+            f = by_ancestors[anc] = (
+                any(t in _CHROME_SCOPE for t in anc),
+                "main" in anc or "article" in anc)
+        chrome.append(f[0] or b.tag in _CHROME_SCOPE)
+        main.append(f[1])
+    return chrome, main
 
 
 def _looks_like_kv(text: str) -> bool:
@@ -707,9 +730,10 @@ def classify_blocks(blocks: list[Block]) -> None:
     tag overrides for chrome containers, headings, lists and tables.
     """
     n = len(blocks)
+    in_chrome, in_main = _scope_flags(blocks)
     # Pass 1: raw classifier on prose blocks.
     for i, b in enumerate(blocks):
-        if _in_chrome(b):
+        if in_chrome[i]:
             b.is_content = False
             continue
         if b.tag == "title":
@@ -723,7 +747,7 @@ def classify_blocks(blocks: list[Block]) -> None:
             continue
         # Semantic-markup override: explicit <main>/<article> IS the page's
         # declared main content — keep unless link-dominated.
-        if b.tag != "li" and _in_main(b) and b.link_density <= 0.35 and b.n_words > 0:
+        if b.tag != "li" and in_main[i] and b.link_density <= 0.35 and b.n_words > 0:
             b.is_content = True
             continue
         # image blocks are transparent to the word-count neighbor rules —
@@ -745,16 +769,16 @@ def classify_blocks(blocks: list[Block]) -> None:
     i = 0
     while i < n:
         b = blocks[i]
-        if b.tag == "li" and not _in_chrome(b):
+        if b.tag == "li" and not in_chrome[i]:
             j = i
             words = 0
             link_words = 0
-            while j < n and blocks[j].tag == "li" and not _in_chrome(blocks[j]):
+            while j < n and blocks[j].tag == "li" and not in_chrome[j]:
                 words += blocks[j].n_words
                 link_words += blocks[j].n_link_words
                 j += 1
             ld = link_words / words if words else 1.0
-            keep = ld <= 0.35 and (words >= 8 or _in_main(b))
+            keep = ld <= 0.35 and (words >= 8 or in_main[i])
             for k in range(i, j):
                 blocks[k].is_content = keep
             i = j
@@ -764,7 +788,7 @@ def classify_blocks(blocks: list[Block]) -> None:
     # (within the following 3 blocks; captions/images look both ways).
     for i, b in enumerate(blocks):
         if b.tag in HEADER_TAGS or b.tag in ("figcaption", "img"):
-            if _in_chrome(b):
+            if in_chrome[i]:
                 continue
             window = blocks[i + 1 : i + 4] if b.tag in HEADER_TAGS else \
                 blocks[max(0, i - 2) : i + 3]

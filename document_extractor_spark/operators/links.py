@@ -134,7 +134,14 @@ def _power_iterate(scores: DataFrame, step, col: str, iterations: int,
     ``iterations``). ``tol=0`` skips that job entirely. When a
     ``stats`` dict is passed, the executed round count and final delta
     are recorded in it (run observability, mirroring
-    ``duplicate_clusters``' counters)."""
+    ``duplicate_clusters``' counters).
+
+    Scores are not bit-reproducible: every round's float sums run in
+    the order Spark's shuffle delivers rows, which changes with the
+    partition count and from run to run, so the last bits of a score
+    (and of ``l1_delta``) can differ, by up to 2.2e-16 in observed
+    repeats. ``tests/test_links.py`` pins the bound at 1e-12 across
+    shuffle partition counts; compare ranker output with a tolerance."""
     if stats is None:
         stats = {}
     stats["iterations"] = 0
@@ -270,7 +277,10 @@ def hits(edges: DataFrame, iterations: int = 30,
     groupBys on host-scale keys; the normalizers are 1-row driver
     aggregates. The rounds run in :func:`_power_iterate` on the hub
     vector (early exit on its L1 delta); each round's authority vector
-    is checkpointed beside it, never joined into the loop state."""
+    is checkpointed beside it, never joined into the loop state. Like
+    every ranker here, the scores repeat to 1e-12, not bit for bit:
+    the sums follow the run-time shuffle order (see
+    :func:`_power_iterate`)."""
     e, verts = _rank_graph(edges, src_col, dst_col, weight_col)
     n = verts.count()
     if n == 0:

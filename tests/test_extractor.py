@@ -728,3 +728,83 @@ def test_image_type_classification():
     res = extract_html(html)
     img = [it for it in res.items if it.type == "image"][0]
     assert img.image_type == "chart"
+
+
+# ---------------------------------------------------------------------------
+# Whitespace the flattener does not collapse: NBSP, U+2003, U+3000, NEL and
+# the \x1c-\x1f separators stay in the text, but ``str.split`` (word
+# counts) and ``str.strip`` (block edges) treat them as whitespace.
+# ---------------------------------------------------------------------------
+
+_ODD_WS = "\xa0\u2003\u3000\x85\x1c\x1d\x1e\x1f"
+
+
+@pytest.mark.parametrize("html, text, n_words, n_link_words", [
+    # one fragment
+    (f"<p>{_ODD_WS}one{_ODD_WS}two \xa0 three{_ODD_WS}</p>",
+     f"one{_ODD_WS}two \xa0 three", 3, 0),
+    # several fragments
+    (f"<p>{_ODD_WS}one <b>two{_ODD_WS}three</b>{_ODD_WS}four "
+     f"<a href=/x>five\u3000six</a>{_ODD_WS}</p>",
+     f"one two{_ODD_WS}three{_ODD_WS}four five\u3000six", 6, 2),
+    # <pre> keeps everything but its edge newlines
+    (f"<pre>{_ODD_WS}one{_ODD_WS}two\n  three{_ODD_WS}</pre>",
+     f"{_ODD_WS}one{_ODD_WS}two\n  three{_ODD_WS}", 3, 0),
+    # table cells
+    (f"<table><tr><td>{_ODD_WS}one{_ODD_WS}two</td>"
+     f"<td>a\x85b <i>c\u2003d</i>{_ODD_WS}</td></tr></table>",
+     f"one{_ODD_WS}two\ta\x85b c\u2003d", 6, 0),
+])
+def test_odd_whitespace_kept_in_text_but_splits_words(html, text, n_words,
+                                                      n_link_words):
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    (b,) = flatten(html).blocks
+    assert (b.text, b.n_words, b.n_link_words) == (text, n_words,
+                                                   n_link_words)
+    if b.tag == "table":
+        assert b.table_grid == [text.split("\t")]
+
+
+def test_entities_kept_raw_in_text_after_the_last_tag():
+    """Entities are decoded in text runs that end at a tag; the run after
+    the last tag of a page (a truncated page) is kept as it stands."""
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    raw = flatten("<p>a</p>Tom &amp; Jerry").blocks
+    assert [(b.tag, b.text, b.n_words) for b in raw] == [
+        ("p", "a", 1), ("body", "Tom &amp; Jerry", 3)]
+    decoded = flatten("<p>a</p>Tom &amp; Jerry<br>").blocks
+    assert decoded[1].text == "Tom & Jerry"
+
+
+def test_inline_tag_opened_in_a_table_outlives_the_table():
+    """Inside a table every start tag is pushed on the open-tag stack, so
+    an inline tag left open there stays an ancestor of what follows once
+    an outer end tag has popped the table itself."""
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    fl = flatten("<div><table><tr><td></div><span>x</td></table><p>y</p>z")
+    assert [(b.tag, b.ancestors, b.text) for b in fl.blocks] == [
+        ("table", ("span",), "x"), ("p", ("span",), "y"),
+        ("body", (), "z")]
+    # column-count counts on any structural start tag, <body> included
+    assert flatten('<body style="column-count:3"><p>a</p>').columns == 3
+
+
+def test_text_run_of_invalid_char_refs_is_no_fragment():
+    """``&#5;`` decodes to nothing: the empty run is no fragment, so it
+    neither makes a block nor keeps the next image inline."""
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    def blocks(html):
+        return [(b.tag, b.text, b.n_words, b.table_grid)
+                for b in flatten(html).blocks]
+
+    assert blocks("<p>x</p>&#5;<p>y</p>") == [
+        ("p", "x", 1, None), ("p", "y", 1, None)]
+    assert blocks("<p>&#5;</p>") == []
+    assert blocks("<p>a<b>&#5;</b></p><img src=i.png>") == [
+        ("p", "a", 1, None), ("img", "", 0, None)]
+    assert blocks("<table><tr><td>&#5;</td><td>&#1;x</td></tr></table>") \
+        == [("table", "\tx", 1, [["", "x"]])]

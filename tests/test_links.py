@@ -505,6 +505,45 @@ def test_rankers_drop_hostile_edge_weights(spark, ranker):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+
+def test_ranker_output_bound_across_shuffle_partitions(spark):
+    """Rank sums follow the shuffle order Spark picks at run time, so
+    ranker output is not bit-reproducible; it is reproducible to 1e-12.
+    The same graph at 1 and 7 shuffle partitions stays inside that."""
+    import random
+
+    from document_extractor_spark.operators.links import hits, pagerank
+
+    rnd = random.Random(7)
+    hosts = [f"h{i:02d}" for i in range(40)]
+    edges = sorted({(rnd.choice(hosts), rnd.choice(hosts),
+                     float(rnd.randint(1, 9))) for _ in range(160)})
+    df = spark.createDataFrame(
+        edges, "src_host string, dst_host string, n_links double")
+
+    def scores():
+        pr = {r["host"]: (r["pagerank"],) for r in
+              pagerank(df, iterations=4, tol=0).collect()}
+        hi = {r["host"]: (r["hub"], r["authority"]) for r in
+              hits(df, iterations=4, tol=0).collect()}
+        return pr, hi
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        runs = []
+        for parts in ("1", "7"):
+            spark.conf.set(key, parts)
+            runs.append(scores())
+    finally:
+        spark.conf.set(key, old)
+    assert spark.conf.get(key) == old
+    for one, seven in zip(*runs):
+        assert set(one) == set(seven) and len(one) > 30
+        diff = max(abs(x - y) for h in one
+                   for x, y in zip(one[h], seven[h]))
+        assert diff <= 1e-12, diff
+
 # --- triangle counting -------------------------------------------------------
 
 from document_extractor_spark.operators.links import triangle_counts
