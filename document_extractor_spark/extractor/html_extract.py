@@ -582,6 +582,13 @@ class _Flattener:
                         if not pre:
                             kind = "txt"
                     pop_to(tag)
+        if tdepth:
+            # a table still open at the end of the page (a truncated
+            # page) closes as if its `</table>` tags followed
+            while tdepth:
+                tdepth -= 1
+                pop_to("table")
+            self._emit_table(tstart, n, grid, twords, tlink_words)
         if frags:
             flush()
 

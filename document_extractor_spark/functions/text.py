@@ -67,6 +67,27 @@ def content_hash(col) -> Column:
     return F.md5(normalized_text(col).cast("binary"))
 
 
+def md5_of(*parts) -> Column:
+    """The engine's one seeded hash: lowercase-hex md5 of the string
+    concat of ``parts`` in order — a ``str`` part is a literal seed, a
+    Column part is cast to string. A NULL part gives NULL (``concat``
+    semantics). Every sample, shard, split, bucket and tie-break draw
+    starts here. Oracle twin: ``md5(seed || CAST(col AS VARCHAR))``."""
+    cols = [F.lit(p) if isinstance(p, str) else p.cast("string")
+            for p in parts]
+    return F.md5(cols[0] if len(cols) == 1 else F.concat(*cols))
+
+
+def hex_int(hex_col, n_hex: int, start=1, cast: str = "bigint") -> Column:
+    """``n_hex`` hex digits of ``hex_col`` from 1-based ``start`` as a
+    non-negative integer, cast to ``cast``. At most 15 digits (60 bits),
+    so the value never wraps past BIGINT. Oracle twin:
+    ``('0x' || substr(h, start, n_hex))::UBIGINT``."""
+    if not 1 <= n_hex <= 15:
+        raise ValueError(f"n_hex must be in 1..15, got {n_hex}")
+    return F.conv(F.substring(hex_col, start, n_hex), 16, 10).cast(cast)
+
+
 def punct_ratio(col) -> Column:
     """Punctuation chars / total chars (0 for empty).
     Oracle twin mirrors the same regexp + nullif guard."""

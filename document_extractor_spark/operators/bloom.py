@@ -40,7 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import content_hash
+from ..functions.text import content_hash, hex_int
 
 
 def _probe_positions(hex_fps, num_bits: int) -> np.ndarray:
@@ -67,8 +67,7 @@ def build_fingerprint_bloom(known: DataFrame,
         raise ValueError("num_bits must be a positive multiple of 8")
     fp = F.col(fingerprint_col)
     pos = known.where(fp.isNotNull()).select(F.explode(F.array(*(
-        F.pmod(F.conv(F.substring(fp, 1 + 8 * w, 8), 16, 10)
-               .cast("bigint"), F.lit(num_bits))
+        F.pmod(hex_int(fp, 8, 1 + 8 * w), F.lit(num_bits))
         for w in range(4)))).alias("p"))
     offset = F.col("p").bitwiseAND((1 << _BUCKET_BITS) - 1)
     buckets = pos.groupBy(F.shiftright("p", _BUCKET_BITS).alias("b")).agg(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import hex_int, md5_of
+
 #: hex chars of the gram hash used for the boundary draw — 48 bits
 _HEX = 12
 
@@ -50,10 +52,8 @@ def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
     L = F.length(t)
 
     def is_cut(i):
-        gram_h = F.md5(F.substring(t, i, F.lit(w)))
-        return F.pmod(
-            F.conv(F.substring(gram_h, 1, _HEX), 16, 10).cast("bigint"),
-            F.lit(divisor)) == 0
+        gram_h = md5_of(F.substring(t, i, F.lit(w)))
+        return F.pmod(hex_int(gram_h, _HEX), F.lit(divisor)) == 0
 
     positions = F.when(
         L >= w,

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import hex_int, md5_of
+
 #: hex chars of md5 used per bucket draw — 48 bits, exact in a double
 #: and in BIGINT arithmetic in both engines
 _HEX = 12
@@ -38,9 +40,7 @@ _HEX = 12
 def _bucket(col, row_i: int, width: int):
     """Row-``row_i`` bucket of ``col``: md5 of the row-salted value,
     first 48 bits mod width — byte-identical in DuckDB."""
-    h = F.md5(F.concat(F.lit(f"{row_i}:"), col))
-    return F.pmod(F.conv(F.substring(h, 1, _HEX), 16, 10).cast("bigint"),
-                  F.lit(width))
+    return F.pmod(hex_int(md5_of(f"{row_i}:", col), _HEX), F.lit(width))
 
 
 def count_min_build(df: DataFrame, value_col: str, depth: int = 4,

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_df, token_count
+from ..functions.text import hex_int, md5_of, shingles_df, token_count
 
 # ---------------------------------------------------------------------------
 # Benchmark decontamination (n-gram overlap, GPT-3/PaLM-style 13-gram rule)
@@ -175,8 +175,7 @@ def sample_mix(docs: DataFrame, weights: dict, key_col: str = "doc_id",
     (the DuckDB oracle evaluates the same md5 comparison), which is what
     a reproducible training-data mix requires. Narrow filter; no
     shuffle."""
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+    h = F.substring(md5_of(seed, F.col(key_col)), 1, 8)
     cond = F.lit(False)
     for src, w in weights.items():
         cond = cond | (
@@ -207,8 +206,7 @@ def sample_mix_table(docs: DataFrame, weights: DataFrame,
             10, 16), 8, "0"))
     w = weights.select(F.col(source_col).alias("_mix_src"),
                        F.lower(thr).alias("_mix_thr"))
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+    h = F.substring(md5_of(seed, F.col(key_col)), 1, 8)
     return (
         docs.join(F.broadcast(w), docs[source_col] == F.col("_mix_src"))
         .filter(h < F.col("_mix_thr"))
@@ -254,12 +252,8 @@ def weighted_sample(docs: DataFrame, k: int, weight_col: str,
                     F.col(weight_col).cast("double").alias("_es_w"))
         .where(F.col("_es_w") > 0)
     )
-    u = (
-        (F.conv(F.substring(
-            F.md5(F.concat(F.lit(seed),
-                           F.col("_es_key").cast("string"))), 1, 15),
-            16, 10).cast("bigint") + F.lit(1)).cast("double")
-        / F.lit(float(2 ** 60)))
+    u = ((hex_int(md5_of(seed, F.col("_es_key")), 15) + F.lit(1))
+         .cast("double") / F.lit(float(2 ** 60)))
     picked = (
         narrow.withColumn("_es_o", F.log(u) / F.col("_es_w"))
         .orderBy(F.col("_es_o").desc(), F.col("_es_key").asc())
@@ -543,8 +537,7 @@ def cap_per_host(docs: DataFrame, k: int, url_col: str = "url",
                          F.col(key_col).alias("_key"),
                          qual.alias("_q"))
     w = Window.partitionBy("_host").orderBy(
-        F.col("_q").desc_nulls_last(),
-        F.md5(F.col("_key").cast("string")))
+        F.col("_q").desc_nulls_last(), md5_of(F.col("_key")))
     ranked = (
         narrow.where(F.col("_host").isNotNull())
         .select("_key", F.row_number().over(w).alias("host_rank"))
@@ -588,10 +581,8 @@ def shuffle_shards(docs: DataFrame, n_shards: int = 1024,
     emits one reproducibly-ordered file set per shard."""
     from pyspark.sql import Window
 
-    h = F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string")))
-    shard = F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"),
-        F.lit(n_shards)).cast("int")
+    h = md5_of(seed, F.col(key_col))
+    shard = F.pmod(hex_int(h, 8), F.lit(n_shards)).cast("int")
     w = Window.partitionBy("shard").orderBy("_shuf_h", key_col)
     rn = F.row_number().over(w) - 1
     # woven into the live shard_pos expression (guard.isNull() is TRUE
@@ -778,7 +769,7 @@ def stratified_sample(docs: DataFrame, group_col: str, k: int,
     hash (ties impossible: the hash input embeds the unique key). At
     100 TB the caveat is a mega-group serializing its own sort — the
     same bound as every per-host window in this repo; k rows ship on."""
-    h = F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string")))
+    h = md5_of(seed, F.col(key_col))
     from pyspark.sql import Window
 
     w = Window.partitionBy(group_col).orderBy(h.asc())
@@ -815,8 +806,7 @@ def assign_splits(docs: DataFrame, splits: dict | None = None,
         raise ValueError(f"negative split fraction: {splits}")
     if sum(splits.values()) > 1.0 + 1e-9:
         raise ValueError(f"split fractions sum past 1: {splits}")
-    h = F.substring(
-        F.md5(F.concat(F.lit(seed), F.col(key_col).cast("string"))), 1, 8)
+    h = F.substring(md5_of(seed, F.col(key_col)), 1, 8)
     expr = F.lit(None).cast("string")
     cum = 0.0
     bounds = []

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import hex_int, md5_of, tokens
 
 #: fixed-point scale for per-bucket log ratios (nano-nats), lm.py NANO.
 NANO = 1_000_000_000
@@ -84,10 +84,8 @@ def _bucket_occurrences(df: DataFrame, id_col: str, text_col: str,
             ),
         ),
     ).drop("_tk")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("_f")), 1, 8), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    ).alias("bucket")
+    bucket = F.pmod(hex_int(md5_of(F.col("_f")), 8),
+                    F.lit(n_buckets)).alias("bucket")
     return (
         d.select(F.col(id_col), F.explode_outer("_fs").alias("_f"))
         .where(F.col("_f").isNotNull())
@@ -176,7 +174,7 @@ def dsir_select(docs: DataFrame, target: DataFrame, k: int,
         raise ValueError(f"k must be >= 1, got {k}")
     s = dsir_scores(docs, target, id_col=id_col, text_col=text_col,
                     n_buckets=n_buckets)
-    tie = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    tie = md5_of(seed, F.col(id_col))
     return (
         s.orderBy(F.col("log_w_nano").desc_nulls_last(), tie)
         .limit(k)

@@ -45,6 +45,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import hex_int, md5_of
+
 #: number of registers (power of two; 6 bucket bits)
 M = 64
 #: rank cap — keeps S = sum(2^(CAP - rank)) and the estimator numerator
@@ -71,14 +73,13 @@ def bucket_rank_projection(df: DataFrame, key_col: str,
     # expression into multiple consumers)
     hashed = (df.where(F.col(value_col).isNotNull())
                 .select(F.col(key_col).alias("key"),
-                        F.md5(F.col(value_col).cast("string")).alias("h")))
+                        md5_of(F.col(value_col)).alias("h")))
     # bucket: first 8 hash bits mod M (256 % 64 == 0 → uniform);
     # rank from the NEXT 48 bits via string leading-zero math —
     # no float log anywhere
     staged = hashed.select(
         "key",
-        (F.conv(F.substring("h", 1, 2), 16, 10).cast("int") % M)
-        .alias("bucket"),
+        (hex_int("h", 2, cast="int") % M).alias("bucket"),
         F.regexp_replace(F.substring("h", 3, 12), "^0+", "")
         .alias("stripped"))
     lz_hex = F.lit(12) - F.length("stripped")

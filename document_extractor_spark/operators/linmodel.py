@@ -33,7 +33,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from document_extractor_spark.functions.text import tokens
+from document_extractor_spark.functions.text import hex_int, md5_of, tokens
 
 #: a weight vector is model metadata inlined into the plan, not data;
 #: bigger models go through a broadcast-join seam, not this literal
@@ -68,8 +68,7 @@ def bucket_of(feature: str, dim: int) -> int:
 
 
 def _bucket(col: Column, dim: int) -> Column:
-    return (F.conv(F.substring(F.md5(col), 1, _HEX), 16, 10)
-            .cast("bigint") % dim).cast("int")
+    return (hex_int(md5_of(col), _HEX) % dim).cast("int")
 
 
 def _features(text_col: str, bigrams: bool) -> Column:
@@ -118,9 +117,7 @@ def hashed_linear_score(df: DataFrame, weights_milli,
     wtab = F.lit(_weight_table(w))
 
     def lookup(t: Column) -> Column:
-        return (F.conv(F.substring(wtab, _bucket(t, dim) * _W_HEX + 1,
-                                   _W_HEX), 16, 10)
-                .cast("bigint") - _W_OFF)
+        return hex_int(wtab, _W_HEX, _bucket(t, dim) * _W_HEX + 1) - _W_OFF
 
     # ONE fold builds (count, score) together; the three output columns
     # are field reads off the identical struct subtree, which codegen's

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import md5_of, tokens
 from .curation import mix_threshold_hex
 
 #: fixed-point scale for per-bigram negative log-likelihood (nano-nats).
@@ -215,8 +215,7 @@ def perplexity_bucket_assignments(df: DataFrame, id_col: str = "doc_id",
 
     fit = s
     if sample_frac < 1.0:
-        h = F.substring(
-            F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string"))), 1, 8)
+        h = F.substring(md5_of(seed, F.col(id_col)), 1, 8)
         fit = s.where(h < F.lit(mix_threshold_hex(sample_frac)))
     w = Window.partitionBy("lang").orderBy("score", id_col)
     ranked = fit.select(

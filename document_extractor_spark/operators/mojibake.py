@@ -37,7 +37,7 @@ repair is a byte-identical inverse on real corpus text.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # The 27 cp1252 codepoints that occupy the 0x80-0x9F byte range
@@ -54,14 +54,6 @@ for _b in range(0x80, 0xA0):
 
 # Every char ≤ U+00FF ⇔ encode(_, 'ISO-8859-1') is lossless.
 _LATIN1_ONLY = "^[\\x00-\\xff]*$"
-
-
-def _reconstructed_bytes(col: Column) -> Column:
-    """Byte stream the text WOULD have been before the cp1252/Latin-1
-    mis-decode: undo the cp1252 control-range shadowing, then encode
-    each ≤U+00FF codepoint back to its byte."""
-    return F.encode(
-        F.translate(col, _CP1252_PRINTABLE, _C1_CONTROLS), "ISO-8859-1")
 
 
 def fix_mojibake(df: DataFrame, text_col: str = "text",

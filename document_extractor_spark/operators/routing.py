@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_of
+
 #: key/shard domain separator in the scored hash — keeps ("ab","c")
 #: and ("a","bc") from colliding
 _SEP = "\x1f"
@@ -49,8 +51,7 @@ def rendezvous_assign(df: DataFrame, key_col: str, shards,
     scored = F.transform(
         F.array(*[F.lit(s) for s in sorted(shard_list)]),
         lambda s: F.struct(
-            F.md5(F.concat(F.col(key_col).cast("string"),
-                           F.lit(_SEP), s)).alias("w"),
+            md5_of(F.col(key_col), _SEP, s).alias("w"),
             s.alias("s")))
     return df.withColumn(
         out_col,

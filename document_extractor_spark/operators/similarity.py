@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import md5_of
 from .dedup import _band_pairs
 
 
@@ -323,7 +324,7 @@ def semantic_dedup(df: DataFrame, dim: int, threshold: float = 0.95,
     narrow = df.select(
         F.col(cluster_col).alias("_cl"),
         F.col(id_col).alias("_id"),
-        F.md5(F.col(id_col).cast("string")).alias("_pri"),
+        md5_of(F.col(id_col)).alias("_pri"),
         _l2_normalized(F.col(vec_col)).alias("_v"),
     ).where(F.col("_cl").isNotNull())
     if max_cluster_size is not None:
@@ -398,7 +399,7 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, k: int = 16,
     if dim % m:
         raise ValueError(f"pq_train: dim={dim} not divisible by m={m}")
     rows = (
-        df.select(F.md5(F.col(id_col).cast("string")).alias("_pri"),
+        df.select(md5_of(F.col(id_col)).alias("_pri"),
                   _l2_normalized(F.col(vec_col)).alias("_nv"))
         .where(F.col("_nv").isNotNull())
         .orderBy("_pri").limit(sample_rows).collect()

@@ -31,9 +31,11 @@ identical md5 — cross-engine determinism is the point.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from ..functions.text import hex_int, md5_of
 
 #: hex chars of the hash used as the uniform (0,1) fraction — 48 bits,
 #: exactly representable in a double in BOTH engines
@@ -49,9 +51,23 @@ def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
     ``count(DISTINCT ...)``. Deterministic under any partitioning."""
     if k < 2:
         raise ValueError("k must be at least 2")
+    n = F.size("_ks")
+    est = _kmv_estimate(n, F.element_at("_ks", n), k)
+    return _kmv_sketch(df, F.col(key_col), value_col, k).select(
+        "key",
+        n.cast("int").alias("n_kept"),
+        est.alias("est_distinct"),
+    )
+
+
+def _kmv_sketch(df: DataFrame, key: Column, value_col: str,
+                k: int) -> DataFrame:
+    """``(key, _ks)`` rows: per key, the sorted k minimum md5 hashes of
+    the DISTINCT non-NULL values — partition-local k-min partials (no
+    shuffle of raw values), then one ``groupBy(key)`` merge."""
     hashed = df.select(
-        F.col(key_col).alias("key"),
-        F.md5(F.col(value_col).cast("string")).alias("h"),
+        key.alias("key"),
+        md5_of(F.col(value_col)).alias("h"),
     ).where(F.col("h").isNotNull())
     out_schema = StructType([
         hashed.schema["key"],
@@ -79,22 +95,15 @@ def kmv_distinct(df: DataFrame, key_col: str, value_col: str,
             yield pd.DataFrame({"key": [key] * len(ks), "h": ks})
 
     part = hashed.mapInPandas(_partials, schema=out_schema)
-    merged = part.groupBy("key").agg(
+    return part.groupBy("key").agg(
         F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("_ks"))
-    n = F.size("_ks")
-    est = _kmv_estimate(n, F.element_at("_ks", n), k)
-    return merged.select(
-        "key",
-        n.cast("int").alias("n_kept"),
-        est.alias("est_distinct"),
-    )
 
 
 def _kmv_estimate(n, kth, k):
     """(k-1)/frac(kth-hash) estimator as a Column — exact below k.
     Shared by the per-key sketch above and the set-algebra below so the
     fraction convention can never drift."""
-    frac = (F.conv(F.substring(kth, 1, _FRAC_HEX), 16, 10).cast("double")
+    frac = (hex_int(kth, _FRAC_HEX, cast="double")
             / F.lit(float(16 ** _FRAC_HEX)))
     est = F.when(n < k, n.cast("double")).otherwise(F.lit(k - 1) / frac)
     return F.floor(est).cast("bigint")
@@ -102,26 +111,8 @@ def _kmv_estimate(n, kth, k):
 
 def _global_kmv(df: DataFrame, value_col: str, k: int) -> DataFrame:
     """≤k rows ``(h)``: the k minimum md5 hashes of the column's
-    DISTINCT value set — partition-local k-min partials (no shuffle of
-    raw values), then one metadata-scale global fold."""
-    hashed = df.select(
-        F.md5(F.col(value_col).cast("string")).alias("h"),
-    ).where(F.col("h").isNotNull())
-
-    def _partials(batches):
-        import pandas as pd
-
-        acc: set = set()
-        for pdf in batches:
-            acc.update(pdf["h"])
-            if len(acc) > 4 * k:
-                acc = set(sorted(acc)[:k])
-        yield pd.DataFrame({"h": sorted(acc)[:k]})
-
-    part = hashed.mapInPandas(_partials, schema="h string")
-    return (part.groupBy()
-            .agg(F.slice(F.array_sort(F.collect_set("h")), 1, k)
-                 .alias("_ks"))
+    DISTINCT value set — the keyed sketch under one constant key."""
+    return (_kmv_sketch(df, F.lit(0), value_col, k)
             .select(F.explode("_ks").alias("h")))
 
 

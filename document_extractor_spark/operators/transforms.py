@@ -24,18 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import hex_int, md5_of, tokens
+
 #: hex chars of each md5 draw — 48 bits, exact in BIGINT math
 _HEX = 12
 
 PRE_TOK, SUF_TOK, MID_TOK = "<PRE>", "<SUF>", "<MID>"
-
-
-def _draw(salt: str, id_col, mod):
-    """Uniform integer in [0, mod) from md5(salt ‖ id) — the engine's
-    shared seeded-randomness idiom (cross-engine deterministic)."""
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, _HEX), 16, 10).cast("bigint"), mod)
 
 
 def fim_transform(df: DataFrame, id_col: str = "doc_id",
@@ -52,12 +46,16 @@ def fim_transform(df: DataFrame, id_col: str = "doc_id",
         raise ValueError(f"rate_pct must be in [0, 100]: {rate_pct}")
     if min_chars < 3:
         raise ValueError(f"min_chars must be >= 3: {min_chars}")
-    t = F.col(text_col)
+    t, key = F.col(text_col), F.col(id_col)
     L = F.length(t)
-    selected = (_draw("fim:", id_col, F.lit(100)) < F.lit(int(rate_pct)))
+    # uniform draws in [0, mod) from md5(salt ‖ id)
+    selected = F.pmod(hex_int(md5_of("fim:", key), _HEX),
+                      F.lit(100)) < F.lit(int(rate_pct))
     eligible = t.isNotNull() & (L >= int(min_chars))
-    a = F.lit(1) + _draw("fim1:", id_col, (L - 1).cast("bigint"))
-    b = F.lit(1) + _draw("fim2:", id_col, (L - 1).cast("bigint"))
+    a = F.lit(1) + F.pmod(hex_int(md5_of("fim1:", key), _HEX),
+                          (L - 1).cast("bigint"))
+    b = F.lit(1) + F.pmod(hex_int(md5_of("fim2:", key), _HEX),
+                          (L - 1).cast("bigint"))
     p1, p2 = F.least(a, b), F.greatest(a, b)
     rewritten = F.concat(
         F.lit(PRE_TOK), F.substring(t, 1, p1.cast("int")),
@@ -103,17 +101,12 @@ def span_corruption(df: DataFrame, id_col: str = "doc_id",
     targets."""
     if not 0 <= seed_pct <= 100:
         raise ValueError(f"seed_pct must be in [0, 100]: {seed_pct}")
-    from ..functions.text import tokens
-
     staged = df.withColumn("_t", tokens(F.col(text_col)))
     n = F.size("_t")
 
     def seed(i):
-        h = F.md5(F.concat(F.lit("sc:"), F.col(id_col).cast("string"),
-                           F.lit(":"), i.cast("string")))
-        return F.pmod(
-            F.conv(F.substring(h, 1, 12), 16, 10).cast("bigint"),
-            F.lit(100)) < F.lit(int(seed_pct))
+        h = md5_of("sc:", F.col(id_col), ":", i)
+        return F.pmod(hex_int(h, _HEX), F.lit(100)) < F.lit(int(seed_pct))
 
     idx = F.sequence(F.lit(1), n)
     # masked[i] ⇔ a seed fired at i, i-1, or i-2 (span length 3)

@@ -4,7 +4,8 @@ from pyspark.sql import functions as F
 
 from document_extractor_spark.plans import assert_no_python
 from document_extractor_spark.sources.cdx import (cdx_fetch_plan,
-                                                  cdx_lines_to_captures)
+                                                  cdx_lines_to_captures,
+                                                  read_cdx)
 
 
 def _caps(spark, lines):
@@ -99,3 +100,35 @@ def test_surt_matches_cdx_key_roundtrip(spark):
 def test_surt_plan_jvm_only(spark):
     df = spark.createDataFrame([("https://a.org/x",)], "url string")
     assert_no_python(surt_key(df))
+
+
+def test_read_cdx_types_columns_and_nulls_malformed_lines(spark, tmp_path):
+    path = tmp_path / "index.cdxj"
+    path.write_text("\n".join(
+        [_L1, "org,example)/x 2025 {broken", '{"url": "no key"}',
+         "org,example)/y 20250101120000 {not json}"]) + "\n")
+    df = read_cdx(spark, str(path))
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("surt", "string"), ("ts_raw", "string"),
+        ("capture_ts", "timestamp"), ("url", "string"),
+        ("mime", "string"), ("status", "int"), ("digest", "string"),
+        ("length", "bigint"), ("offset", "bigint"),
+        ("filename", "string")]
+    rows = df.collect()
+    assert len(rows) == 4
+    good = next(r for r in rows if r["url"] is not None).asDict()
+    assert str(good.pop("capture_ts")) == "2025-01-01 12:00:00"
+    assert good == {
+        "surt": "org,example)/a", "ts_raw": "20250101120000",
+        "url": "https://example.org/a", "mime": "text/html", "status": 200,
+        "digest": "sha1:AAA", "length": 100, "offset": 0,
+        "filename": "w1.warc.gz"}
+    bad = [r for r in rows if r["url"] is None]
+    assert len(bad) == 3
+    # a line with a key and timestamp but no valid JSON keeps them
+    assert {(r["surt"], r["ts_raw"]) for r in bad} == {
+        (None, None), ("org,example)/y", "20250101120000")}
+    for r in bad:
+        assert all(r[c] is None for c in (
+            "url", "mime", "status", "digest", "length", "offset",
+            "filename"))

@@ -778,6 +778,23 @@ def test_entities_kept_raw_in_text_after_the_last_tag():
     assert decoded[1].text == "Tom & Jerry"
 
 
+def test_table_open_at_end_of_page_keeps_its_text():
+    """A truncated page ends inside a table: the grid is still emitted,
+    as if its ``</table>`` tags followed, with the html to the end."""
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    page = "<div><p>a</p><table><tr><td>cell text here<td><b>two"
+    blocks = flatten(page).blocks
+    assert [(b.tag, b.ancestors, b.text, b.n_words) for b in blocks] == [
+        ("p", ("div",), "a", 1),
+        ("table", ("div",), "cell text here\ttwo", 4)]
+    assert blocks[1].table_html == page[page.index("<table>"):]
+    assert blocks[1].table_grid == [["cell text here", "two"]]
+    nested = flatten("<table><tr><td>x<table><tr><td>inner").blocks
+    assert [(b.tag, b.ancestors, b.text) for b in nested] == [
+        ("table", (), "x\ninner")]
+
+
 def test_inline_tag_opened_in_a_table_outlives_the_table():
     """Inside a table every start tag is pushed on the open-tag stack, so
     an inline tag left open there stays an ancestor of what follows once

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from document_extractor_spark.operators.extract import extract_pages
 from document_extractor_spark.operators.render import (
     apply_readability_rewrite,
+    concat_pages,
     legacy_projection,
     readability_stats,
     render_html,
@@ -293,3 +294,20 @@ def test_render_markdown_empty_and_null_items(spark):
         "url string, html binary")
     out = render_markdown(extract_pages(df, with_items=True))
     assert out.collect()[0]["markdown"] == ""
+
+
+def test_concat_pages_orders_pages_and_marks_breaks(spark):
+    """H6: per group, page bodies joined in page order (not row order)
+    with one page-break marker between pages, inside one shell."""
+    df = spark.createDataFrame(
+        [("d1", 3, "<p>three</p>"), ("d2", 1, "<p>solo</p>"),
+         ("d1", 1, "<p>one</p>"), ("d1", 2, "<p>two</p>")],
+        "doc string, page_num int, html string").repartition(3)
+    out = {r["doc"]: r["html"] for r in concat_pages(df, "doc").collect()}
+    brk = '\n<div class="page-break"></div>\n'
+    assert out == {
+        "d1": "<html><body>\n<p>one</p>" + brk + "<p>two</p>" + brk
+              + "<p>three</p>\n</body></html>",
+        "d2": "<html><body>\n<p>solo</p>\n</body></html>",
+    }
+    assert_no_python(concat_pages(df, "doc"))
