@@ -249,14 +249,35 @@ def dup_char_fraction(lines: Column) -> Column:
     return F.when(total > 0, dup / total.cast("double")).otherwise(F.lit(0.0))
 
 
-def _winnow_grams(c: Column, k: int) -> Column:
-    n = F.length(c)
+def char_array(col) -> Column:
+    """The characters of ``col`` as an array of one-character strings;
+    ``""`` gives ``[]`` and NULL stays NULL. Split on the empty pattern
+    steps through the bytes by the same UTF-8 lead-byte rule as
+    ``length`` and ``substring``, so ``array_join(slice(chars, i, n),
+    "")`` holds the bytes of ``substring(col, i, n)`` even for a string
+    cast from invalid UTF-8 (a regexp over characters decodes through a
+    Java string and does not). Stage it as its own projection: a slice
+    of a staged array starts at element ``i`` in one step, where
+    ``substring`` walks from character 1 for every call."""
+    c = F.col(col) if isinstance(col, str) else col
+    # every piece holds at least one byte, except the lone piece of ""
+    return F.array_remove(F.split(c, ""), "")
+
+
+def char_gram(chars: Column, i, n) -> Column:
+    """The ``n``-character substring of a :func:`char_array` from 1-based
+    ``i``."""
+    return F.array_join(F.slice(chars, i, n), "")
+
+
+def _winnow_grams(chars: Column, k: int) -> Column:
+    n = F.size(chars)
     # NB: Spark's sequence(1, 0) counts DOWN — short inputs need guards
     return F.when(
         n >= k,
         F.transform(
             F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.md5(c.substr(i, F.lit(k)).cast("binary")),
+            lambda i: F.md5(char_gram(chars, i, F.lit(k)).cast("binary")),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
@@ -285,23 +306,23 @@ def winnow_fingerprints_df(df, text_col: str = "text", k: int = 8,
     GUARANTEED to share a fingerprint — the rolling-hash counterpart to
     whole-document md5 (which only catches exact duplicates).
 
-    Entirely Catalyst: sequence → substr k-grams → md5 → windowed
+    Entirely Catalyst: character array → sliced k-grams → md5 → windowed
     ``array_min`` (lexicographic on the hex, identical in DuckDB) →
     ``array_distinct``. md5-hex is the k-gram hash precisely because the
     oracle engine computes the identical value.
 
-    DataFrame-level BY DESIGN: the normalized text and the gram array
-    must be materialized as columns across staged projections —
-    inlining them into one expression re-evaluates the gram array once
+    DataFrame-level BY DESIGN: the character array of the normalized
+    text and the gram array must be materialized as columns across
+    staged projections — inlining them into one expression re-evaluates the gram array once
     PER WINDOW inside the lambda (measured: 415 s vs 3 s at sf0.01, an
     O(n²·k) blowup). Catalyst's CollapseProject keeps the stages apart
     because merging would duplicate the non-cheap child expressions."""
     staged = (
-        df.withColumn("_wn_norm", normalized_text(text_col))
-        .withColumn("_wn_grams", _winnow_grams(F.col("_wn_norm"), k))
+        df.withColumn("_wn_chars", char_array(normalized_text(text_col)))
+        .withColumn("_wn_grams", _winnow_grams(F.col("_wn_chars"), k))
         .withColumn(out_col, _winnow_mins(F.col("_wn_grams"), w))
     )
-    return staged.drop("_wn_norm", "_wn_grams")
+    return staged.drop("_wn_chars", "_wn_grams")
 
 
 # ---------------------------------------------------------------------------

@@ -9,15 +9,20 @@ that (one insertion shifts every later chunk); shingle sets can't see
 locality. The web-corpus use: re-crawl storage/diff ("this snapshot is
 94% chunk-identical to last month's") and partial-plagiarism detection.
 
-Scale shape — the text NEVER fans out:
-1. boundary positions, chunk spans, and chunk hashes are all computed
-   INSIDE the row with higher-order functions (filter/transform over a
-   position sequence — lazy per-element evaluation, no materialized
-   per-position intermediate);
-2. only the narrow ``(id, start, end, chunk_hash)`` struct array
-   explodes (staged, per the repo explode rule) — ~len/divisor rows of
-   fixed width per document, a fraction of the payload;
-3. downstream overlap joins run on 16-byte hashes.
+Scale shape — the text NEVER fans out, and is read once:
+1. the text becomes a character array (``functions.text.char_array``)
+   in its own projection. Gram ``i`` and every chunk are slices of
+   that array, so a gram costs ``w`` steps. ``substring(text, i, w)``
+   walks from character 1 on every call, which made a text cost O(n²);
+2. the boundary ``ends`` array is a second staged projection, so the
+   boundary filter (an md5 per position) runs once per text — inlined,
+   the optimizer copied it into each of its three uses;
+3. only the narrow ``(id, start, end, chunk_hash)`` struct array
+   explodes — ~len/divisor rows of fixed width per document, a
+   fraction of the payload;
+4. ``cdc_dup_candidates`` is one aggregation per chunk hash (its sorted
+   ids), an explode into id pairs and one count per pair: the chunks
+   are read once and shuffled twice, with no self-join.
 
 Expected chunk length ≈ ``divisor`` chars (boundary probability 1/D
 per position). md5 (not xxhash64) for the DuckDB twin, as everywhere.
@@ -31,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import hex_int, md5_of
+from ..functions.text import char_array, char_gram, hex_int, md5_of
 
 #: hex chars of the gram hash used for the boundary draw — 48 bits
 _HEX = 12
@@ -49,26 +54,29 @@ def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
     if divisor < 2:
         raise ValueError(f"divisor must be >= 2: {divisor}")
     t = F.col(text_col)
-    L = F.length(t)
+    chars = F.col("_cdc_chars")
+    L = F.size(chars)
 
     def is_cut(i):
-        gram_h = md5_of(F.substring(t, i, F.lit(w)))
+        gram_h = md5_of(char_gram(chars, i, F.lit(w)))
         return F.pmod(hex_int(gram_h, _HEX), F.lit(divisor)) == 0
 
     positions = F.when(
         L >= w,
         F.filter(F.sequence(F.lit(1), L - w + 1), is_cut),
     ).otherwise(F.array().cast("array<int>"))
-    ends = F.array_sort(F.array_distinct(F.concat(
-        F.transform(positions, lambda i: i + w - 1),
-        F.array(L),
-    )))
+    ends = F.col("_cdc_ends")
     starts = F.concat(
         F.array(F.lit(1)),
         F.transform(F.slice(ends, 1, F.size(ends) - 1), lambda e: e + 1),
     )
     staged = (
-        df.where(t.isNotNull() & (L > 0))
+        df.where(t.isNotNull() & (F.length(t) > 0))
+        .withColumn("_cdc_chars", char_array(t))
+        .withColumn("_cdc_ends", F.array_sort(F.array_distinct(F.concat(
+            F.transform(positions, lambda i: i + w - 1),
+            F.array(L),
+        ))))
         .withColumn(
             "_spans",
             F.zip_with(
@@ -76,7 +84,7 @@ def cdc_chunks(df: DataFrame, id_col: str = "doc_id",
                 lambda s, e: F.struct(
                     s.cast("int").alias("start"),
                     e.cast("int").alias("end"),
-                    F.md5(F.substring(t, s, e - s + 1))
+                    F.md5(char_gram(chars, s, e - s + 1))
                     .alias("chunk_hash"),
                 ),
             ),
@@ -128,25 +136,33 @@ def cdc_dup_candidates(chunks: DataFrame, id_col: str = "doc_id",
     companion of :func:`chunk_overlap` (which compares PAIRED texts).
 
     Scale guards, same shape as the LSH band join / inverted-index df
-    cap: chunk hashes appearing in fewer than 2 docs pair with nothing
-    and drop BEFORE the self-join; hashes above ``max_chunk_df`` docs
-    are template boilerplate (a site footer chunk would otherwise fan
-    out df² pairs) and drop too — so the join's per-key fan-out is
-    bounded by construction. Only 16-byte hashes and ids move."""
+    cap: chunk hashes appearing in fewer than 2 docs pair with nothing;
+    hashes above ``max_chunk_df`` docs are template boilerplate (a site
+    footer chunk would otherwise fan out df² pairs) and drop too. A
+    NULL id counts toward a hash's df but never pairs; a NULL hash
+    matches nothing.
+
+    One aggregation per hash collects its sorted distinct ids; each id
+    then explodes into the pairs with the larger ids of the same hash,
+    so no in-row array is longer than ``max_chunk_df`` and only ids and
+    16-byte hashes move."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1: {min_shared}")
-    h = chunks.select(F.col(id_col), "chunk_hash").distinct()
-    dfreq = (
-        h.groupBy("chunk_hash").agg(F.count(F.lit(1)).alias("_c"))
-        .where((F.col("_c") >= 2) & (F.col("_c") <= int(max_chunk_df)))
-        .select("chunk_hash")
+    i = F.col(id_col)
+    ids = F.col("_ids")
+    per_hash = (
+        chunks.where(F.col("chunk_hash").isNotNull())
+        .groupBy("chunk_hash")
+        .agg(F.array_sort(F.collect_set(i)).alias("_ids"),
+             F.bool_or(i.isNull()).alias("_null_id"))
+        .where((F.size(ids) + F.col("_null_id").cast("int"))
+               .between(2, int(max_chunk_df)))
     )
-    kept = h.join(dfreq, "chunk_hash")
-    a = kept.select("chunk_hash", F.col(id_col).alias("id_a"))
-    b = kept.select("chunk_hash", F.col(id_col).alias("id_b"))
     return (
-        a.join(b, "chunk_hash")
-        .where(F.col("id_a") < F.col("id_b"))
+        per_hash.select(F.posexplode(ids).alias("_p", "id_a"), ids)
+        .select("id_a",
+                F.explode(F.slice(ids, F.col("_p") + 2, F.size(ids)))
+                .alias("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .where(F.col("n_shared") >= int(min_shared))
