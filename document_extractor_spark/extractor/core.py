@@ -3,25 +3,26 @@ north-star output record.
 
 ``extract_payload`` is the single function the Spark layer vectorizes —
 it discriminates HTML vs PDF by magic bytes (FIXTURES.md §1: PDF payloads
-ride in the same ``html`` binary column) and returns a plain dict with
-stable key order, ready for Arrow serialization.
+ride in the same ``html`` binary column), runs ``extract_pdf`` or
+``extract_html`` (both return an ``ExtractResult`` of ``Item``s) and
+returns a plain dict with stable key order, ready for Arrow
+serialization.
 
 Output record (north-star schema + lineage counters):
   url, extracted_text, spans[(start,end,type)], lang, parse_error,
   n_blocks, n_bytes_in, n_bytes_out
+plus, opt-in, ``content_items`` (one dict per ``Item``, its fields in
+declaration order) and ``layout``.
 """
 
 from __future__ import annotations
 
+from dataclasses import fields
 from typing import Optional
 
-from .html_extract import ExtractResult, extract_html
+from .html_extract import ExtractResult, Item, extract_html
 from .langid import detect_lang
 from .pdf_extract import extract_pdf, is_pdf
-
-# Span types emitted for PDF items map onto the same enum as HTML items.
-_PDF_TYPE_MAP = {"header": "header", "paragraph": "paragraph",
-                 "table": "table"}
 
 # Bytes that essentially never occur in text of any encoding: NUL..BS,
 # SO..US minus the \t\n\r\f\v whitespace family. >10% of the head being
@@ -46,31 +47,12 @@ _EMPTY_LAYOUT = {"columns": 1, "has_header": False, "has_footer": False,
                  "margin_top_percent": None, "margin_bottom_percent": None,
                  "margin_left_percent": None, "margin_right_percent": None}
 
-
-def _item_dict(order, typ, content, html=None, level=0, row_count=0,
-               column_count=0, converted_from_kv=False, src=None,
-               image_type=None, bold=False, italic=False, underline=False,
-               alignment=None, list_type=None, font_size=None,
-               position=None) -> dict:
-    return {
-        "order": order, "type": typ, "content": content, "html": html,
-        "level": int(level), "row_count": int(row_count),
-        "column_count": int(column_count),
-        "converted_from_kv": bool(converted_from_kv),
-        "src": src, "image_type": image_type,
-        "bold": bool(bold), "italic": bool(italic),
-        "underline": bool(underline), "alignment": alignment,
-        "list_type": list_type,
-        "font_size": float(font_size) if font_size is not None else None,
-        # {x_start, y_start, x_end, y_end} page percentages
-        # (openai_content_extractor.py:167-173); PDF items carry real
-        # line/column extents, HTML items a reading-order substitute
-        "position": position,
-    }
+_ITEM_FIELDS = tuple(f.name for f in fields(Item))
 
 
 def _html_position(start: int, end: int, total: int) -> Optional[dict]:
-    """Reading-order position substitute for HTML items: web pages carry
+    """Reading-order position substitute for items without one (HTML
+    items; PDF items carry real line/column extents): web pages carry
     no pixel geometry, so y pct = character-offset pct of the assembled
     text (span start/end) and x spans the full width — keeps the
     reference's position schema (openai_content_extractor.py:167-173)
@@ -96,101 +78,42 @@ def extract_payload(payload: Optional[bytes], url: str = "",
     ``openai_content_extractor.py:158-200``) for the rendering operators;
     the default hot-path record stays lean (north-star schema only).
     ``include_layout`` adds the page layout struct {columns, has_header,
-    has_footer} (openai_content_extractor.py:190-199); ``emit_chrome``
+    has_footer, margin_*_percent} (openai_content_extractor.py:190-199),
+    defaults filled in from ``_EMPTY_LAYOUT``; ``emit_chrome``
     surfaces header/footer chrome as typed page_header/page_footer items."""
     n_in = len(payload) if payload is not None else 0
-    layout = dict(_EMPTY_LAYOUT) if include_layout else None
     if payload is None or len(payload) == 0:
-        return _record(url, "", [], lang_hint or "und", "EmptyPayload", 0,
-                       n_in, [] if include_items else None, layout)
-    if _looks_binary(payload):
+        res = ExtractResult(error="EmptyPayload")
+    elif _looks_binary(payload):
         # non-text payload that is not a recognized format: surface as a
         # parse failure rather than emitting mojibake "text" — keeps the
         # A4 run counters honest about corrupt inputs
-        return _record(url, "", [], lang_hint or "und", "BinaryPayload", 0,
-                       n_in, [] if include_items else None, layout)
-    if is_pdf(payload):
-        pr = extract_pdf(payload)
-        if pr.error is not None:
-            return _record(url, "", [], lang_hint or "und", pr.error, 0,
-                           n_in, [] if include_items else None, layout)
-        spans = []
-        items = [] if include_items else None
-        pos = 0
-        first = True
-        for it in pr.items:
-            txt = it["text"]
-            if not txt:
-                continue
-            if not first:
-                pos += 2
-            first = False
-            btype = _PDF_TYPE_MAP.get(it["type"], "paragraph")
-            spans.append((pos, pos + len(txt), btype))
-            if include_items:
-                items.append(_item_dict(
-                    len(items), btype, txt, html=it["html"],
-                    level=1 if btype == "header" else 0,
-                    row_count=it["rows"], column_count=it["cols"],
-                    font_size=it["size"], position=it["pos"],
-                ))
-            pos += len(txt)
-        lang = lang_hint or detect_lang(pr.text)
-        if include_layout:
-            layout = {**_EMPTY_LAYOUT, "columns": int(pr.max_columns),
-                      **(pr.margins or {})}
-        return _record(url, pr.text, spans, lang, None, len(pr.items), n_in,
-                       items, layout)
-    res: ExtractResult = extract_html(bytes(payload), emit_chrome=emit_chrome)
-    if res.error is not None:
-        return _record(url, "", [], lang_hint or "und", res.error, 0, n_in,
-                       [] if include_items else None, layout)
-    lang = lang_hint or detect_lang(res.text)
-    items = None
-    if include_items:
-        total = len(res.text)
-        items = [
-            _item_dict(it.order, it.type, it.content, html=it.html,
-                       level=it.level, row_count=it.row_count,
-                       column_count=it.column_count,
-                       converted_from_kv=it.converted_from_kv, src=it.src,
-                       image_type=it.image_type,
-                       bold=it.bold, italic=it.italic,
-                       underline=it.underline, alignment=it.alignment,
-                       list_type=it.list_type, font_size=it.font_size,
-                       # assemble() emits spans 1:1 with items, in order
-                       position=_html_position(res.spans[i][0],
-                                               res.spans[i][1], total)
-                       if i < len(res.spans) else None)
-            for i, it in enumerate(res.items)
-        ]
-    if include_layout:
-        layout = {
-            **_EMPTY_LAYOUT,
-            "columns": int(res.layout.get("columns", 1)),
-            "has_header": bool(res.layout.get("has_header", False)),
-            "has_footer": bool(res.layout.get("has_footer", False)),
-        }
-    return _record(url, res.text, res.spans, lang, None, len(res.items),
-                   n_in, items, layout)
-
-
-def _record(url, text, spans, lang, error, n_blocks, n_in, items=None,
-            layout=None) -> dict:
+        res = ExtractResult(error="BinaryPayload")
+    elif is_pdf(payload):
+        res = extract_pdf(payload)
+    else:
+        res = extract_html(bytes(payload), emit_chrome=emit_chrome)
+    # an error result carries no text, spans, items or layout
+    lang = lang_hint or ("und" if res.error else detect_lang(res.text))
     rec = {
         "url": url,
-        "extracted_text": text,
-        "spans": [
-            {"start": int(s), "end": int(e), "type": t} for s, e, t in spans
-        ],
+        "extracted_text": res.text,
+        "spans": [{"start": s, "end": e, "type": t} for s, e, t in res.spans],
         "lang": lang,
-        "parse_error": error,
-        "n_blocks": int(n_blocks),
-        "n_bytes_in": int(n_in),
-        "n_bytes_out": len(text.encode("utf-8")),
+        "parse_error": res.error,
+        "n_blocks": len(res.items),
+        "n_bytes_in": n_in,
+        "n_bytes_out": len(res.text.encode("utf-8")),
     }
-    if items is not None:
-        rec["content_items"] = items
-    if layout is not None:
-        rec["layout"] = layout
+    if include_items:
+        total = len(res.text)
+        rec["content_items"] = items = []
+        # assemble() emits spans 1:1 with items, in order
+        for it, (start, end, _) in zip(res.items, res.spans, strict=True):
+            item = {f: getattr(it, f) for f in _ITEM_FIELDS}
+            if it.position is None:
+                item["position"] = _html_position(start, end, total)
+            items.append(item)
+    if include_layout:
+        rec["layout"] = {**_EMPTY_LAYOUT, **res.layout}
     return rec

@@ -136,6 +136,9 @@ class Item:
     alignment: Optional[str] = None   # text-align of the owning block
     list_type: Optional[str] = None   # lists: 'ordered' | 'unordered'
     font_size: Optional[float] = None  # PDF items: run font size (pt)
+    # PDF items: {x_start, y_start, x_end, y_end} page percentages
+    # (openai_content_extractor.py:167-173); None on HTML items
+    position: Optional[dict] = None
 
 
 @dataclass
@@ -972,6 +975,21 @@ _TBODY_ROWS_RE = re.compile(r"<tr[\s\S]*?</tr\s*>", re.IGNORECASE)
 _TABLE_CLOSE_RE = re.compile(r"</table\s*>\s*$", re.IGNORECASE)
 
 
+def splice_table_rows(parent: Optional[str],
+                      cont: Optional[str]) -> Optional[str]:
+    """``parent`` with ``cont``'s ``<tr>`` rows inserted before its closing
+    ``</table>``; None when either is empty, ``cont`` has no row or
+    ``parent`` does not end its table. The rows go in verbatim (a cell's
+    backslashes are text, not a substitution template)."""
+    if not parent or not cont:
+        return None
+    rows = _TBODY_ROWS_RE.findall(cont)
+    close = _TABLE_CLOSE_RE.search(parent)
+    if not rows or close is None:
+        return None
+    return parent[:close.start()] + "".join(rows) + "</table>"
+
+
 def fix_adjacent_tables(items: list[Item]) -> list[Item]:
     """R3 — content_structure_fixer.py:120-177: merge two consecutive table
     items (HTML adjacency replaces the reference's <5%-vertical-gap rule,
@@ -983,16 +1001,12 @@ def fix_adjacent_tables(items: list[Item]) -> list[Item]:
             out
             and it.type == T_TABLE
             and out[-1].type == T_TABLE
-            and out[-1].html
-            and it.html
             and out[-1].column_count == it.column_count
         ):
             prev = out[-1]
-            rows = _TBODY_ROWS_RE.findall(it.html)
-            if rows and _TABLE_CLOSE_RE.search(prev.html):
-                prev.html = _TABLE_CLOSE_RE.sub(
-                    "".join(rows) + "</table>", prev.html
-                )
+            html = splice_table_rows(prev.html, it.html)
+            if html is not None:
+                prev.html = html
                 prev.content = prev.content + "\n" + it.content
                 prev.row_count += it.row_count
                 continue

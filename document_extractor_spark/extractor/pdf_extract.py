@@ -16,15 +16,22 @@ Supported subset (closed — our fixture generator only emits this):
 - strings: literal ``(…)`` with escapes + octal, hex ``<…>``
 - encodings: latin-1-ish one-byte text (fixture fonts are standard 14)
 
-Pure function of the input bytes; never raises (errors → PdfResult.error).
+The result is the HTML path's ``ExtractResult`` of ``Item``s: header,
+paragraph and table items in reading order, each with its ``position``
+bbox, text and spans from ``html_extract.assemble``, and a layout of
+``columns`` plus text-extent ``margin_*_percent``. Pure function of the
+input bytes; never raises (errors → ``ExtractResult.error``).
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from html import escape
 from typing import Optional
+
+from .html_extract import ExtractResult, Item, assemble
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
@@ -47,19 +54,6 @@ class TextRun:
     y: float
     size: float
     text: str
-
-
-@dataclass
-class PdfResult:
-    text: str = ""
-    n_pages: int = 0
-    page_texts: list = field(default_factory=list)
-    items: list = field(default_factory=list)
-    # item dicts: {type, text, page, size, pos, html, rows, cols} —
-    # html/rows/cols are populated for table items only
-    max_columns: int = 1      # layout: widest x-gap column split seen
-    margins: Optional[dict] = None   # text-extent page margins (pct)
-    error: Optional[str] = None
 
 
 # ---------------------------------------------------------------------------
@@ -431,6 +425,14 @@ def _pct(v: float, span: float) -> float:
     return round(max(0.0, min(100.0, 100.0 * v / span)) if span > 0 else 0.0, 2)
 
 
+def _bbox_pct(x0: float, x1: float, top: float, bottom: float,
+              width: float, height: float) -> dict:
+    """A bbox in pt (PDF user space is bottom-up) as the item position:
+    page percentages from the top-left."""
+    return {"x_start": _pct(x0, width), "y_start": _pct(height - top, height),
+            "x_end": _pct(x1, width), "y_end": _pct(height - bottom, height)}
+
+
 # ---------------------------------------------------------------------------
 # Table detection (column-aligned line grids) + pct-gap adjacent merge
 # ---------------------------------------------------------------------------
@@ -496,10 +498,7 @@ def _detect_tables(lines: list[dict]) -> tuple[list[list[dict]], list[dict]]:
     return blocks, rest
 
 
-def _table_item(block: list[dict], page: int,
-                width: float, height: float) -> dict:
-    from html import escape
-
+def _table_item(block: list[dict], width: float, height: float) -> Item:
     html = "<table><tbody>" + "".join(
         "<tr>" + "".join(f"<td>{escape(r.text)}</td>" for r in ln["runs"])
         + "</tr>"
@@ -507,22 +506,19 @@ def _table_item(block: list[dict], page: int,
     ) + "</tbody></table>"
     content = "\n".join(
         " | ".join(r.text for r in ln["runs"]) for ln in block)
-    top = block[0]["y"] + block[0]["size"]
-    pos = {
-        "x_start": _pct(min(ln["x"] for ln in block), width),
-        "y_start": _pct(height - top, height),
-        "x_end": _pct(max(ln["x_end"] for ln in block), width),
-        "y_end": _pct(height - block[-1]["y"], height),
-    }
-    return {"type": "table", "text": content, "page": page,
-            "size": max(ln["size"] for ln in block), "pos": pos,
-            "html": html, "rows": len(block), "cols": len(block[0]["runs"])}
+    pos = _bbox_pct(min(ln["x"] for ln in block),
+                    max(ln["x_end"] for ln in block),
+                    block[0]["y"] + block[0]["size"], block[-1]["y"],
+                    width, height)
+    return Item(0, "table", content, html=html, row_count=len(block),
+                column_count=len(block[0]["runs"]),
+                font_size=max(ln["size"] for ln in block), position=pos)
 
 
 _PDF_TBODY_RE = re.compile(r"^.*?<tbody>", re.DOTALL)
 
 
-def merge_adjacent_pdf_tables(items: list[dict]) -> list[dict]:
+def merge_adjacent_pdf_tables(items: list[Item]) -> list[Item]:
     """R3, the real rule — ``content_structure_fixer.py:120-177``: two
     CONSECUTIVE table items whose vertical gap is under 5% of page
     height merge into one. Reference semantics preserved exactly: the
@@ -531,31 +527,25 @@ def merge_adjacent_pdf_tables(items: list[dict]) -> list[dict]:
     table's, row counts add. Unlike the reference's literal
     string-surgery (which leaves a second ``<tbody>``), the splice is
     clean — our table HTML is self-generated and well-formed."""
-    out: list[dict] = []
+    out: list[Item] = []
     i = 0
     while i < len(items):
         cur = items[i]
         if (
-            cur["type"] == "table"
+            cur.type == "table"
             and i + 1 < len(items)
-            and items[i + 1]["type"] == "table"
+            and items[i + 1].type == "table"
         ):
             nxt = items[i + 1]
-            if abs(nxt["pos"]["y_start"] - cur["pos"]["y_end"]) \
-                    < _TABLE_GAP_PCT:
-                cur = dict(cur)
-                cur["html"] = (
-                    cur["html"].replace("</tbody></table>", "")
-                    + _PDF_TBODY_RE.sub("", nxt["html"], count=1)
-                )
-                cur["text"] = cur["text"] + "\n" + nxt["text"]
-                cur["rows"] += nxt["rows"]
-                cur["pos"] = {**cur["pos"],
-                              "y_end": nxt["pos"]["y_end"],
-                              "x_end": max(cur["pos"]["x_end"],
-                                           nxt["pos"]["x_end"]),
-                              "x_start": min(cur["pos"]["x_start"],
-                                             nxt["pos"]["x_start"])}
+            a, b = cur.position, nxt.position
+            if abs(b["y_start"] - a["y_end"]) < _TABLE_GAP_PCT:
+                cur.html = (cur.html.replace("</tbody></table>", "")
+                            + _PDF_TBODY_RE.sub("", nxt.html, count=1))
+                cur.content = cur.content + "\n" + nxt.content
+                cur.row_count += nxt.row_count
+                cur.position = {**a, "y_end": b["y_end"],
+                                "x_end": max(a["x_end"], b["x_end"]),
+                                "x_start": min(a["x_start"], b["x_start"])}
                 out.append(cur)
                 i += 2
                 continue
@@ -564,9 +554,10 @@ def merge_adjacent_pdf_tables(items: list[dict]) -> list[dict]:
     return out
 
 
-def _lines_to_items(lines: list[dict], page: int,
-                    width: float = 612.0, height: float = 792.0) -> list[dict]:
-    """Paragraph grouping by vertical gap; header detection by font size.
+def _lines_to_items(lines: list[dict], width: float = 612.0,
+                    height: float = 792.0) -> list[Item]:
+    """Paragraph grouping by vertical gap; header detection by font size
+    (a header item has ``level`` 1).
 
     Each item carries a position bbox as page percentages (x/y from the
     top-left, 0-100 — the reference's item position schema,
@@ -574,7 +565,7 @@ def _lines_to_items(lines: list[dict], page: int,
     estimated advances, y_start from the first line's baseline + ascent
     (≈ font size), y_end from the last line's baseline. PDF user space
     is bottom-up, so y pct = 100·(height − y)/height."""
-    items: list[dict] = []
+    items: list[Item] = []
     body_size = 12.0
     sizes = sorted(ln["size"] for ln in lines)
     if sizes:
@@ -586,16 +577,11 @@ def _lines_to_items(lines: list[dict], page: int,
 
     def flush():
         if para:
-            typ = "header" if (prev_size or 0) > body_size * 1.15 else "paragraph"
-            pos = {
-                "x_start": _pct(bbox[0], width),
-                "y_start": _pct(height - bbox[2], height),
-                "x_end": _pct(bbox[1], width),
-                "y_end": _pct(height - bbox[3], height),
-            }
-            items.append({"type": typ, "text": "\n".join(para),
-                          "page": page, "size": prev_size or body_size,
-                          "pos": pos, "html": None, "rows": 0, "cols": 0})
+            header = (prev_size or 0) > body_size * 1.15
+            items.append(Item(0, "header" if header else "paragraph",
+                              "\n".join(para), level=1 if header else 0,
+                              font_size=prev_size or body_size,
+                              position=_bbox_pct(*bbox, width, height)))
             para.clear()
             bbox.clear()
 
@@ -623,17 +609,18 @@ def _lines_to_items(lines: list[dict], page: int,
     return items
 
 
-def extract_pdf(pdf_bytes: bytes) -> PdfResult:
-    """bytes → PdfResult; never raises."""
+def extract_pdf(pdf_bytes: bytes) -> ExtractResult:
+    """bytes → ExtractResult; never raises."""
     try:
         objs = _parse_objects(pdf_bytes)
         page_nums = _page_order(objs)
         if not page_nums:
             # corrupt/truncated PDF — must surface as a parse failure so
             # the run counters don't silently swallow bad payloads
-            return PdfResult(error="PdfNoPages")
-        res = PdfResult(n_pages=len(page_nums))
-        for pno, num in enumerate(page_nums, start=1):
+            return ExtractResult(error="PdfNoPages")
+        items: list[Item] = []
+        layout = {"columns": 1}    # widest x-gap column split seen
+        for num in page_nums:
             body = objs[num]
             m = _MEDIABOX_RE.search(body)
             width = float(m.group(3)) - float(m.group(1)) if m else 612.0
@@ -657,44 +644,44 @@ def extract_pdf(pdf_bytes: bytes) -> PdfResult:
             # column splitter would tear apart.
             blocks, rest_lines = _detect_tables(_cluster_lines(runs))
             rest_runs = [r for ln in rest_lines for r in ln["runs"]]
-            page_items: list[dict] = []
+            page_items: list[Item] = []
             cols = _split_columns(rest_runs, width)
-            res.max_columns = max(res.max_columns, len(cols))
+            layout["columns"] = max(layout["columns"], len(cols))
             for col_runs in cols:
                 page_items.extend(
-                    _lines_to_items(_cluster_lines(col_runs), pno,
-                                    width, height))
+                    _lines_to_items(_cluster_lines(col_runs), width, height))
             if blocks:
-                page_items.extend(
-                    _table_item(b, pno, width, height) for b in blocks)
+                page_items.extend(_table_item(b, width, height)
+                                  for b in blocks)
                 # Tables re-enter the flow by vertical position. Stable
                 # sort: a multi-column page with tables reads in y order
                 # (documented approximation); table-free pages keep the
                 # exact left-column-first order, untouched.
-                page_items.sort(key=lambda it: it["pos"]["y_start"])
+                page_items.sort(key=lambda it: it.position["y_start"])
                 page_items = merge_adjacent_pdf_tables(page_items)
-            res.items.extend(page_items)
-            res.page_texts.append(
-                "\n\n".join(it["text"] for it in page_items if it["text"]))
-        res.text = "\n\n".join(t for t in res.page_texts if t)
-        if res.items:
+            items.extend(page_items)
+        for k, it in enumerate(items):
+            it.order = k
+        if items:
             # Doc-level text-extent margins as page percentages
             # (margin_*_percent, openai_content_extractor.py:195-198):
             # distance from each page edge to the union of item bboxes.
             # Positions are already per-page percentages, so the union is
             # comparable across pages with differing mediaboxes.
-            ps = [it["pos"] for it in res.items]
-            res.margins = {
+            ps = [it.position for it in items]
+            layout.update({
                 "margin_top_percent": round(min(p["y_start"] for p in ps), 2),
                 "margin_bottom_percent": round(
                     100.0 - max(p["y_end"] for p in ps), 2),
                 "margin_left_percent": round(min(p["x_start"] for p in ps), 2),
                 "margin_right_percent": round(
                     100.0 - max(p["x_end"] for p in ps), 2),
-            }
-        return res
+            })
+        text, spans = assemble(items)
+        return ExtractResult(text=text, spans=spans, items=items,
+                             layout=layout)
     except Exception as exc:  # noqa: BLE001
-        return PdfResult(error=f"{type(exc).__name__}: {exc}")
+        return ExtractResult(error=f"{type(exc).__name__}: {exc}")
 
 
 def is_pdf(payload: bytes) -> bool:

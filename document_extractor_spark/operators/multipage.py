@@ -11,7 +11,10 @@ replacement detects continuations structurally:
   page's last merged item when both are prose and the new page starts
   mid-sentence (leading lowercase letter);
 - it is a *table continuation* (M3) when both are tables with the same
-  column_count — rows are spliced into the parent ``<tbody>``.
+  column_count — rows are spliced before the parent's ``</table>`` by
+  ``html_extract.splice_table_rows``, the splice the single-page
+  adjacent-table fix uses (openai_content_extractor_multipage.py:
+  257-289).
 
 Spark mapping: the per-document sequential fold the reference runs in
 Python is ``groupBy(article).applyInPandas`` — one Arrow batch per
@@ -23,11 +26,11 @@ not by host popularity.
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..extractor.html_extract import splice_table_rows
 
 MERGED_SCHEMA = T.StructType([
     T.StructField("article_id", T.LongType(), False),
@@ -50,20 +53,6 @@ MERGED_SCHEMA = T.StructType([
 ])
 
 _PROSE = {"paragraph", "list"}
-_TBODY_ROWS_RE = re.compile(r"<tr[\s\S]*?</tr\s*>", re.IGNORECASE)
-_TABLE_CLOSE_RE = re.compile(r"</table\s*>\s*$", re.IGNORECASE)
-
-
-def _splice_table_html(parent: str, cont: str) -> str:
-    """M3 — openai_content_extractor_multipage.py:257-289: pull the
-    continuation's rows, insert before the parent's ``</table>``."""
-    if not parent or not cont:
-        return parent or cont
-    rows = _TBODY_ROWS_RE.findall(cont)
-    if rows and _TABLE_CLOSE_RE.search(parent):
-        return _TABLE_CLOSE_RE.sub("".join(rows) + "</table>", parent)
-    return parent
-
 
 def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     """One pandas frame = one batch of whole articles (not one article):
@@ -128,7 +117,8 @@ def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
             ):
                 # M3: table continuation — splice rows
                 last["content"] = last["content"] + "\n" + c
-                last["html"] = _splice_table_html(last["html"], item["html"])
+                last["html"] = (splice_table_rows(last["html"], item["html"])
+                                or last["html"] or item["html"])
                 last["row_count"] += item["row_count"]
                 last["pages"].append(item["pages"][0])
                 last["n_merged"] += 1

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import (
     avg_word_len,
+    char_array,
     char_count,
     content_hash,
     fingerprint,
@@ -471,16 +472,15 @@ def char_entropy(df: DataFrame, id_col: str = "doc_id",
     ``(id, char)`` then ``(id)`` — narrow keys, never the payload.
     ``max_chars`` caps the explode per document (entropy stabilizes
     within a few KB of prose; at 100 TB cap it)."""
-    c = F.col(text_col)
+    cs = char_array(text_col)
     if max_chars is not None:
         if max_chars < 1:
             raise ValueError(f"max_chars must be >= 1: {max_chars}")
-        c = F.substring(c, 1, int(max_chars))
-    staged = df.select(F.col(id_col), F.split(c, "").alias("_cs"))
-    chars = (
-        staged.select(id_col, F.explode_outer("_cs").alias("ch"))
-        .where(F.col("ch").isNotNull() & (F.col("ch") != ""))
-    )
+        # a slice, not substring: a truncated last character would read
+        # past the string's bytes
+        cs = F.slice(cs, 1, int(max_chars))
+    staged = df.select(F.col(id_col), cs.alias("_cs"))
+    chars = staged.select(id_col, F.explode("_cs").alias("ch"))
     cnts = chars.groupBy(id_col, "ch").agg(F.count(F.lit(1)).alias("cnt"))
     term = F.round(F.col("cnt") * F.log(F.col("cnt").cast("double"))
                    * F.lit(1_000_000), 0).cast("bigint")

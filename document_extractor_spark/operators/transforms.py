@@ -14,8 +14,8 @@ DuckDB twin recomputes the identical transform), which is what a
 training-data pipeline needs for ablations ("same corpus, same splits,
 different rate").
 
-Scale shape: pure per-row JVM column expressions (md5 + substring
-arithmetic inside whole-stage codegen) — zero shuffle, zero Python,
+Scale shape: pure per-row JVM column expressions (md5 + character-array
+slices inside whole-stage codegen) — zero shuffle, zero Python,
 linear in payload bytes at any corpus size.
 """
 
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import hex_int, md5_of, tokens
+from ..functions.text import char_array, char_gram, hex_int, md5_of, tokens
 
 #: hex chars of each md5 draw — 48 bits, exact in BIGINT math
 _HEX = 12
@@ -41,12 +41,17 @@ def fim_transform(df: DataFrame, id_col: str = "doc_id",
     verbatim with ``fim_applied = false``. Split points are two
     id-seeded uniform draws over [1, len-1]; their min/max bound the
     middle, so prefix and suffix are always non-empty and
-    prefix ‖ middle ‖ suffix reassembles the original exactly."""
+    prefix ‖ middle ‖ suffix reassembles the original exactly, byte
+    for byte even for a string cast from invalid UTF-8: the three parts
+    are slices of the text's :func:`char_array`, where ``substring`` on
+    a truncated last character reads past the string's bytes."""
     if not 0 <= rate_pct <= 100:
         raise ValueError(f"rate_pct must be in [0, 100]: {rate_pct}")
     if min_chars < 3:
         raise ValueError(f"min_chars must be >= 3: {min_chars}")
     t, key = F.col(text_col), F.col(id_col)
+    staged = df.withColumn("_fim_chars", char_array(t))
+    chars = F.col("_fim_chars")
     L = F.length(t)
     # uniform draws in [0, mod) from md5(salt ‖ id)
     selected = F.pmod(hex_int(md5_of("fim:", key), _HEX),
@@ -58,17 +63,17 @@ def fim_transform(df: DataFrame, id_col: str = "doc_id",
                           (L - 1).cast("bigint"))
     p1, p2 = F.least(a, b), F.greatest(a, b)
     rewritten = F.concat(
-        F.lit(PRE_TOK), F.substring(t, 1, p1.cast("int")),
-        F.lit(SUF_TOK), F.substring(t, (p2 + 1).cast("int"),
-                                    (L - p2).cast("int")),
-        F.lit(MID_TOK), F.substring(t, (p1 + 1).cast("int"),
-                                    (p2 - p1).cast("int")),
+        F.lit(PRE_TOK), char_gram(chars, 1, p1.cast("int")),
+        F.lit(SUF_TOK), char_gram(chars, (p2 + 1).cast("int"),
+                                  (L - p2).cast("int")),
+        F.lit(MID_TOK), char_gram(chars, (p1 + 1).cast("int"),
+                                  (p2 - p1).cast("int")),
     )
     applied = selected & eligible
-    return df.withColumns({
+    return staged.withColumns({
         "fim_applied": applied,
         "fim_text": F.when(applied, rewritten).otherwise(t),
-    })
+    }).drop("_fim_chars")
 
 
 #: span-corruption geometry: a span *seed* fires per token position via

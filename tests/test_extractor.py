@@ -15,6 +15,7 @@ from document_extractor_spark.extractor.html_extract import (
     fix_header_levels,
     fix_section_table_order,
     parse_multi_record_kv,
+    splice_table_rows,
 )
 from document_extractor_spark.extractor.langid import detect_lang
 from document_extractor_spark.extractor.pdf_extract import extract_pdf, is_pdf
@@ -133,6 +134,30 @@ def test_r3_adjacent_tables_merge():
     assert out[0].content == "h\nr1\nr2"
 
 
+def test_splice_table_rows_verbatim_or_none():
+    parent = "<table><tr><td>a</td></tr></table>\n"
+    cont = r"<table><tr><td>C:\data\1 \g<0></td></tr></table>"
+    assert splice_table_rows(parent, cont) == (
+        r"<table><tr><td>a</td></tr><tr><td>C:\data\1 \g<0></td></tr>"
+        "</table>")
+    for p, c in ((None, cont), (parent, None), ("", cont), (parent, ""),
+                 (parent, "<table></table>"), ("<table><tr>", cont)):
+        assert splice_table_rows(p, c) is None
+
+
+def test_r3_merge_keeps_backslashes_in_cells():
+    """A backslash in a merged table's cell is text, never a ``re.sub``
+    template: ``\\d`` in a cell must not fail the page."""
+    page = (b"<html><body><p>intro text here for the page</p>"
+            b"<table><tr><td>a</td><td>b</td></tr></table>"
+            b"<table><tr><td>C:\\data\\x</td><td>d</td></tr></table>"
+            b"</body></html>")
+    res = extract_html(page)
+    assert res.error is None
+    assert "C:\\data\\x" in res.text
+    assert [it.type for it in res.items].count("table") == 1
+
+
 def test_r3_different_width_not_merged():
     a = Item(order=0, type="table", content="x", row_count=1, column_count=2,
              html="<table><tr><td>a</td><td>b</td></tr></table>")
@@ -216,7 +241,6 @@ def test_pdf_multipage_order():
         [(72, 720, 12, ["page two text"])],
     ])
     res = extract_pdf(raw)
-    assert res.n_pages == 2
     assert res.text.index("page one") < res.text.index("page two")
 
 
@@ -232,13 +256,13 @@ def test_pdf_table_detection():
     page = [(72, 740, 12, ["intro paragraph line"])] + \
         _table_page([700, 688, 676], lambda r, c: f"r{r}c{c}")
     res = extract_pdf(build_pdf([page]))
-    tables = [it for it in res.items if it["type"] == "table"]
+    tables = [it for it in res.items if it.type == "table"]
     assert len(tables) == 1
     t = tables[0]
-    assert t["rows"] == 3 and t["cols"] == 3
-    assert "<table><tbody><tr><td>r0c0</td>" in t["html"]
-    assert t["text"].splitlines()[0] == "r0c0 | r0c1 | r0c2"
-    assert [it["type"] for it in res.items] == ["paragraph", "table"]
+    assert t.row_count == 3 and t.column_count == 3
+    assert "<table><tbody><tr><td>r0c0</td>" in t.html
+    assert t.content.splitlines()[0] == "r0c0 | r0c1 | r0c2"
+    assert [it.type for it in res.items] == ["paragraph", "table"]
 
 
 def test_pdf_adjacent_tables_merge_iff_gap_under_5pct():
@@ -252,17 +276,17 @@ def test_pdf_adjacent_tables_merge_iff_gap_under_5pct():
         return extract_pdf(build_pdf([page]))
 
     near = pdf_with_gap(650)      # gap ≈3.5% of page height → merge
-    tables = [it for it in near.items if it["type"] == "table"]
+    tables = [it for it in near.items if it.type == "table"]
     assert len(tables) == 1
-    assert tables[0]["rows"] == 4
-    assert tables[0]["html"].count("<tbody>") == 1
-    assert "a10" in tables[0]["text"] and "b00" in tables[0]["text"]
-    assert tables[0]["pos"]["y_end"] > 13.0   # extended to 2nd table
+    assert tables[0].row_count == 4
+    assert tables[0].html.count("<tbody>") == 1
+    assert "a10" in tables[0].content and "b00" in tables[0].content
+    assert tables[0].position["y_end"] > 13.0   # extended to 2nd table
 
     far = pdf_with_gap(600)       # gap ≈9.9% → two tables survive
-    tables = [it for it in far.items if it["type"] == "table"]
+    tables = [it for it in far.items if it.type == "table"]
     assert len(tables) == 2
-    assert [t["rows"] for t in tables] == [2, 2]
+    assert [t.row_count for t in tables] == [2, 2]
 
 
 def test_pdf_table_items_through_extract_payload():
@@ -288,8 +312,8 @@ def test_pdf_two_columns_not_a_table():
         (340, 720, 12, ["R1", "R2", "R3"]),
     ]])
     res = extract_pdf(raw)
-    assert not [it for it in res.items if it["type"] == "table"]
-    assert res.max_columns == 2
+    assert not [it for it in res.items if it.type == "table"]
+    assert res.layout["columns"] == 2
 
 
 def test_pdf_escapes_and_hex():

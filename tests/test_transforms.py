@@ -29,6 +29,32 @@ def test_reassembly_identity_and_structure(spark):
         assert len(pre) >= 1 and len(suf) >= 1
 
 
+def test_reassembly_is_byte_exact_on_invalid_utf8(spark):
+    """Strings cast from invalid UTF-8 (lone continuation and stray
+    bytes, a last character cut short) reassemble to the input bytes.
+    ``substring`` over a truncated last character reads past the string
+    (``cast(X'61E2' AS STRING)`` comes back as ``61E20000``)."""
+    raws = [b"words \xc3\x28 lone lead, \xff\xfe stray %d tail \xe2\x82" % i
+            for i in range(30)]
+    raws += [b"plain ascii prose long enough %d \xf0\x9f" % i
+             for i in range(30)]
+    df = (spark.createDataFrame(list(enumerate(raws)),
+                                "doc_id bigint, raw binary")
+          .select("doc_id", F.col("raw").cast("string").alias("text")))
+    got = (fim_transform(df, rate_pct=100)
+           .select("doc_id", "fim_applied",
+                   F.col("fim_text").cast("binary").alias("ft"))
+           .collect())
+    assert len(got) == len(raws) and all(r["fim_applied"] for r in got)
+    for r in got:
+        ft = bytes(r["ft"])
+        assert ft.startswith(b"<PRE>")
+        pre, rest = ft[5:].split(b"<SUF>", 1)
+        suf, mid = rest.split(b"<MID>", 1)
+        assert pre + mid + suf == raws[r["doc_id"]]
+        assert pre and suf
+
+
 def test_rate_selection_is_id_hashed_and_stable(spark):
     df = _df(spark, [(i, TEXT) for i in range(200)])
     got = {r["doc_id"]: r["fim_applied"]
