@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from html import unescape
+from html import escape, unescape
 from typing import Optional
 
 # ---------------------------------------------------------------------------
@@ -686,7 +686,7 @@ def refine_table_html(table_html: str) -> str:
     for b in fl.blocks:
         if b.tag == "table" and b.table_grid:
             body = "".join(
-                "<tr>" + "".join(f"<td>{_html_escape(c)}</td>" for c in row)
+                "<tr>" + "".join(f"<td>{escape(c)}</td>" for c in row)
                 + "</tr>"
                 for row in b.table_grid
             )
@@ -1100,21 +1100,14 @@ def parse_multi_record_kv(text: str):
     return headers, records
 
 
-def _html_escape(s: str) -> str:
-    """key_value_converter.py:296-312 escaping set."""
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        .replace('"', "&quot;").replace("'", "&#x27;")
-    )
-
-
 def kv_records_to_html(headers: list[str], records: list[dict]) -> str:
     """R7 — styled table render (key_value_converter.py:248-312),
-    structure-faithful (header row + zebra body), minus inline colors."""
-    th = "".join(f"<th>{_html_escape(h)}</th>" for h in headers)
+    structure-faithful (header row + zebra body), minus inline colors;
+    ``html.escape`` is the reference's escaping set (kvc.py:296-312)."""
+    th = "".join(f"<th>{escape(h)}</th>" for h in headers)
     rows = []
     for rec in records:
-        tds = "".join(f"<td>{_html_escape(rec.get(h, ''))}</td>" for h in headers)
+        tds = "".join(f"<td>{escape(rec.get(h, ''))}</td>" for h in headers)
         rows.append(f"<tr>{tds}</tr>")
     return f"<table><thead><tr>{th}</tr></thead><tbody>{''.join(rows)}</tbody></table>"
 

@@ -3,9 +3,14 @@
 The reference carries no language logic (its GPT-4V prompt is language
 agnostic); the north-star output schema has a ``lang`` column, so the
 engine provides a lightweight deterministic identifier: Unicode-script
-detection for CJK/Arabic/Cyrillic, stopword-hit scoring for a closed set
-of Latin-script languages. Pure function; ties broken by fixed language
-order for byte-stable output.
+detection for CJK/kana/hangul/Arabic/Cyrillic, stopword-hit scoring for
+a closed set of Latin-script languages. Pure function; ties broken by
+fixed language order for byte-stable output.
+
+``detect_lang`` is the package's only language identifier: the
+extractor calls it per page, and ``textstats.lang_id_udf`` maps it over
+each Arrow batch. Each script class is counted by one compiled
+character-class scan (``findall``), so no per-character Python runs.
 """
 
 from __future__ import annotations
@@ -29,40 +34,35 @@ _LANG_ORDER = ["en", "de", "fr", "es"]
 
 _WORD_RE = re.compile(r"[^\W\d_]+", re.UNICODE)
 
+_CJK = re.compile("[\u4e00-\u9fff]")
+_KANA = re.compile("[\u3040-\u30ff]")
+_HANGUL = re.compile("[\uac00-\ud7af]")
+_ARABIC = re.compile("[\u0600-\u06ff]")
+_CYRILLIC = re.compile("[\u0400-\u04ff]")
+
 
 def _script_lang(text: str) -> str | None:
-    """Script-range vote over the first 400 chars."""
-    counts = {"cjk": 0, "kana": 0, "hangul": 0, "arabic": 0, "cyrillic": 0}
+    """Script-class vote over the first 400 chars: a class wins with a
+    share above 0.25, kana (with CJK) first, then hangul, CJK, Arabic,
+    Cyrillic."""
     sample = text[:400]
-    for ch in sample:
-        o = ord(ch)
-        if 0x4E00 <= o <= 0x9FFF:
-            counts["cjk"] += 1
-        elif 0x3040 <= o <= 0x30FF:
-            counts["kana"] += 1
-        elif 0xAC00 <= o <= 0xD7AF:
-            counts["hangul"] += 1
-        elif 0x0600 <= o <= 0x06FF:
-            counts["arabic"] += 1
-        elif 0x0400 <= o <= 0x04FF:
-            counts["cyrillic"] += 1
     n = max(len(sample), 1)
-    if counts["kana"] > 0 and (counts["kana"] + counts["cjk"]) / n > 0.25:
+    cjk = len(_CJK.findall(sample))
+    kana = len(_KANA.findall(sample))
+    if kana > 0 and (kana + cjk) / n > 0.25:
         return "ja"
-    if counts["hangul"] / n > 0.25:
-        return "ko"
-    if counts["cjk"] / n > 0.25:
-        return "zh"
-    if counts["arabic"] / n > 0.25:
-        return "ar"
-    if counts["cyrillic"] / n > 0.25:
-        return "ru"
+    for lang, count in (("ko", len(_HANGUL.findall(sample))), ("zh", cjk),
+                        ("ar", len(_ARABIC.findall(sample))),
+                        ("ru", len(_CYRILLIC.findall(sample)))):
+        if count / n > 0.25:
+            return lang
     return None
 
 
 def detect_lang(text: str, default: str = "und") -> str:
-    """Scalar reference implementation (used by the extractor's per-doc
-    path and as the parity oracle for ``detect_langs_batch``)."""
+    """Language code of ``text``: its script class, else the Latin-script
+    language with the most stopword hits (at least 2) in the first 2000
+    chars, else ``default``."""
     if not text:
         return default
     script = _script_lang(text)
@@ -78,109 +78,3 @@ def detect_lang(text: str, default: str = "und") -> str:
         if hits > best_hits:
             best_lang, best_hits = lang, hits
     return best_lang if best_hits >= 2 else default
-
-
-# ---------------------------------------------------------------------------
-# Vectorized batch variant (numpy codepoint bucketing + one regex pass)
-# ---------------------------------------------------------------------------
-
-_SCRIPT_RANGES = [            # (lo, hi, counter index)
-    (0x4E00, 0x9FFF, 0),      # cjk
-    (0x3040, 0x30FF, 1),      # kana
-    (0xAC00, 0xD7AF, 2),      # hangul
-    (0x0600, 0x06FF, 3),      # arabic
-    (0x0400, 0x04FF, 4),      # cyrillic
-]
-
-
-def _segment_counts(samples, mask_fn, n_counters):
-    """Per-row counts of codepoint predicates over variable-length string
-    samples: one utf-32 decode of the concatenated batch, boolean masks,
-    cumsum-difference per segment — no per-character Python."""
-    import numpy as np
-
-    lens = np.fromiter((len(s) for s in samples), dtype=np.int64,
-                       count=len(samples))
-    offsets = np.zeros(len(samples) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    big = "".join(samples)
-    if not big:
-        return np.zeros((len(samples), n_counters), dtype=np.int64), lens
-    cp = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32)
-    out = np.empty((len(samples), n_counters), dtype=np.int64)
-    for ci in range(n_counters):
-        cs = np.zeros(len(cp) + 1, dtype=np.int64)
-        np.cumsum(mask_fn(cp, ci), out=cs[1:])
-        out[:, ci] = cs[offsets[1:]] - cs[offsets[:-1]]
-    return out, lens
-
-
-def detect_langs_batch(texts, default: str = "und"):
-    """Batch ``detect_lang`` over a sequence of (possibly None) strings —
-    identical outputs to the scalar function (pytest parity gate).
-
-    The per-CHARACTER Python loop of the scalar script vote is replaced
-    by numpy codepoint-range bucketing over ONE utf-32 decode of the
-    concatenated 400-char samples (``_segment_counts``); the final
-    decision is a vectorized ``np.select``/``argmax``.
-
-    The stopword vote deliberately stays a per-row C-level
-    ``findall`` + frozenset-membership count. Measured on the 2000-doc
-    bench corpus (~320 words/doc): fully vectorized tokenizers — pandas
-    ``str.lower``+``isin`` (0.40 s), positional polynomial hashing over
-    expanded candidate chars (1.07 s), span-sum hashing with vectorized
-    exact verify (0.49 s) — all lose to the per-row set counting
-    (0.15 s) because materializing ~640k word objects (or their
-    codepoint gathers) dominates; set membership is already a C hash
-    probe. Measured, not guessed.
-
-    Returns a list[str] of language codes.
-    """
-    import numpy as np
-
-    n = len(texts)
-    if n == 0:
-        return []
-    texts = [t if isinstance(t, str) else ("" if t is None else str(t))
-             for t in texts]
-
-    # -- script vote over the first 400 chars (numpy-bucketed) ---------
-    samples = [t[:400] for t in texts]
-    counts, lens = _segment_counts(
-        samples,
-        lambda cp, ci: (cp >= _SCRIPT_RANGES[ci][0])
-        & (cp <= _SCRIPT_RANGES[ci][1]),
-        len(_SCRIPT_RANGES),
-    )
-    denom = np.maximum(lens, 1).astype(np.float64)
-    cjk, kana, hangul, arabic, cyr = (counts[:, i] for i in range(5))
-    script = np.select(
-        [
-            (kana > 0) & ((kana + cjk) / denom > 0.25),
-            hangul / denom > 0.25,
-            cjk / denom > 0.25,
-            arabic / denom > 0.25,
-            cyr / denom > 0.25,
-        ],
-        ["ja", "ko", "zh", "ar", "ru"],
-        default="",
-    )
-
-    # -- stopword vote over the first 2000 chars (per-row C loops) -----
-    votes = np.zeros((n, len(_LANG_ORDER)), dtype=np.int64)
-    findall = _WORD_RE.findall
-    sw_sets = [_STOPWORDS[lang] for lang in _LANG_ORDER]
-    for i in range(n):
-        if script[i]:
-            continue
-        words = [w.lower() for w in findall(texts[i][:2000])]
-        for li, sw in enumerate(sw_sets):
-            votes[i, li] = sum(1 for w in words if w in sw)
-    best_hits = votes.max(axis=1)
-    best_idx = votes.argmax(axis=1)       # first max wins — _LANG_ORDER tie
-    langs = np.asarray(_LANG_ORDER, dtype=object)
-    stop_lang = np.where(best_hits >= 2, langs[best_idx], default)
-
-    empty = np.fromiter((not t for t in texts), dtype=bool, count=n)
-    out = np.where(empty, default, np.where(script == "", stop_lang, script))
-    return [str(x) for x in out]

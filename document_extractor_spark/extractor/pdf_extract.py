@@ -505,7 +505,7 @@ def _table_item(block: list[dict], width: float, height: float) -> Item:
         for ln in block
     ) + "</tbody></table>"
     content = "\n".join(
-        " | ".join(r.text for r in ln["runs"]) for ln in block)
+        "\t".join(r.text for r in ln["runs"]) for ln in block)
     pos = _bbox_pct(min(ln["x"] for ln in block),
                     max(ln["x_end"] for ln in block),
                     block[0]["y"] + block[0]["size"], block[-1]["y"],
@@ -554,10 +554,11 @@ def merge_adjacent_pdf_tables(items: list[Item]) -> list[Item]:
     return out
 
 
-def _lines_to_items(lines: list[dict], width: float = 612.0,
-                    height: float = 792.0) -> list[Item]:
+def _lines_to_items(lines: list[dict], body_size: float, width: float,
+                    height: float) -> list[Item]:
     """Paragraph grouping by vertical gap; header detection by font size
-    (a header item has ``level`` 1).
+    (a header item has ``level`` 1): a paragraph whose size exceeds the
+    page's ``body_size`` by 15% is a header.
 
     Each item carries a position bbox as page percentages (x/y from the
     top-left, 0-100 — the reference's item position schema,
@@ -566,10 +567,6 @@ def _lines_to_items(lines: list[dict], width: float = 612.0,
     (≈ font size), y_end from the last line's baseline. PDF user space
     is bottom-up, so y pct = 100·(height − y)/height."""
     items: list[Item] = []
-    body_size = 12.0
-    sizes = sorted(ln["size"] for ln in lines)
-    if sizes:
-        body_size = sizes[len(sizes) // 2]
     para: list[str] = []
     bbox: list = []           # [min_x, max_x_end, top_y, bottom_y] in pt
     prev_y = None
@@ -642,14 +639,20 @@ def extract_pdf(pdf_bytes: bytes) -> ExtractResult:
             # the column split — a table's aligned cells at equal y MUST
             # cluster into one multi-run line, which is exactly what the
             # column splitter would tear apart.
-            blocks, rest_lines = _detect_tables(_cluster_lines(runs))
+            lines = _cluster_lines(runs)
+            # body size: the lower median of every line on the page,
+            # table lines included, so a lone title over one body line
+            # (or over a table) still reads as a header
+            sizes = sorted(ln["size"] for ln in lines)
+            body_size = sizes[(len(sizes) - 1) // 2] if sizes else 12.0
+            blocks, rest_lines = _detect_tables(lines)
             rest_runs = [r for ln in rest_lines for r in ln["runs"]]
             page_items: list[Item] = []
             cols = _split_columns(rest_runs, width)
             layout["columns"] = max(layout["columns"], len(cols))
             for col_runs in cols:
-                page_items.extend(
-                    _lines_to_items(_cluster_lines(col_runs), width, height))
+                page_items.extend(_lines_to_items(
+                    _cluster_lines(col_runs), body_size, width, height))
             if blocks:
                 page_items.extend(_table_item(b, width, height)
                                   for b in blocks)

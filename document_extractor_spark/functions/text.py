@@ -132,40 +132,22 @@ def fingerprint(col) -> Column:
     return content_hash(col)
 
 
-def shingles(col, n: int = 3) -> Column:
-    """Distinct n-word shingles (lowercased). JVM-side:
-    sequence → slice → concat_ws, no UDF.
-    Oracle twin: range + list slicing in DuckDB.
-
-    WARNING — hostile-input scaling: as a single Column expression the
-    token split is closed over by the HOF lambda and re-evaluated PER
-    GRAM (the winnowing O(n²) trap below). Fine for bounded web docs
-    (~10² tokens); for unbounded inputs use ``shingles_df``, which
-    stages the token array as a projected column."""
-    toks = F.split(F.lower(F.trim(F.col(col) if isinstance(col, str) else col)),
-                   r"\s+")
-    return _shingles_of(toks, n)
-
-
-def _shingles_of(toks: Column, n: int) -> Column:
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-
-
 def shingles_df(df, text_col: str = "text", n: int = 3,
                 out_col: str = "sh"):
-    """Staged shingling: the token array materializes ONCE per row in
-    its own projection, so the per-gram ``slice`` references an
+    """Distinct n-word shingles (lowercased), JVM-side: sequence → slice
+    → concat_ws, no UDF. Staged: the token array materializes ONCE per
+    row in its own projection, so the per-gram ``slice`` references an
     attribute instead of re-evaluating the inlined split per element —
     a 100k-token hostile doc costs ~10⁶ ops, not ~10¹⁰ (same
-    CollapseProject reasoning as ``winnow_fingerprints_df``). Identical
-    output to ``shingles``; identical oracle twin."""
+    CollapseProject reasoning as ``winnow_fingerprints_df``). Oracle
+    twin: range + list slicing in DuckDB."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     staged = df.withColumn("_sh_toks", F.split(F.lower(F.trim(c)), r"\s+"))
-    staged = staged.withColumn(out_col, _shingles_of(F.col("_sh_toks"), n))
-    return staged.drop("_sh_toks")
+    toks = F.col("_sh_toks")
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
+    sh = F.array_distinct(
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
+    return staged.withColumn(out_col, sh).drop("_sh_toks")
 
 
 # GPT-2-style pretokenizer regex, restricted to the RE2-compatible

@@ -45,7 +45,8 @@ def segment_languages(df: DataFrame, id_col: str = "doc_id",
         .where(F.col("_p").isNotNull() & (F.col("_p") != ""))
     )
     counts = (
-        paras.select("_id", lang_id_udf(F.col("_p")).alias("_lang"))
+        paras.select("_id",
+                     lang_id_udf(F.make_valid_utf8("_p")).alias("_lang"))
         .groupBy("_id", "_lang").agg(F.count(F.lit(1)).alias("_cnt"))
     )
     # min over (-count, lang): majority language, ties to lang ASC

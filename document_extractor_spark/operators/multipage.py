@@ -11,10 +11,10 @@ replacement detects continuations structurally:
   page's last merged item when both are prose and the new page starts
   mid-sentence (leading lowercase letter);
 - it is a *table continuation* (M3) when both are tables with the same
-  column_count — rows are spliced before the parent's ``</table>`` by
-  ``html_extract.splice_table_rows``, the splice the single-page
-  adjacent-table fix uses (openai_content_extractor_multipage.py:
-  257-289).
+  column_count and their HTML splices — rows are spliced before the
+  parent's ``</table>`` by ``html_extract.splice_table_rows``, the splice
+  and the rule of the single-page adjacent-table fix
+  (openai_content_extractor_multipage.py:257-289).
 
 Spark mapping: the per-document sequential fold the reference runs in
 Python is ``groupBy(article).applyInPandas`` — one Arrow batch per
@@ -109,16 +109,18 @@ def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
                 last["n_merged"] += 1
                 last["merged_from"].extend(item["merged_from"])
                 continue
-            if (
+            html = (
                 item["type"] == "table"
                 and last["type"] == "table"
                 and item["column_count"] == last["column_count"]
                 and item["column_count"] > 0
-            ):
-                # M3: table continuation — splice rows
+                and splice_table_rows(last["html"], item["html"])
+            )
+            if html:
+                # M3: table continuation — splice rows, only when both
+                # tables' HTML splices (``fix_adjacent_tables``' rule)
                 last["content"] = last["content"] + "\n" + c
-                last["html"] = (splice_table_rows(last["html"], item["html"])
-                                or last["html"] or item["html"])
+                last["html"] = html
                 last["row_count"] += item["row_count"]
                 last["pages"].append(item["pages"][0])
                 last["n_merged"] += 1

@@ -38,9 +38,12 @@ def _norm_batch(texts):
 def normalize_text(df: DataFrame, text_col: str = "text",
                    out_col: str | None = None) -> DataFrame:
     """Append (or replace) ``out_col`` with the NFC normalization of
-    ``text_col``. NULL passes through."""
+    ``text_col``. NULL passes through; a string that is not valid UTF-8
+    is normalized after ``make_valid_utf8`` (pyarrow's pandas conversion
+    would fail the task on it)."""
     udf = F.pandas_udf(_norm_batch, "string")
-    return df.withColumn(out_col or text_col, udf(F.col(text_col)))
+    return df.withColumn(out_col or text_col,
+                         udf(F.make_valid_utf8(text_col)))
 
 
 def dehyphenate(df: DataFrame, text_col: str = "text",

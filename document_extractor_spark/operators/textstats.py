@@ -52,18 +52,21 @@ def doc_fingerprints(df: DataFrame, id_col: str = "doc_id",
 
 @F.pandas_udf(T.StringType())
 def lang_id_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched language ID — the VECTORIZED batch kernel (numpy
-    codepoint bucketing + single regex pass), not a per-row lambda;
-    output parity with the scalar ``detect_lang`` is pytest-gated."""
-    from ..extractor.langid import detect_langs_batch
+    """Arrow-batched language ID: ``extractor.langid.detect_lang`` mapped
+    over the batch, ``"und"`` for NULL. Callers pass
+    ``make_valid_utf8(text)``: pyarrow's pandas conversion fails the task
+    on a string that is not valid UTF-8."""
+    from ..extractor.langid import detect_lang
 
-    return pd.Series(detect_langs_batch(texts.tolist()), index=texts.index)
+    return texts.map(lambda t: detect_lang(t) if isinstance(t, str)
+                     else "und")
 
 
 def detect_languages(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     return df.select(
-        F.col(id_col), lang_id_udf(F.col(text_col)).alias("lang_pred")
+        F.col(id_col),
+        lang_id_udf(F.make_valid_utf8(text_col)).alias("lang_pred"),
     )
 
 
@@ -769,7 +772,7 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
     sub-~150k is template/repeat territory, near/above ~1e6 is
     already-compressed or random data.
 
-    Runs as an Arrow-batched kernel (stdlib zlib on UTF-8 bytes — the
+    Runs as an Arrow-batched kernel (stdlib zlib on the row's bytes — the
     sanctioned Python path, same shape as the lang-ID and NFC
     kernels): narrow (id, text) in, fixed-width integers out, zero
     shuffle. The ppm arithmetic is JVM-side so the only Python work is
@@ -785,17 +788,19 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
     @F.pandas_udf("struct<n_bytes: long, n_compressed: long>")
     def _sizes(s: pd.Series) -> pd.DataFrame:
         nb, nc = [], []
-        for t in s:
-            if t is None:
+        for raw in s:
+            if raw is None:
                 nb.append(None)
                 nc.append(None)
                 continue
-            raw = t.encode("utf-8")
             nb.append(len(raw))
             nc.append(len(zlib.compress(raw, level)))
         return pd.DataFrame({"n_bytes": nb, "n_compressed": nc})
 
-    staged = df.select(F.col(id_col), _sizes(F.col(text_col)).alias("_z"))
+    # the row's own bytes: a string that is not valid UTF-8 fails
+    # pyarrow's pandas conversion, its binary cast does not
+    staged = df.select(F.col(id_col),
+                       _sizes(F.col(text_col).cast("binary")).alias("_z"))
     return staged.select(
         F.col(id_col),
         F.col("_z.n_bytes").alias("n_bytes"),

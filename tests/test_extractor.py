@@ -252,7 +252,8 @@ def _table_page(y_rows, cells_fn, size=10):
 
 def test_pdf_table_detection():
     """Column-aligned line grids become table items with html + counts;
-    surrounding single-run lines stay paragraphs."""
+    the single-run line above stays out of the table (its 12 pt is above
+    the page's 10 pt body size, so it reads as a header)."""
     page = [(72, 740, 12, ["intro paragraph line"])] + \
         _table_page([700, 688, 676], lambda r, c: f"r{r}c{c}")
     res = extract_pdf(build_pdf([page]))
@@ -261,8 +262,23 @@ def test_pdf_table_detection():
     t = tables[0]
     assert t.row_count == 3 and t.column_count == 3
     assert "<table><tbody><tr><td>r0c0</td>" in t.html
-    assert t.content.splitlines()[0] == "r0c0 | r0c1 | r0c2"
-    assert [it.type for it in res.items] == ["paragraph", "table"]
+    assert t.content.splitlines()[0] == "r0c0\tr0c1\tr0c2"
+    assert [it.type for it in res.items] == ["header", "table"]
+
+
+@pytest.mark.parametrize("page, below", [
+    ([(72, 760, 18, ["Big Title"]), (72, 740, 12, ["one body line"])],
+     "paragraph"),
+    ([(72, 760, 18, ["Report title"])]
+     + _table_page([700, 688], lambda r, c: f"r{r}c{c}"), "table"),
+], ids=["one-body-line", "title-over-table"])
+def test_pdf_title_is_header_over_few_body_lines(page, below):
+    """The body size is the lower median of every line on the page, table
+    lines included, so a title over one body line or over a table is a
+    header."""
+    items = extract_pdf(build_pdf([page])).items
+    assert [(it.type, it.level, it.font_size) for it in items] == \
+        [("header", 1, 18.0), (below, 0, items[1].font_size)]
 
 
 def test_pdf_adjacent_tables_merge_iff_gap_under_5pct():
@@ -702,35 +718,6 @@ def test_html_item_positions_reading_order():
     for a, b in zip(ps, ps[1:]):
         assert a["y_end"] <= b["y_start"]
     assert all(p["x_start"] == 0.0 and p["x_end"] == 100.0 for p in ps)
-
-
-def test_langid_batch_parity_corpus():
-    """The vectorized batch kernel must agree with the scalar reference
-    on the full fixture + synthetic corpus and on adversarial samples."""
-    from document_extractor_spark.extractor.langid import (
-        detect_lang,
-        detect_langs_batch,
-    )
-
-    texts = []
-    for row in fixture_rows():
-        rec = extract_payload(row["html"], url=row["url"])
-        texts.append(rec["extracted_text"])
-    for row in corpus_rows(120, seed=5):
-        texts.append((row.get("html") or b"").decode("utf-8", "replace")[:3000])
-    texts += [
-        "", None, "\x00\x00", "a b", "the and", "the and is",
-        "это русский текст кириллица здесь преобладает явно и всюду",
-        "한국어 본문 음절 글자 비율이 높습니다 한국어 본문 글자",
-        "word " * 500 + "the and is of to in",   # stopwords past the cutoff
-        "the and is of to in " + "word " * 500,
-        "mixed 中文 characters but mostly english the and is of to",
-    ]
-    batch = detect_langs_batch(texts)
-    for t, b in zip(texts, batch):
-        assert detect_lang(t or "") == b, repr((t or "")[:60])
-
-
 
 
 def test_image_type_classification():

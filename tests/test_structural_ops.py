@@ -153,6 +153,21 @@ def test_multipage_column_count_mismatch_no_splice(spark):
     assert len(out) == 2
 
 
+def test_multipage_table_without_html_stays_apart(spark):
+    """M3 merges a table continuation only when the rows splice: a parent
+    table with no HTML keeps its continuation as a second item, so
+    content, row_count and HTML never disagree."""
+    t2 = "<table><tr><td>b</td><td>2</td></tr></table>"
+    rows = [
+        (5, 1, 0, "table", "a\t1", None, 1, 2),
+        (5, 2, 0, "table", "b\t2", t2, 1, 2),
+    ]
+    out = merge_continuations(spark.createDataFrame(rows, _ITEM_COLS)) \
+        .orderBy("order").collect()
+    assert [(r.content, r.html, r.row_count) for r in out] == \
+        [("a\t1", None, 1), ("b\t2", t2, 1)]
+
+
 def test_multipage_null_numeric_columns(spark):
     """Nullable ints arrive in pandas as float64 NaN (Arrow conversion);
     the merge must treat them as 0, not raise int(NaN)."""

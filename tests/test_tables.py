@@ -30,3 +30,17 @@ def test_cells_ragged_and_multi_table(spark):
 def test_no_tables_no_rows(spark):
     page = b"<html><body><main><p>plain prose only here</p></main></body></html>"
     assert table_cells(_pages(spark, [page])).count() == 0
+
+
+def test_cells_of_a_pdf_table(spark):
+    """PDF table items carry the same tab grid as HTML tables, so a
+    3-column PDF row gives three cells."""
+    from document_extractor_spark.sources.generator import build_pdf
+
+    page = [(72, 740, 12, ["intro paragraph line"])] + [
+        (x, y, 10, [f"r{r}c{c}"]) for r, y in enumerate((700, 688))
+        for c, x in enumerate((72, 200, 330))]
+    got = table_cells(_pages(spark, [build_pdf([page])])).collect()
+    assert {(r["table_idx"], r["row"], r["col"]): r["value"]
+            for r in got} == {(0, r, c): f"r{r}c{c}"
+                              for r in range(2) for c in range(3)}

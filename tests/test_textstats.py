@@ -297,3 +297,51 @@ def test_compression_ratio_separates_template_from_random(spark):
            for r in compression_ratio(df).collect()}
     assert got[1] < 150000
     assert got[2] > 500000
+
+
+# ---------------------------------------------------------------------------
+# Python string kernels over strings cast from invalid UTF-8
+# ---------------------------------------------------------------------------
+
+
+def test_string_udfs_total_on_invalid_utf8(spark):
+    """Valid, invalid-UTF-8 and NULL rows in one partition: no task
+    fails. The language and NFC kernels see ``make_valid_utf8``'s
+    repair, ``compression_ratio`` counts the row's own bytes."""
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from document_extractor_spark.operators.langseg import segment_languages
+    from document_extractor_spark.operators.textnorm import normalize_text
+    from document_extractor_spark.operators.textstats import (
+        compression_ratio, detect_languages)
+
+    english = b"the cat is on the mat and it is warm"
+    raw = {1: english, 2: b"\xe2", 3: b"\xff", 4: b"\xc3\x28",
+           5: b"\xed\xa0\x80", 6: english + b" \xff\n\nder hund ist nicht"
+           b" mit der katze und", 7: b"e\xcc\x81 \xe2", 8: None}
+    df = (spark.createDataFrame(list(raw.items()), "doc_id bigint, b binary")
+          .coalesce(1)
+          .select("doc_id", F.col("b").cast("string").alias("text")))
+
+    langs = {r["doc_id"]: r["lang_pred"]
+             for r in detect_languages(df).collect()}
+    assert langs == {1: "en", 2: "und", 3: "und", 4: "und", 5: "und",
+                     6: "en", 7: "und", 8: "und"}
+
+    segs = {r["doc_id"]: r for r in segment_languages(df).collect()}
+    assert sorted(segs) == [1, 2, 3, 4, 5, 6, 7]
+    assert (segs[6]["n_paras"], segs[6]["is_mixed"]) == (2, True)
+    assert segs[1]["main_lang"] == "en"
+
+    norm = {r["doc_id"]: r["text"] for r in normalize_text(df).collect()}
+    assert norm[1] == english.decode() and norm[8] is None
+    assert norm[7] == "\xe9 �"
+    assert all("�" in norm[i] for i in (2, 3, 4, 5, 6))
+
+    sizes = {r["doc_id"]: r for r in compression_ratio(df).collect()}
+    for i, b in raw.items():
+        want = (None, None) if b is None else (len(b),
+                                               len(zlib.compress(b, 6)))
+        assert (sizes[i]["n_bytes"], sizes[i]["n_compressed"]) == want
