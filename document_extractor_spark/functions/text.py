@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def tokens(col) -> Column:
@@ -229,6 +230,17 @@ def dup_char_fraction(lines: Column) -> Column:
     dup = F.aggregate(srt, zero, step, finish)
     total = F.aggregate(lines, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(total > 0, dup / total.cast("double")).otherwise(F.lit(0.0))
+
+
+def valid_utf8(df):
+    """``df`` with each top-level string column through
+    ``make_valid_utf8`` (bad bytes become U+FFFD), the rest untouched:
+    the one rule for strings entering a Python worker, whose pyarrow
+    pandas conversion fails the task on invalid UTF-8."""
+    return df.select(*(
+        F.make_valid_utf8(df[f.name]).alias(f.name)
+        if isinstance(f.dataType, T.StringType) else df[f.name]
+        for f in df.schema.fields))
 
 
 def char_array(col) -> Column:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .extract import _map_payloads
+
 
 def bitext_candidates(docs: DataFrame, alternates: DataFrame,
                       url_col: str = "url", lang_col: str = "lang",
@@ -155,14 +157,13 @@ def gale_church_align(pairs: DataFrame, id_col: str = "pair_id",
     traffic per pair is two int arrays regardless of document size.
 
     The DP is genuinely non-relational (quadratic recurrence with
-    backtrace), so it runs as a mapInPandas kernel — the sanctioned
+    backtrace), so it runs on ``extract._map_payloads`` — the sanctioned
     slow path — over rows that are already metadata-narrow. Cost is
     O(n·m) per pair: ``max_sentences`` guards the quadratic loudly
     (a 10k-sentence auto-generated page would be a 10^8-cell straggler;
     raise, never silently truncate). Each pair is independent —
     parallelism is per-row, no shuffle anywhere (plan-asserted narrow).
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     staged = pairs.select(
@@ -191,15 +192,10 @@ def gale_church_align(pairs: DataFrame, id_col: str = "pair_id",
         T.StructField("tgt_n", T.IntegerType()),
         T.StructField("cost_milli", T.LongType()),
     ])
-    cols = [f.name for f in out_schema.fields]
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for pid, sl, tl in zip(pdf["_id"], pdf["_sl"], pdf["_tl"]):
-                beads = _gc_align_lengths(list(sl), list(tl))
-                for k, (ss, sn, ts, tn, cm) in enumerate(beads):
-                    rows.append((pid, k, ss, sn, ts, tn, cm))
-            yield pd.DataFrame(rows, columns=cols)
+    def align(pid, sl, tl) -> list:
+        return [(pid, k, *bead) for k, bead in
+                enumerate(_gc_align_lengths(list(sl), list(tl)))]
 
-    return staged.mapInPandas(kernel, out_schema)
+    return _map_payloads(staged, ["_id", "_sl", "_tl"], align, out_schema,
+                         None)

@@ -32,7 +32,7 @@ from ..extractor.html_extract import classify_blocks, flatten
 from .extract import _map_payloads, host_col
 
 BLOCK_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("block_idx", T.IntegerType(), True),
     T.StructField("tag", T.StringType(), True),
     T.StructField("n_words", T.IntegerType(), True),

@@ -21,7 +21,8 @@ only: probe positions as column expressions, set into 32768-bit buckets
 by the ``bitmap_construct_agg`` aggregate (an OR — commutative,
 associative, idempotent — so the bytes are partitioning-invariant and
 no task merges the whole bitmap), then shipped to the probe as a
-closure.
+closure. The probe is a scalar pandas UDF over ``_fp`` alone: no user
+column crosses into Python.
 ``num_bits`` is the executor/driver memory bound: 2^30 bits = 128 MiB
 handles ~10^8 keys at 1% fpp; past ~10^10 keys the bitmap itself stops
 fitting and the plain anti-join (or a per-index-partition bloom) is the
@@ -37,8 +38,10 @@ and runs.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import content_hash, hex_int
 
@@ -94,8 +97,8 @@ def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
     The in-batch min-id dedup still sees every row — same contract.
 
     The index side builds the bitmap (one aggregate, ≤ num_bits/32768
-    collected bucket rows); the batch side is a vectorized Arrow probe
-    (4 bit tests/row) against the closure-captured bitmap — Spark
+    collected bucket rows); the batch side is a scalar pandas UDF over
+    ``_fp`` (4 bit tests/row) against the closure-captured bitmap — Spark
     serializes it into the task binary once per executor, the same
     distribution path a broadcast variable takes.
 
@@ -114,32 +117,23 @@ def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
             f"estimated fpp {est_fpp:.3f} > max_fpp {max_fpp}; size "
             f"num_bits >= ~10*n_keys (or use drop_known_duplicates)")
 
-    def probe(batches):
+    @F.pandas_udf(T.BooleanType())
+    def probe(fps: pd.Series) -> pd.Series:
         bitmap = np.frombuffer(bitmap_bytes, dtype=np.uint8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            # NULL fingerprint (NULL text) can never match the index —
-            # definite-fresh, same as the exact op's NULL-key anti-join
-            mask = pdf["_fp"].notna().to_numpy()
-            cand = np.zeros(len(pdf), dtype=bool)
-            if mask.any():
-                pos = _probe_positions(
-                    pdf["_fp"].to_numpy()[mask], num_bits)
-                cand[mask] = ((bitmap[pos >> 3] >> (pos & 7)) & 1) \
-                    .all(axis=1)
-            pdf["_candidate"] = cand
-            yield pdf
+        # NULL fingerprint (NULL text) can never match the index —
+        # definite-fresh, same as the exact op's NULL-key anti-join
+        mask = fps.notna().to_numpy()
+        cand = np.zeros(len(fps), dtype=bool)
+        if mask.any():
+            pos = _probe_positions(fps.to_numpy()[mask], num_bits)
+            cand[mask] = ((bitmap[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+        return pd.Series(cand)
 
-    keyed = new_docs.withColumn("_fp", content_hash(text_col))
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in keyed.schema.fields
-    ) + ", _candidate boolean"
     # persisted: four downstream consumers (hit side, miss side, the
     # survivors groupBy, the final semi-join) would otherwise each
     # re-run the Arrow probe AND content_hash over the full batch text
-    probed = keyed.mapInPandas(probe, schema).persist()
+    probed = (new_docs.withColumn("_fp", content_hash(text_col))
+              .withColumn("_candidate", probe("_fp")).persist())
     idx = known.select(F.col(fingerprint_col).alias("_fp"))
     hits = probed.where(F.col("_candidate"))
     fresh = (

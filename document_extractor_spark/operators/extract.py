@@ -37,8 +37,10 @@ Scale design (the 100 TB story):
   ``pdf_processor.py:227-235``). ``_map_payloads`` is the only place
   that rule is enforced: it is the one ``mapInPandas`` batch loop
   behind every per-document kernel — this operator,
-  ``blocks.block_profile``, the PDF probes in ``media`` and the image
-  kernels in ``multimodal``.
+  ``blocks.block_profile``, the PDF probes in ``media``, the image
+  kernels in ``multimodal`` and ``bitext``'s aligner. Its strings
+  cross through ``functions.text.valid_utf8``, and every output key
+  field is nullable, so a NULL key comes back as its own row.
 """
 
 from __future__ import annotations
@@ -51,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..extractor.core import extract_payload
+from ..functions.text import valid_utf8
 
 SPAN_TYPE = T.ArrayType(
     T.StructType([
@@ -61,7 +64,7 @@ SPAN_TYPE = T.ArrayType(
 )
 
 EXTRACT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("extracted_text", T.StringType(), True),
     T.StructField("spans", SPAN_TYPE, True),
     T.StructField("lang", T.StringType(), True),
@@ -129,11 +132,13 @@ def _map_payloads(df: DataFrame, cols: list[str],
                   error_col: Optional[str]) -> DataFrame:
     """The one per-document ``mapInPandas`` loop every payload kernel
     runs on (``extract_pages``, ``blocks.block_profile``, the PDF probes
-    in ``media``, the image kernels in ``multimodal``).
+    in ``media``, the image kernels in ``multimodal``, the sentence
+    aligner in ``bitext``).
 
     Selects only ``cols`` (the scan's ``ReadSchema`` prunes to them),
-    skips empty Arrow batches, zips each batch's column arrays and calls
-    ``fn(*values)`` per row; ``fn`` returns a list of output tuples in
+    repairs their strings with ``valid_utf8``, skips empty Arrow
+    batches, zips each batch's column arrays and calls ``fn(*values)``
+    per row; ``fn`` returns a list of output tuples in
     ``schema`` order (one per output row — fan-out kernels return many).
     If ``fn`` raises, the row becomes exactly one error row: the key
     (the first of ``cols``), ``error_col = "<ExcType>: <message>"`` and
@@ -161,7 +166,7 @@ def _map_payloads(df: DataFrame, cols: list[str],
             # float64 (a dHash would lose its low bits)
             yield pd.DataFrame(rows, columns=names, dtype=object)
 
-    return df.select(*cols).mapInPandas(run, schema=schema)
+    return valid_utf8(df.select(*cols)).mapInPandas(run, schema=schema)
 
 
 def host_col(url: Column = None) -> Column:

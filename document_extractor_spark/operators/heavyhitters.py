@@ -32,7 +32,8 @@ MG summary is the one genuinely imperative per-partition step, so it
 runs as an Arrow-batched ``mapInPandas`` over the *narrow single-column
 token stream* (never the document payload — a ``BatchEvalPython`` node
 can never appear, see tests); the exact pass is JVM join + map-side-
-combinable count.
+combinable count against a broadcast 1-row token total, so building
+the plan runs no Spark job.
 
 Determinism: exact counts and an exact integer threshold test
 (``cnt·10^6 ≥ ppm·N`` in BIGINT, no float) make the result identical
@@ -88,7 +89,7 @@ def frequent_tokens(df: DataFrame, id_col: str = "doc_id",
     or raise the threshold instead of silently building an
     un-broadcastable candidate set.
     """
-    from ..functions.text import exploded_tokens
+    from ..functions.text import exploded_tokens, tokens
 
     if not 0 < min_freq_ppm <= 1_000_000:
         raise ValueError(f"min_freq_ppm must be in (0, 10^6]: "
@@ -108,28 +109,19 @@ def frequent_tokens(df: DataFrame, id_col: str = "doc_id",
             f"max_candidates={max_candidates}; coalesce the input, "
             f"raise min_freq_ppm, or raise max_candidates explicitly")
 
-    # total token count: one cheap scan over the staged arrays (no
-    # explode) — a single driver-side number, like pagerank's vertex
-    # count. Guarded: an empty corpus short-circuits to empty output.
-    from ..functions.text import tokens as _tokens
+    # an empty corpus has a NULL total, which filters every row out
     n_total = df.select(
-        F.sum(F.size(_tokens(F.lower(F.col(text_col))))).alias("n")
-    ).collect()[0]["n"]
-    if not n_total:
-        return stream.groupBy(F.col("tok").alias("token")).agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.lit(0).cast("bigint").alias("freq_ppm")).limit(0)
-
+        F.sum(F.size(tokens(F.lower(F.col(text_col))))).alias("_n"))
     candidates = stream.mapInPandas(
         _mg_candidates(k), schema="tok string").distinct()
     counted = (
         stream.join(F.broadcast(candidates), "tok", "left_semi")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        .crossJoin(F.broadcast(n_total))
         .where(F.col("cnt") * F.lit(1_000_000)
-               >= F.lit(int(min_freq_ppm)) * F.lit(int(n_total)))
+               >= F.lit(int(min_freq_ppm)) * F.col("_n"))
     )
     return counted.select(
         F.col("tok").alias("token"), "cnt",
-        F.expr(f"(cnt * 1000000L) div {int(n_total)}")
-        .cast("bigint").alias("freq_ppm"))
+        F.expr("(cnt * 1000000L) div _n").cast("bigint").alias("freq_ppm"))

@@ -83,7 +83,7 @@ def _encode(px: np.ndarray) -> bytes:
 
 
 MEDIA_META_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("media_type", T.StringType(), True),
     T.StructField("width", T.IntegerType(), True),
     T.StructField("height", T.IntegerType(), True),
@@ -110,7 +110,7 @@ def probe_media(df: DataFrame, payload_col: str = "payload",
 
 
 CROP_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("payload", T.BinaryType(), True),
     T.StructField("width", T.IntegerType(), True),
     T.StructField("height", T.IntegerType(), True),
@@ -167,7 +167,7 @@ def resize_max_width(df: DataFrame, max_width: int = 1200,
 
 
 FRAME_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("frame_idx", T.IntegerType(), False),
     T.StructField("payload", T.BinaryType(), True),
 ])
@@ -212,7 +212,7 @@ def fake_image_from_seed(seeds: pd.Series) -> pd.Series:
 
 
 DHASH_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
+    T.StructField("url", T.StringType(), True),
     T.StructField("dhash", T.LongType(), True),
     T.StructField("decode_error", T.StringType(), True),
 ])
@@ -270,7 +270,7 @@ def image_features(df: DataFrame, payload_col: str = "payload",
     ``array<double>`` — the embedding-shaped output a real vision model
     would produce, computed deterministically from pixels."""
     schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
+        T.StructField("url", T.StringType(), True),
         T.StructField("features", T.ArrayType(T.DoubleType()), True),
         T.StructField("decode_error", T.StringType(), True),
     ])

@@ -16,12 +16,11 @@ replacement detects continuations structurally:
   and the rule of the single-page adjacent-table fix
   (openai_content_extractor_multipage.py:257-289).
 
-Spark mapping: the per-document sequential fold the reference runs in
-Python is ``groupBy(article).applyInPandas`` — one Arrow batch per
-document group, pages sorted inside the UDF, no per-row Python. The
-shuffle key is the article id (small: item rows, not raw payloads);
-Zipfian skew in pages-per-article is bounded by documents' page counts,
-not by host popularity.
+Spark mapping: one hash shuffle on the article id (small item rows,
+not raw payloads), an in-partition sort, then one streaming
+``mapInPandas`` whose strings cross through ``valid_utf8``. Zipfian
+skew in pages-per-article is bounded by documents' page counts, not by
+host popularity.
 """
 
 from __future__ import annotations
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..extractor.html_extract import splice_table_rows
+from ..functions.text import valid_utf8
 
 MERGED_SCHEMA = T.StructType([
     T.StructField("article_id", T.LongType(), False),
@@ -185,4 +185,5 @@ def merge_continuations(df: DataFrame, article_col: str = "article_id",
         keyed.repartition(n, "article_id")
         .sortWithinPartitions("article_id", "page_num", "order")
     )
-    return parted.mapInPandas(_merge_stream, schema=MERGED_SCHEMA)
+    return valid_utf8(parted).mapInPandas(_merge_stream,
+                                          schema=MERGED_SCHEMA)

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.text import hex_int, md5_of
+from ..functions.text import hex_int, md5_of, valid_utf8
 
 #: hex chars of the hash used as the uniform (0,1) fraction — 48 bits,
 #: exactly representable in a double in BOTH engines
@@ -94,7 +94,7 @@ def _kmv_sketch(df: DataFrame, key: Column, value_col: str,
             ks = sorted(s)[:k]
             yield pd.DataFrame({"key": [key] * len(ks), "h": ks})
 
-    part = hashed.mapInPandas(_partials, schema=out_schema)
+    part = valid_utf8(hashed).mapInPandas(_partials, schema=out_schema)
     return part.groupBy("key").agg(
         F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("_ks"))
 

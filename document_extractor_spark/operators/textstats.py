@@ -202,9 +202,10 @@ def c4_quality_filter(df: DataFrame, id_col: str = "doc_id",
 
 def host_stats(df, url_col: str = "url", bytes_col: str = None,
                error_col: str = None):
-    """Per-host crawl-health profile — the BATCH twin of the streaming
-    ``stream_host_stats`` counters (A4, SURVEY §2.7): docs, parse
-    failures, bytes per host, host parsed JVM-side via ``parse_url``.
+    """Per-host crawl-health profile (A4, SURVEY §2.7): docs, parse
+    failures, bytes per host, host parsed JVM-side via ``host_col``.
+    Over a stream it is ``streaming.jobs.stream_host_stats``: the same
+    aggregation, run in update mode.
     One shuffle on the host key; Zipfian host skew is bounded by
     map-side partial aggregation (counts/sums combine before the
     exchange), so a mega-host costs its reducer one merged row per map

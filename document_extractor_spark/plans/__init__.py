@@ -24,8 +24,11 @@ def assert_vectorized_python_only(df: DataFrame) -> None:
 
 
 def assert_no_python(df: DataFrame) -> None:
+    """No Python node (``FlatMapGroupsInPandas`` also matches its
+    ``…WithState`` form, ``MapInArrow`` also ``PythonMapInArrow``)."""
     plan = physical_plan(df)
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                 "FlatMapGroupsInPandas", "MapInArrow"):
         assert node not in plan, f"unexpected Python boundary {node}:\n{plan}"
 
 

@@ -8,6 +8,8 @@ engine exposes its operators as streaming jobs:
   ``readStream`` micro-batches (mapInPandas works unchanged in streaming).
 - ``stream_event_counts`` — watermarked tumbling-window aggregation.
 - ``stream_sessionize`` — ``session_window`` gap sessions.
+- ``stream_host_stats`` — the batch ``textstats.host_stats``
+  aggregation in update mode.
 
 All testable synchronously against parquet sources with a memory sink
 (``processAllAvailable``).
@@ -20,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
+from ..operators.textstats import host_stats
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -78,59 +81,13 @@ def stream_sessionize(events: DataFrame, gap: str = "30 minutes",
 
 
 def stream_host_stats(extracted_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-host
-    running crawl-health counters (docs, parse failures, bytes in) that
-    survive across micro-batches — the A4 run counters (SURVEY.md §2.7)
-    as continuous state. Each trigger emits the updated totals for hosts
-    seen in that batch (update mode).
-
-    State is one small tuple per host — bounded by the host cardinality,
-    not the stream length; at crawl scale pair with a host-hash bucket
-    key to cap group count.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType([
-        T.StructField("host", T.StringType()),
-        T.StructField("docs", T.LongType()),
-        T.StructField("parse_failures", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("docs", T.LongType()),
-        T.StructField("parse_failures", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        docs, fails, bts = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            docs += len(pdf)
-            fails += int(pdf["parse_error"].notna().sum())
-            bts += int(pdf["n_bytes_in"].fillna(0).sum())
-        state.update((docs, fails, bts))
-        yield pd.DataFrame(
-            [{"host": key[0], "docs": docs, "parse_failures": fails,
-              "bytes_in": bts}]
-        )
-
-    from ..operators.extract import host_col
-
-    with_host = extracted_stream.withColumn(
-        # host_col = try_parse_url + lowercase: parse_url raises on
-        # malformed URLs — a hostile row would kill the streaming query,
-        # not just one task — and case-variant hosts must share a key
-        "host", host_col()
-    )
-    return with_host.groupBy("host").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Per-host running crawl-health counters (docs, parse failures,
+    bytes in; SURVEY.md §2.7 A4): the batch ``textstats.host_stats``
+    as a streaming aggregation, with no Python. In update mode each
+    trigger emits the new totals of the hosts it saw; state is one
+    aggregation buffer per host."""
+    return host_stats(extracted_stream, "url", bytes_col="n_bytes_in",
+                      error_col="parse_error")
 
 
 def run_stream_to_memory(stream_df: DataFrame, name: str,

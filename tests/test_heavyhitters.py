@@ -70,3 +70,23 @@ def test_empty_and_null_corpus(spark):
 def test_plan_is_arrow_vectorized_only(spark):
     df = _docs(spark, ["x y z"] * 4)
     assert_vectorized_python_only(frequent_tokens(df, min_freq_ppm=10_000))
+
+
+def test_plan_build_runs_no_job(spark):
+    """The corpus token total is a broadcast 1-row aggregate, not a
+    driver-side collect: building the plan starts no Spark job, and an
+    empty corpus (NULL total) still gives no rows."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1, "a b a"), (2, "b c")],
+                               "doc_id bigint, text string")
+    sc.setJobGroup("frequent_tokens_plan", "plan build only")
+    try:
+        out = frequent_tokens(df, min_freq_ppm=300_000)
+        jobs = sc.statusTracker().getJobIdsForGroup("frequent_tokens_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert sorted(map(tuple, out.collect())) == [("a", 2, 400_000),
+                                                 ("b", 2, 400_000)]
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    assert frequent_tokens(empty, min_freq_ppm=1000).collect() == []

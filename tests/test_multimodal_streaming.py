@@ -323,6 +323,24 @@ def test_stream_host_stats_stateful(spark, tmp_path):
     assert got == truth
 
 
+def test_stream_host_stats_runs_no_python(spark):
+    """``stream_host_stats`` is the batch ``host_stats`` aggregation:
+    its plan has no Python node, hosts fold case, a NULL or unparsable
+    url groups under the NULL host."""
+    from document_extractor_spark.plans import assert_no_python
+    from document_extractor_spark.streaming.jobs import stream_host_stats
+
+    df = spark.createDataFrame(
+        [("http://A.example/x", None, 10), ("http://a.example/y", "E: x",
+                                            None),
+         (None, None, 3), ("not a url", "E: y", 5)],
+        "url string, parse_error string, n_bytes_in bigint")
+    out = stream_host_stats(df)
+    assert_no_python(out)
+    assert sorted(map(tuple, out.collect()), key=str) == [
+        ("a.example", 2, 1, 10), (None, 2, 1, 8)]
+
+
 def test_stream_dedup_exact_within_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark on the content hash: a corpus
     written twice (same pages, second copy inside the horizon) must

@@ -1,3 +1,6 @@
+import pytest
+
+
 
 
 def test_doc_top_terms_ranking(spark):
@@ -304,26 +307,37 @@ def test_compression_ratio_separates_template_from_random(spark):
 # ---------------------------------------------------------------------------
 
 
+_ENGLISH = b"the cat is on the mat and it is warm"
+# valid, lone lead byte, stray byte, bad continuation, surrogate, valid
+# text around one stray byte, decomposed é before a lone lead, NULL
+_RAW_UTF8 = {1: _ENGLISH, 2: b"\xe2", 3: b"\xff", 4: b"\xc3\x28",
+             5: b"\xed\xa0\x80", 6: _ENGLISH + b" \xff\n\nder hund ist"
+             b" nicht mit der katze und", 7: b"e\xcc\x81 \xe2", 8: None}
+
+
+def _hostile_text(spark):
+    """``(doc_id, text)``: ``_RAW_UTF8`` cast to string, one partition."""
+    from pyspark.sql import functions as F
+
+    return (spark.createDataFrame(list(_RAW_UTF8.items()),
+                                  "doc_id bigint, b binary")
+            .coalesce(1)
+            .select("doc_id", F.col("b").cast("string").alias("text")))
+
+
 def test_string_udfs_total_on_invalid_utf8(spark):
     """Valid, invalid-UTF-8 and NULL rows in one partition: no task
     fails. The language and NFC kernels see ``make_valid_utf8``'s
     repair, ``compression_ratio`` counts the row's own bytes."""
     import zlib
 
-    from pyspark.sql import functions as F
-
     from document_extractor_spark.operators.langseg import segment_languages
     from document_extractor_spark.operators.textnorm import normalize_text
     from document_extractor_spark.operators.textstats import (
         compression_ratio, detect_languages)
 
-    english = b"the cat is on the mat and it is warm"
-    raw = {1: english, 2: b"\xe2", 3: b"\xff", 4: b"\xc3\x28",
-           5: b"\xed\xa0\x80", 6: english + b" \xff\n\nder hund ist nicht"
-           b" mit der katze und", 7: b"e\xcc\x81 \xe2", 8: None}
-    df = (spark.createDataFrame(list(raw.items()), "doc_id bigint, b binary")
-          .coalesce(1)
-          .select("doc_id", F.col("b").cast("string").alias("text")))
+    english, raw = _ENGLISH, _RAW_UTF8
+    df = _hostile_text(spark)
 
     langs = {r["doc_id"]: r["lang_pred"]
              for r in detect_languages(df).collect()}
@@ -345,3 +359,148 @@ def test_string_udfs_total_on_invalid_utf8(spark):
         want = (None, None) if b is None else (len(b),
                                                len(zlib.compress(b, 6)))
         assert (sizes[i]["n_bytes"], sizes[i]["n_compressed"]) == want
+
+
+_PAGE = (b"<html><body><h1>Field notes</h1><p>" + b"The river rose over"
+         b" the low fields this spring, and the farmers moved their herds"
+         b" to the hills before the water reached the barns. " * 3
+         + b"</p></body></html>")
+
+
+def _pages_bad_url(df):
+    from pyspark.sql import functions as F
+
+    return df.select(F.col("text").alias("url"), F.lit(_PAGE).alias("html"))
+
+
+def _extract_bad_url(df):
+    from document_extractor_spark.operators.extract import extract_pages
+
+    return extract_pages(_pages_bad_url(df))
+
+
+def _extract_bad_lang(df):
+    from pyspark.sql import functions as F
+
+    from document_extractor_spark.operators.extract import extract_pages
+
+    return extract_pages(df.select(
+        F.concat(F.lit("http://h"), F.col("doc_id"),
+                 F.lit(".example/")).alias("url"),
+        F.lit(_PAGE).alias("html"), F.col("text").alias("lang")))
+
+
+def _block_profile(df):
+    from document_extractor_spark.operators.blocks import block_profile
+
+    return block_profile(_pages_bad_url(df))
+
+
+def _pdf_metadata_probe(df):
+    from document_extractor_spark.operators.media import pdf_metadata_probe
+
+    return pdf_metadata_probe(_pages_bad_url(df))
+
+
+def _probe_media(df):
+    from pyspark.sql import functions as F
+
+    from document_extractor_spark.operators.multimodal import probe_media
+
+    return probe_media(df.select(F.col("text").alias("url"),
+                                 F.col("text").cast("binary")
+                                 .alias("payload")))
+
+
+def _merge_continuations(df):
+    from pyspark.sql import functions as F
+
+    from document_extractor_spark.operators.multipage import (
+        merge_continuations)
+
+    item = [F.col("doc_id").alias("article_id"), F.lit("paragraph")
+            .alias("type"), F.lit(None).cast("string").alias("html"),
+            F.lit(0).alias("row_count"), F.lit(0).alias("column_count")]
+    first = df.select(*item, F.lit(1).alias("page_num"),
+                      F.lit(0).alias("order"),
+                      F.lit("An article starts and").alias("content"))
+    second = df.select(*item, F.lit(2).alias("page_num"),
+                       F.lit(0).alias("order"), F.col("text")
+                       .alias("content"))
+    return merge_continuations(first.unionByName(second), partitions=1)
+
+
+def _bitext_align(df):
+    from pyspark.sql import functions as F
+
+    from document_extractor_spark.operators.bitext import gale_church_align
+
+    return gale_church_align(df.select(
+        F.col("text").alias("pair_id"),
+        F.split("text", " ").alias("src_sents"),
+        F.split("text", " ").alias("tgt_sents")))
+
+
+def _kmv_distinct(df):
+    from document_extractor_spark.operators.sketch import kmv_distinct
+
+    return kmv_distinct(df, "text", "doc_id")
+
+
+# boundary → (operator over the hostile frame, rows it returns, whether
+# the NULL text is the key of one of them)
+_BOUNDARIES = {
+    "extract_pages_url": (_extract_bad_url, 8, True),
+    "extract_pages_lang": (_extract_bad_lang, 8, False),
+    "block_profile": (_block_profile, 16, True),
+    "pdf_metadata_probe": (_pdf_metadata_probe, 8, True),
+    "probe_media": (_probe_media, 8, True),
+    "merge_continuations": (_merge_continuations, 13, False),
+    "gale_church_align": (_bitext_align, 34, False),
+    "kmv_distinct": (_kmv_distinct, 7, True),
+}
+
+
+@pytest.mark.parametrize("boundary", sorted(_BOUNDARIES))
+def test_python_boundaries_total_on_invalid_utf8(spark, boundary):
+    """Every Python boundary whose input holds a string, over the same
+    valid, invalid-UTF-8 and NULL rows in one partition: no task fails,
+    a NULL key comes back as its own row, and the valid row's output is
+    what the operator gives on that row alone."""
+    op, n_rows, null_key = _BOUNDARIES[boundary]
+    df = _hostile_text(spark)
+    got = [tuple(r) for r in op(df).collect()]
+    alone = [tuple(r) for r in op(df.where("doc_id = 1")).collect()]
+    assert alone and all(r in got for r in alone)
+    assert len(got) == n_rows
+    assert (None in {r[0] for r in got}) == null_key
+
+
+def test_bloom_and_heavy_hitters_total_on_invalid_utf8(spark):
+    """The Bloom probe and the Misra–Gries pass over the same rows:
+    the Bloom result equals the exact anti-join's, and the frequent
+    tokens equal the exact token counts."""
+    from document_extractor_spark.functions.text import (exploded_tokens,
+                                                         fingerprint)
+    from document_extractor_spark.operators.bloom import (
+        drop_known_duplicates_bloom)
+    from document_extractor_spark.operators.dedup import (
+        drop_known_duplicates)
+    from document_extractor_spark.operators.heavyhitters import (
+        frequent_tokens)
+
+    df = _hostile_text(spark)
+    known = spark.createDataFrame([(_ENGLISH.decode(),)], "text string") \
+        .select(fingerprint("text").alias("fingerprint"))
+    bloom = sorted(map(tuple, drop_known_duplicates_bloom(df, known)
+                       .collect()), key=str)
+    exact = sorted(map(tuple, drop_known_duplicates(df, known).collect()),
+                   key=str)
+    assert bloom == exact and 1 not in {r[0] for r in bloom}
+
+    got = {(r["token"], r["cnt"]) for r in
+           frequent_tokens(df, min_freq_ppm=1).collect()}
+    toks = exploded_tokens(df, "doc_id", "text")
+    want = {(r["tok"], r["count"])
+            for r in toks.groupBy("tok").count().collect()}
+    assert got == want and ("the", 4) in got
