@@ -1479,10 +1479,12 @@ def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HyperLogLog parity: the events table replayed as a
     REAL Structured Streaming job (file micro-batches, one file per
-    trigger, applyInPandasWithState register state, update-mode memory
-    sink). Register max is commutative and idempotent, so the final
-    per-key state equals the batch sketch EXACTLY regardless of batch
-    slicing — the oracle is the identical batch HLL oracle."""
+    trigger, register maxima held by a streaming aggregation,
+    update-mode memory sink; the last emission of a key is its
+    max-``n_rows`` row). Register max is commutative and idempotent,
+    so the final per-key state equals the batch sketch EXACTLY
+    regardless of batch slicing — the oracle is the identical batch
+    HLL oracle."""
     import os
     import tempfile
     import uuid
@@ -1502,7 +1504,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_stream_to_memory(out, name, output_mode="update")
     mem = spark.table(name)
     final = mem.groupBy("key").agg(
-        F.max(F.struct("updates", "n_used", "est_distinct")).alias("s"))
+        F.max(F.struct("n_rows", "n_used", "est_distinct")).alias("s"))
     return final.select(
         "key", F.col("s.n_used").alias("n_used"),
         F.col("s.est_distinct").cast("bigint").alias("est_distinct"))
@@ -4694,8 +4696,8 @@ def q_sniff_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # frequent_tokens: the exact GROUP BY answer — integer-exact
-# threshold test (cnt*10^6 >= ppm*N) and floor-div ppm, so the
-# sketch-accelerated Spark plan must reproduce it bit-for-bit.
+# threshold test (cnt*10^6 >= ppm*N) and floor-div ppm, which the
+# Spark aggregation must reproduce bit-for-bit.
 @query("""
     WITH toks AS (
       SELECT unnest(list_filter(regexp_split_to_array(
@@ -4709,11 +4711,9 @@ def q_sniff_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING COUNT(*) * 1000000 >= 1000 * (SELECT n FROM tot)
 """)
 def q_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact heavy hitters at 1000 ppm (0.1% of all corpus tokens) via
-    the 2-pass Misra-Gries candidate sketch + exact verify. The oracle
-    is the plain exact GROUP BY answer — the sketch can only
-    over-generate candidates, so matching it proves both the survivor
-    guarantee and the exact second pass."""
+    """Exact heavy hitters at 1000 ppm (0.1% of all corpus tokens):
+    one exact token count against a broadcast corpus token total,
+    with no Python node. The oracle is the same exact GROUP BY."""
     from document_extractor_spark.operators.heavyhitters import (
         frequent_tokens)
 

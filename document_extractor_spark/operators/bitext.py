@@ -166,12 +166,15 @@ def gale_church_align(pairs: DataFrame, id_col: str = "pair_id",
     """
     from pyspark.sql import types as T
 
+    # a NULL sentence is length 0, like an empty one
     staged = pairs.select(
         F.col(id_col).alias("_id"),
         F.transform(F.coalesce(F.col(src_col), F.array()),
-                    lambda s: F.length(s)).alias("_sl"),
+                    lambda s: F.coalesce(F.length(s), F.lit(0)))
+        .alias("_sl"),
         F.transform(F.coalesce(F.col(tgt_col), F.array()),
-                    lambda s: F.length(s)).alias("_tl"),
+                    lambda s: F.coalesce(F.length(s), F.lit(0)))
+        .alias("_tl"),
     )
     over = staged.where(
         (F.size("_sl") > max_sentences) | (F.size("_tl") > max_sentences))

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import hex_int, md5_of
@@ -94,18 +94,25 @@ def bucket_rank_projection(df: DataFrame, key_col: str,
     return staged.select("key", "bucket", rank.alias("rank"))
 
 
-def estimate_from_registers(regs) -> tuple:
-    """(n_used, est_distinct) from a ``{bucket: rank}`` register map —
-    the documented integer estimator, importable by the streaming twin
-    and tests so the formula exists exactly once."""
-    n_used = len(regs)
-    v_empty = M - n_used
-    s_total = sum(1 << (CAP - r) for r in regs.values()) \
-        + v_empty * (1 << CAP)
-    raw = (ALPHA_MILLI * M * M * (1 << CAP)) // (1000 * s_total)
-    if raw <= 5 * M // 2 and v_empty > 0:
-        return n_used, (M * LN_TABLE[v_empty - 1]) // LN_SCALE
-    return n_used, raw
+def hll_estimate(n_used: Column, s_used: Column) -> Column:
+    """The documented integer estimator over the touched-register count
+    ``n_used`` and ``s_used = sum(2^(CAP - reg))`` of those registers:
+    linear counting below 2.5m while an empty register exists, the
+    register harmonic mean above. One Column expression, shared by the
+    batch sketch and its streaming twin."""
+    v_empty = F.lit(M) - n_used
+    s_total = (s_used
+               + v_empty.cast("bigint") * F.lit(1 << CAP).cast("bigint"))
+    raw = F.floor(F.lit(ALPHA_MILLI * M * M * (1 << CAP)).cast("bigint")
+                  / (F.lit(1000).cast("bigint") * s_total))
+    ln_arr = F.array(*[F.lit(x) for x in LN_TABLE])
+    linear = F.floor(
+        F.lit(M).cast("bigint")
+        * F.element_at(ln_arr, v_empty.cast("int")).cast("bigint")
+        / F.lit(LN_SCALE).cast("bigint"))
+    est = F.when((raw <= F.lit(5 * M // 2)) & (v_empty > 0), linear) \
+           .otherwise(raw)
+    return est.cast("bigint")
 
 
 def hll_distinct(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
@@ -124,21 +131,10 @@ def hll_distinct(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
         F.count("*").cast("int").alias("n_used"),
         F.sum(F.expr(f"shiftleft(cast(1 as bigint), {CAP} - reg)"))
         .alias("s_used"))
-
-    v_empty = F.lit(M) - F.col("n_used")
-    s_total = (F.col("s_used")
-               + v_empty.cast("bigint") * F.lit(1 << CAP).cast("bigint"))
-    raw = F.floor(F.lit(ALPHA_MILLI * M * M * (1 << CAP)).cast("bigint")
-                  / (F.lit(1000).cast("bigint") * s_total))
-    ln_arr = F.array(*[F.lit(x) for x in LN_TABLE])
-    linear = F.floor(
-        F.lit(M).cast("bigint")
-        * F.element_at(ln_arr, v_empty.cast("int")).cast("bigint")
-        / F.lit(LN_SCALE).cast("bigint"))
-    est = F.when((raw <= F.lit(5 * M // 2)) & (v_empty > 0), linear) \
-           .otherwise(raw)
     return folded.select(
-        "key", "n_used", est.cast("bigint").alias("est_distinct"))
+        "key", "n_used",
+        hll_estimate(F.col("n_used"), F.col("s_used"))
+        .alias("est_distinct"))
 
 
 def hll_oracle_sql(table: str, key_col: str, value_col: str) -> str:

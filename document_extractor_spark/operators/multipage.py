@@ -63,15 +63,14 @@ def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     of the whole batch by (article, page, order), one linear pass with
     article-boundary detection, one output frame."""
     # Arrow→pandas turns nullable int columns into float64 with NaN, and
-    # int(NaN or 0) raises (NaN is truthy) — normalize once up front.
-    for col in ("row_count", "column_count", "page_num", "order"):
-        if col in pdf.columns:
-            pdf[col] = (
-                pd.to_numeric(pdf[col], errors="coerce")
-                .fillna(0).astype("int64")
-            )
-    pdf = pdf.sort_values(["article_id", "page_num", "order"],
-                          kind="mergesort")
+    # int(NaN or 0) raises (NaN is truthy) — normalize once up front,
+    # into a new frame: ``pdf`` may be a slice of the caller's batch.
+    pdf = pdf.assign(**{
+        col: pd.to_numeric(pdf[col], errors="coerce").fillna(0)
+        .astype("int64")
+        for col in ("row_count", "column_count", "page_num", "order")
+        if col in pdf.columns
+    }).sort_values(["article_id", "page_num", "order"], kind="mergesort")
     out: list[dict] = []
     cur_article = object()
     article_start = 0
@@ -177,12 +176,12 @@ def merge_continuations(df: DataFrame, article_col: str = "article_id",
     the plan survives a 100× scale-up where any whole-group
     materialization (``groupBy.applyInPandas``) would not.
 
-    ``partitions`` defaults to the input partition count (min 32) so
-    shuffle-partition sizing tracks the data volume."""
+    Without ``partitions`` the shuffle is sized by AQE (building the
+    plan starts no Spark job)."""
     keyed = df.withColumnRenamed(article_col, "article_id")
-    n = partitions or max(32, keyed.rdd.getNumPartitions())
     parted = (
-        keyed.repartition(n, "article_id")
+        (keyed.repartition(partitions, "article_id") if partitions
+         else keyed.repartition("article_id"))
         .sortWithinPartitions("article_id", "page_num", "order")
     )
     return valid_utf8(parted).mapInPandas(_merge_stream,

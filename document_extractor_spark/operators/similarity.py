@@ -91,30 +91,14 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((dim, n_planes))
 
 
-def srp_bucket_udf(dim: int, n_planes: int = 8, seed: int = 42):
-    """Vectorized pandas UDF: one numpy matmul per Arrow batch → int bucket
-    id from projection sign bits. This is the showcase 'Python only as
-    Arrow-batched numpy' operator."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket(col: pd.Series) -> pd.Series:
-        mat = np.vstack(col.to_numpy())           # (batch, dim)
-        signs = (mat @ planes) > 0                # (batch, n_planes)
-        ids = np.zeros(len(col), dtype=np.int32)
-        for j in range(n_planes):
-            ids |= signs[:, j].astype(np.int32) << j
-        return pd.Series(ids)
-
-    return bucket
-
-
 def srp_index(df: DataFrame, dim: int, n_planes: int = 8, seed: int = 42,
               vec_col: str = "embedding") -> DataFrame:
     """Bucketed index: (… , bucket). At scale, write this out partitioned
-    by bucket so probes become partition-pruned scans."""
-    udf = srp_bucket_udf(dim, n_planes, seed)
-    return df.withColumn("bucket", udf(F.col(vec_col)))
+    by bucket so probes become partition-pruned scans. The bucket is
+    the single band of ``srp_band_buckets_udf``; a NULL vector gets a
+    NULL bucket."""
+    udf = srp_band_buckets_udf(dim, 1, n_planes, seed)
+    return df.withColumn("bucket", F.element_at(udf(F.col(vec_col)), 1))
 
 
 def _probe_buckets(qvec: list, dim: int, n_planes: int, seed: int,
@@ -144,17 +128,23 @@ def ann_topk(indexed: DataFrame, qvec: list, k: int = 10, dim: int = 64,
 def srp_band_buckets_udf(dim: int, n_bands: int = 8,
                          planes_per_band: int = 16, seed: int = 42):
     """Vectorized pandas UDF: n_bands independent SRP bucket ids per
-    vector (one numpy matmul per Arrow batch over all bands' planes)."""
+    vector (one numpy matmul per Arrow batch over all bands' planes).
+    This is the showcase 'Python only as Arrow-batched numpy' operator;
+    a NULL vector gets NULL buckets."""
     planes = _hyperplanes(dim, n_bands * planes_per_band, seed)
     weights = (1 << np.arange(planes_per_band)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def buckets(col: pd.Series) -> pd.Series:
-        mat = np.vstack(col.to_numpy())                    # (batch, dim)
-        signs = (mat @ planes) > 0                         # (batch, B*P)
-        s = signs.reshape(len(col), n_bands, planes_per_band)
-        ids = (s * weights).sum(axis=2).astype(np.int32)   # (batch, B)
-        return pd.Series(list(ids))
+        mask = col.notna().to_numpy()
+        out = pd.Series([None] * len(col), dtype=object)
+        if mask.any():
+            mat = np.vstack(col[mask].to_numpy())          # (batch, dim)
+            signs = (mat @ planes) > 0                     # (batch, B*P)
+            s = signs.reshape(len(mat), n_bands, planes_per_band)
+            ids = (s * weights).sum(axis=2).astype(np.int32)
+            out.iloc[np.flatnonzero(mask)] = list(ids)
+        return out
 
     return buckets
 

@@ -10,6 +10,8 @@ engine exposes its operators as streaming jobs:
 - ``stream_sessionize`` — ``session_window`` gap sessions.
 - ``stream_host_stats`` — the batch ``textstats.host_stats``
   aggregation in update mode.
+- ``stream_hll_distinct`` — the batch HyperLogLog registers as a
+  streaming aggregation in update mode.
 
 All testable synchronously against parquet sources with a memory sink
 (``processAllAvailable``).
@@ -175,68 +177,41 @@ def run_stream_dedup_foreach_batch(spark: SparkSession, input_path: str,
 def stream_hll_distinct(keyed_stream: DataFrame, key_col: str,
                         value_col: str) -> DataFrame:
     """Streaming HyperLogLog: continuous per-key distinct-count
-    estimates via ``applyInPandasWithState`` — state is the m=64
-    register array (one small int tuple per key, bounded by key
-    cardinality, NEVER by stream length — the whole point of carrying
-    a sketch instead of a seen-set).
+    estimates as a streaming aggregation, with no Python. State is one
+    aggregation buffer per key — the m=64 register maxima
+    (``max(CASE WHEN bucket = b THEN rank END)``) and a row count —
+    bounded by key cardinality, NEVER by stream length (the whole point
+    of carrying a sketch instead of a seen-set).
 
-    The (bucket, rank) projection is the SAME JVM-side expression as
-    the batch operator (``operators.hll.bucket_rank_projection``), and
-    register max is commutative/idempotent, so the final state after
-    any micro-batch slicing equals the batch sketch exactly — the
-    driver oracle for the streaming query IS the batch oracle. Each
-    trigger emits (key, updates, n_used, est_distinct) for keys seen
-    in that batch (update mode); ``updates`` is a monotone per-key
-    batch counter so a final-state reader takes the max-``updates``
-    row per key."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    The (bucket, rank) projection is the SAME expression as the batch
+    operator (``operators.hll.bucket_rank_projection``) and the
+    estimate is the same ``hll_estimate`` Column; register max is
+    commutative and idempotent, so the final state after any
+    micro-batch slicing equals the batch sketch exactly — the driver
+    oracle for the streaming query IS the batch oracle. In update mode
+    each trigger emits ``(key, n_rows, n_used, est_distinct)`` for the
+    keys it saw. ``n_rows`` (rows folded so far) grows with every
+    emission of a key, so a final-state reader takes the max-``n_rows``
+    row per key; ``est_distinct`` alone is not monotone across the
+    linear-counting switch."""
     from ..operators.hll import (
-        M, bucket_rank_projection, estimate_from_registers)
-
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("updates", T.LongType()),
-        T.StructField("n_used", T.IntegerType()),
-        T.StructField("est_distinct", T.LongType()),
-    ])
-    # registers as a fixed-width int array + the update counter
-    state_schema = T.StructType([
-        T.StructField("regs", T.ArrayType(T.IntegerType())),
-        T.StructField("updates", T.LongType()),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            regs_list, updates = state.get
-            regs_list = list(regs_list)
-        else:
-            regs_list, updates = [0] * M, 0
-        for pdf in pdfs:
-            for b, r in zip(pdf["bucket"].to_numpy(),
-                            pdf["rank"].to_numpy()):
-                b = int(b)
-                if r > regs_list[b]:
-                    regs_list[b] = int(r)
-        updates += 1
-        state.update((regs_list, updates))
-        n_used, est = estimate_from_registers(
-            {b: r for b, r in enumerate(regs_list) if r > 0})
-        yield pd.DataFrame([{
-            "key": key[0], "updates": updates,
-            "n_used": n_used, "est_distinct": est,
-        }])
+        CAP, M, bucket_rank_projection, hll_estimate)
 
     projected = bucket_rank_projection(keyed_stream, key_col, value_col)
-    return projected.groupBy("key").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    registers = projected.groupBy("key").agg(
+        F.array(*[F.max(F.when(F.col("bucket") == b, F.col("rank")))
+                  for b in range(M)]).alias("regs"),
+        F.count("*").alias("n_rows"))
+    folded = registers.select(
+        "key", "n_rows",
+        F.size(F.filter("regs", lambda r: r.isNotNull())).alias("n_used"),
+        F.expr(f"aggregate(regs, 0L, (acc, r) -> acc"
+               f" + coalesce(shiftleft(1L, {CAP} - r), 0L))")
+        .alias("s_used"))
+    return folded.select(
+        "key", "n_rows", "n_used",
+        hll_estimate(F.col("n_used"), F.col("s_used"))
+        .alias("est_distinct"))
 
 
 #: a subscription set is standing-query metadata inlined into the plan

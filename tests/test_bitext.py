@@ -136,6 +136,20 @@ def test_gale_church_matches_bruteforce(spark):
             for r in got] == [(x[0], x[1], x[2], x[3]) for x in best]
 
 
+def test_gale_church_null_sentence_is_empty(spark):
+    """A NULL sentence aligns as an empty one instead of failing the
+    task (its length is 0 in the staged projection)."""
+    from document_extractor_spark.operators.bitext import gale_church_align
+
+    def beads(src):
+        rows = gale_church_align(_pairs(spark, [(1, src, ["x y"])])) \
+            .collect()
+        return sorted(tuple(r) for r in rows)
+
+    got = beads(["a b", None])
+    assert got and got == beads(["a b", ""])
+
+
 def test_gale_church_cap_raises(spark):
     import pytest
 

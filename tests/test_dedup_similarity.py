@@ -226,6 +226,36 @@ def test_ann_recall_vs_bruteforce(spark, emb):
     assert len(set(exact) & set(approx)) >= 3
 
 
+def test_srp_bucketers_total_on_null_embedding(spark, emb):
+    """A NULL embedding gets a NULL bucket instead of failing the task;
+    every other bucket is the sign-bit id of the same hyperplanes, and
+    the banded blocking pairs the non-NULL rows as before."""
+    import numpy as np
+
+    from document_extractor_spark.operators.similarity import (
+        _hyperplanes,
+        srp_band_candidates,
+    )
+
+    null = spark.createDataFrame([(900, None)],
+                                 "vec_id long, embedding array<float>")
+    with_null = emb.unionByName(null)
+    got = {r["vec_id"]: r["bucket"]
+           for r in srp_index(with_null, dim=16, n_planes=6).collect()}
+    assert got.pop(900) is None
+    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
+    signs = (np.asarray([r["embedding"] for r in rows], dtype=np.float32)
+             @ _hyperplanes(16, 6, 42)) > 0
+    want = (signs * (1 << np.arange(6))).sum(axis=1)
+    assert got == {r["vec_id"]: int(b) for r, b in zip(rows, want)}
+
+    pairs = {(r.id_a, r.id_b) for r in srp_band_candidates(
+        with_null, dim=16, n_bands=4, planes_per_band=8).collect()}
+    assert (3, 500) in pairs
+    assert pairs == {(r.id_a, r.id_b) for r in srp_band_candidates(
+        emb, dim=16, n_bands=4, planes_per_band=8).collect()}
+
+
 def test_embedding_near_duplicates(spark, emb):
     pairs = embedding_near_duplicates(emb, dim=16, threshold=0.999)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}

@@ -117,9 +117,27 @@ def test_stream_hll_equals_batch(spark, tmp_path):
         mem = spark.table(f"t_stream_hll_{n}")
         from pyspark.sql import functions as SF
         final = (mem.groupBy("key")
-                 .agg(SF.max(SF.struct("updates", "n_used",
+                 .agg(SF.max(SF.struct("n_rows", "n_used",
                                        "est_distinct")).alias("s"))
                  .select("key", "s.n_used",
                          SF.col("s.est_distinct").cast("bigint")
                          .alias("est_distinct")))
         assert sorted(tuple(r) for r in final.collect()) == batch, n
+
+
+def test_stream_hll_plan_has_no_python(spark):
+    """The streaming sketch is one aggregation over the batch
+    projection: no Python node, and over a batch frame it equals the
+    batch sketch with ``n_rows`` counting each key's non-NULL values."""
+    from document_extractor_spark.streaming.jobs import stream_hll_distinct
+
+    df = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("a", 2), ("b", None), ("b", 7), (None, 3)],
+        "key string, v bigint")
+    out = stream_hll_distinct(df, "key", "v")
+    assert_no_python(out)
+    got = sorted(map(tuple, out.collect()), key=str)
+    batch = {r["key"]: (r["n_used"], r["est_distinct"])
+             for r in hll_distinct(df, "key", "v").collect()}
+    assert got == sorted(((k, n, *batch[k]) for k, n in
+                          (("a", 3), ("b", 1), (None, 1))), key=str)

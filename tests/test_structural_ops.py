@@ -210,6 +210,49 @@ def test_multipage_merge_across_arrow_batches(spark):
         spark.conf.set(key, old)
 
 
+def test_multipage_merge_bucket_does_not_write_into_a_slice():
+    """The streaming kernel hands ``_merge_bucket`` a slice of its batch
+    frame; normalizing the int columns must build a new frame, not
+    assign into that slice (pandas' chained-assignment check raises
+    here instead of warning)."""
+    import pandas as pd
+
+    from document_extractor_spark.operators.multipage import _merge_bucket
+
+    batch = pd.DataFrame({
+        "article_id": [1, 1, 2], "page_num": [1.0, 2.0, 1.0],
+        "order": [0.0, 0.0, None], "type": ["paragraph"] * 3,
+        "content": ["starts here and", "continues.", "Other."],
+        "html": [None] * 3, "row_count": [None] * 3,
+        "column_count": [0.0] * 3})
+    with pd.option_context("mode.chained_assignment", "raise"):
+        out = _merge_bucket(batch[batch["article_id"] == 1])
+    assert out["content"].tolist() == ["starts here and continues."]
+    assert batch["order"].isna().sum() == 1
+
+
+def test_multipage_plan_build_runs_no_job(spark):
+    """Without ``partitions`` the shuffle is sized by AQE: nothing reads
+    the input's partition count, so building the plan over an input
+    with a shuffle starts no Spark job."""
+    rows = [
+        (1, 1, 0, "paragraph", "The sentence starts here and", None, 0, 0),
+        (1, 2, 0, "paragraph", "continues on the next page.", None, 0, 0),
+    ]
+    df = spark.createDataFrame(rows, _ITEM_COLS).repartition(2)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_continuations_plan", "plan build only")
+    try:
+        out = merge_continuations(df)
+        jobs = sc.statusTracker().getJobIdsForGroup(
+            "merge_continuations_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert [r.content for r in out.collect()] == [
+        "The sentence starts here and continues on the next page."]
+
+
 # ---------------------------------------------------------------------------
 # Media explode + link
 # ---------------------------------------------------------------------------

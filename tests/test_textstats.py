@@ -477,7 +477,7 @@ def test_python_boundaries_total_on_invalid_utf8(spark, boundary):
 
 
 def test_bloom_and_heavy_hitters_total_on_invalid_utf8(spark):
-    """The Bloom probe and the Misra–Gries pass over the same rows:
+    """The Bloom probe and the frequent-token count over the same rows:
     the Bloom result equals the exact anti-join's, and the frequent
     tokens equal the exact token counts."""
     from document_extractor_spark.functions.text import (exploded_tokens,
