@@ -367,7 +367,7 @@ multi-section article — Zipfian hosts, ~5% multi-page PDF payloads).
 
 No real cluster exists in this sandbox; per the driver instruction the
 two-cluster-size criterion runs the identical extraction job (narrow
-zero-shuffle plan: parquet scan → mapInPandas extract → noop sink) on
+zero-shuffle plan: parquet scan → mapInArrow extract → noop sink) on
 the identical input at two parallelism levels in fresh JVMs, timed
 best-of-3 (per-pass host CPU steal recorded — the VM is co-tenant).
 

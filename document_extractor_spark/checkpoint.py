@@ -59,31 +59,23 @@ def _manifest_path(out_path: str, partition: str) -> str:
 
 
 def input_fingerprint(in_path: str, partition: str,
-                      spark=None, counts: dict | None = None) -> str:
+                      counts: dict | None = None) -> str:
     """Cheap lineage: (name, size) of each input file in the partition.
     Content-hash-free so resume planning stays metadata-only.
 
     Catalog-table sources have no listable files; the fingerprint is
-    the table identifier + partition (+ a per-partition row count —
-    parquet answers it from footer metadata, so resume planning stays
-    metadata-scale while still catching a partition overwrite). Pass
-    ``counts`` from ``catalog_partition_counts`` to fingerprint many
-    partitions off ONE Spark job; a bare ``spark`` falls back to a
-    single filtered count (fine per-commit, never in a planning loop).
-    With a real Iceberg runtime this is where the SNAPSHOT ID binds
-    instead (the format's own lineage handle — strictly stronger); the
-    manifest schema carries it opaquely."""
+    the table identifier + partition (+ the partition's row count from
+    ``counts``, so a partition overwrite is still caught). Resume
+    planning takes ``counts`` from ``catalog_partition_counts`` (ONE
+    Spark job for every partition); a commit takes it from the
+    partition's observed ``docs`` (no job at all). With a real Iceberg
+    runtime this is where the SNAPSHOT ID binds instead (the format's
+    own lineage handle — strictly stronger); the manifest schema
+    carries it opaquely."""
     if is_catalog_table(in_path):
-        ident = strip_table_prefix(in_path)
-        base = f"table:{ident}:warc_day={partition}"
+        base = f"table:{strip_table_prefix(in_path)}:warc_day={partition}"
         if counts is not None:
             return f"{base}:n={counts.get(str(partition), 0)}"
-        if spark is not None:
-            from pyspark.sql import functions as F
-
-            n = (spark.read.table(ident)
-                 .filter(F.col("warc_day") == partition).count())
-            return f"{base}:n={n}"
         return base
     d = os.path.join(in_path, f"warc_day={partition}")
     entries = []
@@ -121,19 +113,24 @@ def committed_partitions(out_path: str, in_path: str,
             part
             and m.get("engine_version") == ENGINE_VERSION
             and m.get("input_fingerprint")
-                == input_fingerprint(in_path, part, spark, counts)
+                == input_fingerprint(in_path, part, counts)
         ):
             done.add(part)
     return done
 
 
 def commit_partition(out_path: str, in_path: str, partition: str,
-                     metrics: dict, wall_sec: float, spark=None) -> None:
+                     metrics: dict, wall_sec: float) -> None:
+    """Write the partition's manifest. Extraction emits one row per
+    input row, so ``metrics["docs"]`` is the partition's row count: a
+    catalog source is fingerprinted from it, as resume planning
+    fingerprints it from ``catalog_partition_counts``."""
     os.makedirs(_manifest_dir(out_path), exist_ok=True)
+    counts = {str(partition): int(metrics["docs"])}
     manifest = {
         "partition": partition,
         "engine_version": ENGINE_VERSION,
-        "input_fingerprint": input_fingerprint(in_path, partition, spark),
+        "input_fingerprint": input_fingerprint(in_path, partition, counts),
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "wall_sec": round(wall_sec, 3),
         **{k: int(v) for k, v in metrics.items()},

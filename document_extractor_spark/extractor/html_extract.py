@@ -537,7 +537,7 @@ class _Flattener:
                         continue
                     if k == 1:
                         data = m[1]
-                        if "&" in data and m.end() < n:
+                        if "&" in data:
                             data = unescape(data)
                     else:       # an unterminated tag, or a stray '<'
                         data = m[6] if k else "<"
@@ -548,7 +548,10 @@ class _Flattener:
                             twords += w
                             if link:
                                 tlink_words += w
-                    elif data:  # (a run of invalid char refs decodes to "")
+                    elif data and (frags or pre or not data.isspace()):
+                        # (a run of invalid char refs decodes to ""); a
+                        # blank run opens no block, so an <img> after
+                        # indentation still stands alone
                         frags.append((kind, data, in_link, fmt))
                     continue
                 act = _END_ACTIONS.get(tag, _E_OTHER)

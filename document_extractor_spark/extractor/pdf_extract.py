@@ -40,7 +40,6 @@ _KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.DOTALL)
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
 _CONTENTS_ARR_RE = re.compile(rb"/Contents\s*\[(.*?)\]", re.DOTALL)
 _TYPE_PAGE_RE = re.compile(rb"/Type\s*/Page\b(?!s)")
-_TYPE_PAGES_RE = re.compile(rb"/Type\s*/Pages\b")
 _TYPE_CATALOG_RE = re.compile(rb"/Type\s*/Catalog\b")
 _PAGES_REF_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
 _MEDIABOX_RE = re.compile(
@@ -80,8 +79,6 @@ def _object_stream(body: bytes) -> Optional[bytes]:
 
 _INFO_REF_RE = re.compile(rb"/Info\s+(\d+)\s+\d+\s+R")
 _INFO_KEY_RE = re.compile(rb"/(\w+)\s*\(((?:\\.|[^\\)])*)\)")
-_S1_FIELDS = ("Title", "Author", "Subject", "Creator", "Producer",
-              "CreationDate", "ModDate")
 
 
 def pdf_metadata(pdf_bytes: bytes) -> dict:

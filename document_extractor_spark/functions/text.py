@@ -236,7 +236,7 @@ def valid_utf8(df):
     """``df`` with each top-level string column through
     ``make_valid_utf8`` (bad bytes become U+FFFD), the rest untouched:
     the one rule for strings entering a Python worker, whose pyarrow
-    pandas conversion fails the task on invalid UTF-8."""
+    string conversion fails the task on invalid UTF-8."""
     return df.select(*(
         F.make_valid_utf8(df[f.name]).alias(f.name)
         if isinstance(f.dataType, T.StringType) else df[f.name]

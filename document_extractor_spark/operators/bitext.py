@@ -176,15 +176,6 @@ def gale_church_align(pairs: DataFrame, id_col: str = "pair_id",
                     lambda s: F.coalesce(F.length(s), F.lit(0)))
         .alias("_tl"),
     )
-    over = staged.where(
-        (F.size("_sl") > max_sentences) | (F.size("_tl") > max_sentences))
-    bad = over.select("_id").head(1)
-    if bad:
-        raise ValueError(
-            f"gale_church_align: pair {bad[0][0]!r} exceeds "
-            f"max_sentences={max_sentences} — the O(n*m) DP would "
-            f"straggle; pre-chunk the pair or raise the cap explicitly")
-
     id_field = pairs.schema[id_col].dataType
     out_schema = T.StructType([
         T.StructField(id_col, id_field),
@@ -197,8 +188,13 @@ def gale_church_align(pairs: DataFrame, id_col: str = "pair_id",
     ])
 
     def align(pid, sl, tl) -> list:
+        if max(len(sl), len(tl)) > max_sentences:
+            raise ValueError(
+                f"gale_church_align: pair {pid!r} exceeds "
+                f"max_sentences={max_sentences} — the O(n*m) DP would "
+                f"straggle; pre-chunk the pair or raise the cap explicitly")
         return [(pid, k, *bead) for k, bead in
-                enumerate(_gc_align_lengths(list(sl), list(tl)))]
+                enumerate(_gc_align_lengths(sl, tl))]
 
     return _map_payloads(staged, ["_id", "_sl", "_tl"], align, out_schema,
                          None)

@@ -21,7 +21,7 @@ only: probe positions as column expressions, set into 32768-bit buckets
 by the ``bitmap_construct_agg`` aggregate (an OR — commutative,
 associative, idempotent — so the bytes are partitioning-invariant and
 no task merges the whole bitmap), then shipped to the probe as a
-closure. The probe is a scalar pandas UDF over ``_fp`` alone: no user
+closure. The probe is a scalar Arrow UDF over ``_fp`` alone: no user
 column crosses into Python.
 ``num_bits`` is the executor/driver memory bound: 2^30 bits = 128 MiB
 handles ~10^8 keys at 1% fpp; past ~10^10 keys the bitmap itself stops
@@ -38,7 +38,7 @@ and runs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,7 +97,7 @@ def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
     The in-batch min-id dedup still sees every row — same contract.
 
     The index side builds the bitmap (one aggregate, ≤ num_bits/32768
-    collected bucket rows); the batch side is a scalar pandas UDF over
+    collected bucket rows); the batch side is a scalar Arrow UDF over
     ``_fp`` (4 bit tests/row) against the closure-captured bitmap — Spark
     serializes it into the task binary once per executor, the same
     distribution path a broadcast variable takes.
@@ -117,17 +117,17 @@ def drop_known_duplicates_bloom(new_docs: DataFrame, known: DataFrame,
             f"estimated fpp {est_fpp:.3f} > max_fpp {max_fpp}; size "
             f"num_bits >= ~10*n_keys (or use drop_known_duplicates)")
 
-    @F.pandas_udf(T.BooleanType())
-    def probe(fps: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.BooleanType())
+    def probe(fps: pa.Array) -> pa.Array:
         bitmap = np.frombuffer(bitmap_bytes, dtype=np.uint8)
         # NULL fingerprint (NULL text) can never match the index —
         # definite-fresh, same as the exact op's NULL-key anti-join
-        mask = fps.notna().to_numpy()
+        mask = fps.is_valid().to_numpy(zero_copy_only=False)
         cand = np.zeros(len(fps), dtype=bool)
         if mask.any():
-            pos = _probe_positions(fps.to_numpy()[mask], num_bits)
+            pos = _probe_positions(fps.drop_null().to_pylist(), num_bits)
             cand[mask] = ((bitmap[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
-        return pd.Series(cand)
+        return pa.array(cand)
 
     # persisted: four downstream consumers (hit side, miss side, the
     # survivors groupBy, the final semi-join) would otherwise each

@@ -6,12 +6,13 @@ fix pipeline (``openai_content_extractor.py:63-307`` →
 ``content_structure_fixer.py:179-197`` → ``key_value_converter.py:359-397``
 in EricBui619/document-extractor), collapsed into ONE narrow stage:
 
-    select(url, html, lang) [→ salted repartition] → mapInPandas (extract)
+    select(url, html, lang) [→ salted repartition] → mapInArrow (extract)
 
 Scale design (the 100 TB story):
-- **No per-row Python**: ``mapInPandas`` receives whole Arrow batches; the
-  extraction loop is C-level iteration over numpy object arrays. The plan
-  contains only ``MapInPandas`` / Arrow nodes — asserted by
+- **No per-row Python**: ``mapInArrow`` receives whole Arrow
+  batches and returns one Arrow batch per input batch (built by
+  ``record_batch``), with no pandas frame in between. The plan contains
+  only ``MapInArrow`` / Arrow nodes — asserted by
   ``plans.assert_vectorized_python_only``.
 - **Narrow by default — never shuffle raw payloads.** With
   ``num_partitions=None`` (the default) extraction is a zero-shuffle map
@@ -35,7 +36,7 @@ Scale design (the 100 TB story):
   error column set to ``"<ExcType>: <message>"``, every other field
   NULL (reference semantics: per-page try/except,
   ``pdf_processor.py:227-235``). ``_map_payloads`` is the only place
-  that rule is enforced: it is the one ``mapInPandas`` batch loop
+  that rule is enforced: it is the one ``mapInArrow`` batch loop
   behind every per-document kernel — this operator,
   ``blocks.block_profile``, the PDF probes in ``media``, the image
   kernels in ``multimodal`` and ``bitext``'s aligner. Its strings
@@ -47,10 +48,11 @@ from __future__ import annotations
 
 from typing import Callable, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..extractor.core import extract_payload
 from ..functions.text import valid_utf8
@@ -127,19 +129,33 @@ LAYOUT_TYPE = T.StructType([
     T.StructField("margin_right_percent", T.DoubleType(), True),
 ])
 
+def record_batch(rows: list, schema: T.StructType) -> pa.RecordBatch:
+    """Output row tuples in ``schema`` order → one Arrow batch of
+    ``to_arrow_schema(schema)``: how every ``mapInArrow`` kernel hands
+    rows back to Spark. A struct value is a dict (or a tuple, the same
+    for the whole column), an array a list, a timestamp a tz-aware
+    ``datetime``."""
+    arrow = to_arrow_schema(schema)
+    cols = zip(*rows) if rows else ([] for _ in arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+
+
 def _map_payloads(df: DataFrame, cols: list[str],
                   fn: Callable[..., list], schema: T.StructType,
                   error_col: Optional[str]) -> DataFrame:
-    """The one per-document ``mapInPandas`` loop every payload kernel
+    """The one per-document ``mapInArrow`` loop every payload kernel
     runs on (``extract_pages``, ``blocks.block_profile``, the PDF probes
     in ``media``, the image kernels in ``multimodal``, the sentence
     aligner in ``bitext``).
 
     Selects only ``cols`` (the scan's ``ReadSchema`` prunes to them),
-    repairs their strings with ``valid_utf8``, skips empty Arrow
-    batches, zips each batch's column arrays and calls ``fn(*values)``
-    per row; ``fn`` returns a list of output tuples in
-    ``schema`` order (one per output row — fan-out kernels return many).
+    repairs their strings with ``valid_utf8``, zips each Arrow batch's
+    columns as Python values (NULL is ``None``, an array a list) and
+    calls ``fn(*values)`` per row; ``fn`` returns a list of output
+    tuples in ``schema`` order (one per output row — fan-out kernels
+    return many).
     If ``fn`` raises, the row becomes exactly one error row: the key
     (the first of ``cols``), ``error_col = "<ExcType>: <message>"`` and
     NULL everywhere else. ``error_col=None`` lets the exception fail the
@@ -147,12 +163,10 @@ def _map_payloads(df: DataFrame, cols: list[str],
     already total."""
     names = schema.fieldNames()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows: list = []
-            for values in zip(*(pdf[c].to_numpy() for c in cols)):
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
                 try:
                     rows += fn(*values)
                 except Exception as exc:  # per-row isolation, never the task
@@ -162,11 +176,10 @@ def _map_payloads(df: DataFrame, cols: list[str],
                     err[names[0]] = values[0]
                     err[error_col] = f"{type(exc).__name__}: {exc}"
                     rows.append(tuple(err.values()))
-            # object dtype: a NULL must not turn an int64 column into
-            # float64 (a dHash would lose its low bits)
-            yield pd.DataFrame(rows, columns=names, dtype=object)
+            if rows:
+                yield record_batch(rows, schema)
 
-    return valid_utf8(df.select(*cols)).mapInPandas(run, schema=schema)
+    return valid_utf8(df.select(*cols)).mapInArrow(run, schema=schema)
 
 
 def host_col(url: Column = None) -> Column:

@@ -10,7 +10,7 @@ no Python node.
 
 A Misra–Gries candidate pass (Misra & Gries 1982; Agarwal et al.,
 "Mergeable summaries", PODS 2012) used to prune the vocabulary tail
-before the exact count. It was retired: the MG ``mapInPandas`` plus
+before the exact count. It was retired: the MG Python batch map plus
 semi-join was slower even on the deep tail it was written for
 (4-core box, ``local[4]``, median of alternating rounds: 100,000 docs
 with 50 unique tokens each, 5M distinct tokens, 7.3 s against 3.8 s;

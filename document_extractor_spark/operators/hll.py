@@ -21,7 +21,7 @@ register max IS a builtin aggregate:
    integer sums (``2^(cap-rank)`` fixed-point, see below).
 
 No UDF anywhere — the entire sketch is whole-stage-codegen relational
-algebra, unlike KMV's mapInPandas partial pass.
+algebra, unlike KMV's mapInArrow partial pass.
 
 Determinism notes (why the oracle can hash-match the estimate):
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -203,12 +203,13 @@ def sample_frames(df: DataFrame, every_n: int = 2,
                          None)
 
 
-@F.pandas_udf(T.BinaryType())
-def fake_image_from_seed(seeds: pd.Series) -> pd.Series:
+@F.arrow_udf(T.BinaryType())
+def fake_image_from_seed(seeds: pa.Array) -> pa.Array:
     """Arrow-batched RAW1 fixture generator: one deterministic 16×16
     frame per integer seed — equal seeds yield byte-identical payloads
     (the planted-clone closed form the dHash driver oracle states)."""
-    return seeds.map(lambda s: encode_fake_image(16, 16, seed=int(s)))
+    return pa.array([encode_fake_image(16, 16, seed=int(s))
+                     for s in seeds.to_pylist()], pa.binary())
 
 
 DHASH_SCHEMA = T.StructType([

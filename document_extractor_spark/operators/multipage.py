@@ -18,19 +18,19 @@ replacement detects continuations structurally:
 
 Spark mapping: one hash shuffle on the article id (small item rows,
 not raw payloads), an in-partition sort, then one streaming
-``mapInPandas`` whose strings cross through ``valid_utf8``. Zipfian
+``mapInArrow`` whose strings cross through ``valid_utf8``. Zipfian
 skew in pages-per-article is bounded by documents' page counts, not by
 host popularity.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..extractor.html_extract import splice_table_rows
 from ..functions.text import valid_utf8
+from .extract import record_batch
 
 MERGED_SCHEMA = T.StructType([
     T.StructField("article_id", T.LongType(), False),
@@ -54,46 +54,43 @@ MERGED_SCHEMA = T.StructType([
 
 _PROSE = {"paragraph", "list"}
 
-def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One pandas frame = one batch of whole articles (not one article):
-    the per-group overhead of applyInPandas is ~0.5 ms and per-article
-    pandas frames cost ~1.5 ms each, so grouping directly by article_id
-    at corpus scale (millions of 1-2 page articles) drowns in
-    bookkeeping — measured 20× slower at bench scale. Instead: ONE sort
-    of the whole batch by (article, page, order), one linear pass with
-    article-boundary detection, one output frame."""
-    # Arrow→pandas turns nullable int columns into float64 with NaN, and
-    # int(NaN or 0) raises (NaN is truthy) — normalize once up front,
-    # into a new frame: ``pdf`` may be a slice of the caller's batch.
-    pdf = pdf.assign(**{
-        col: pd.to_numeric(pdf[col], errors="coerce").fillna(0)
-        .astype("int64")
-        for col in ("row_count", "column_count", "page_num", "order")
-        if col in pdf.columns
-    }).sort_values(["article_id", "page_num", "order"], kind="mergesort")
+#: the item columns the merge reads, in its sort order first
+_ITEM_COLS = ("article_id", "page_num", "order", "type", "content", "html",
+              "row_count", "column_count")
+
+
+def _merge_rows(rows: list) -> list:
+    """Merge a run of whole articles' item rows, already in (article,
+    page, order) order, in one linear pass with article-boundary
+    detection, not one group per article (per-article groups drowned
+    in bookkeeping at corpus scale: 20× slower at bench scale). A NULL
+    int is 0. Returns ``MERGED_SCHEMA`` tuples; a merge only changes
+    the last item, so each item keeps the ``order`` it was appended
+    with."""
     out: list[dict] = []
     cur_article = object()
     article_start = 0
     prev_page = None
-    for row in pdf.itertuples(index=False):
-        if row.article_id != cur_article:
-            cur_article = row.article_id
+    for aid, page, order, typ, content, html, n_rows, n_cols in rows:
+        page, order = page or 0, order or 0
+        if aid != cur_article:
+            cur_article = aid
             article_start = len(out)
             prev_page = None
         item = {
-            "article_id": int(row.article_id),
-            "type": row.type,
-            "content": row.content or "",
-            "html": row.html,
-            "row_count": int(row.row_count),
-            "column_count": int(row.column_count),
-            "pages": [int(row.page_num)],
+            "article_id": aid,
+            "order": len(out) - article_start,
+            "type": typ,
+            "content": content or "",
+            "html": html,
+            "row_count": n_rows or 0,
+            "column_count": n_cols or 0,
+            "pages": [page],
             "n_merged": 1,
-            "merged_from": [{"page": int(row.page_num),
-                             "item_order": int(row.order)}],
+            "merged_from": [{"page": page, "item_order": order}],
         }
-        first_of_page = prev_page is not None and row.page_num != prev_page
-        prev_page = row.page_num
+        first_of_page = prev_page is not None and page != prev_page
+        prev_page = page
         if first_of_page and len(out) > article_start:
             last = out[-1]
             c = item["content"]
@@ -104,7 +101,7 @@ def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
             ):
                 # M2: prose continuation — concat with a space
                 last["content"] = last["content"] + " " + c
-                last["pages"].append(item["pages"][0])
+                last["pages"].append(page)
                 last["n_merged"] += 1
                 last["merged_from"].extend(item["merged_from"])
                 continue
@@ -121,52 +118,42 @@ def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
                 last["content"] = last["content"] + "\n" + c
                 last["html"] = html
                 last["row_count"] += item["row_count"]
-                last["pages"].append(item["pages"][0])
+                last["pages"].append(page)
                 last["n_merged"] += 1
                 last["merged_from"].extend(item["merged_from"])
                 continue
-        item["order"] = len(out) - article_start
         out.append(item)
-    # orders shift when later items merge away — renumber per article
-    order = 0
-    prev_aid = object()
-    for it in out:
-        if it["article_id"] != prev_aid:
-            prev_aid = it["article_id"]
-            order = 0
-        it["order"] = order
-        order += 1
-    cols = [f.name for f in MERGED_SCHEMA.fields]
-    return pd.DataFrame(out, columns=cols)
+    names = MERGED_SCHEMA.fieldNames()
+    return [tuple(it[n] for n in names) for it in out]
 
 
 def _merge_stream(batches):
-    """mapInPandas kernel: consume sorted Arrow batches, carrying the
-    trailing (possibly incomplete) article across batch boundaries so no
-    pandas frame ever exceeds one Arrow batch + one article. This is the
-    memory bound the fixed-bucket applyInPandas design lacked: there,
-    one Python worker materialized corpus/buckets rows at once, which at
-    100× scale is a driver-sized frame per worker."""
-    carry = None
-    for pdf in batches:
-        if pdf.empty:
+    """mapInArrow kernel: consume sorted Arrow batches, carrying the
+    trailing (possibly incomplete) article across batch boundaries so
+    no merge ever holds more than one Arrow batch + one article. This
+    is the memory bound the fixed-bucket applyInPandas design lacked:
+    there, one Python worker materialized corpus/buckets rows at once,
+    which at 100× scale is a driver-sized frame per worker."""
+    carry: list = []
+    for batch in batches:
+        rows = carry + list(zip(*(c.to_pylist() for c in batch.columns)))
+        if not rows:
             continue
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        last_aid = pdf["article_id"].iloc[-1]
-        open_mask = pdf["article_id"] == last_aid
-        carry = pdf[open_mask]
-        done = pdf[~open_mask]
-        if len(done):
-            yield _merge_bucket(done)
-    if carry is not None and len(carry):
-        yield _merge_bucket(carry)
+        cut = len(rows)
+        while cut and rows[cut - 1][0] == rows[-1][0]:
+            cut -= 1
+        carry = rows[cut:]
+        if cut:
+            yield record_batch(_merge_rows(rows[:cut]), MERGED_SCHEMA)
+    if carry:
+        yield record_batch(_merge_rows(carry), MERGED_SCHEMA)
 
 
 def merge_continuations(df: DataFrame, article_col: str = "article_id",
                         partitions: int | None = None) -> DataFrame:
-    """Item rows ``(article_id, page_num, order, type, content[, html,
-    row_count, column_count])`` → merged items.
+    """Item rows ``(article_id, page_num, order, type, content, html,
+    row_count, column_count)`` → merged items (other columns are
+    dropped before the shuffle).
 
     One hash shuffle on the article id (small item rows, not raw
     payloads) + in-partition sort, then a STREAMING merge: each Python
@@ -178,11 +165,11 @@ def merge_continuations(df: DataFrame, article_col: str = "article_id",
 
     Without ``partitions`` the shuffle is sized by AQE (building the
     plan starts no Spark job)."""
-    keyed = df.withColumnRenamed(article_col, "article_id")
+    keyed = df.withColumnRenamed(article_col, "article_id").select(
+        *_ITEM_COLS)
     parted = (
         (keyed.repartition(partitions, "article_id") if partitions
          else keyed.repartition("article_id"))
         .sortWithinPartitions("article_id", "page_num", "order")
     )
-    return valid_utf8(parted).mapInPandas(_merge_stream,
-                                          schema=MERGED_SCHEMA)
+    return valid_utf8(parted).mapInArrow(_merge_stream, schema=MERGED_SCHEMA)

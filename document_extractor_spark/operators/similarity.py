@@ -8,7 +8,7 @@ Three tiers:
   TakeOrderedAndProject (per-partition heap + driver merge — no full
   sort shuffle).
 - **LSH-bucketed ANN** — the 100 TB path: sign-random-projection bucket
-  ids computed by a *vectorized* pandas UDF (one numpy matmul per Arrow
+  ids computed by a *vectorized* Arrow UDF (one numpy matmul per Arrow
   batch), multiprobe over Hamming-adjacent buckets, exact cosine rerank
   inside the probed buckets only.
 
@@ -24,7 +24,8 @@ index-build time.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,26 +126,42 @@ def ann_topk(indexed: DataFrame, qvec: list, k: int = 10, dim: int = 64,
     return brute_force_topk(cand, qvec, k, id_col, vec_col)
 
 
+def _vector_codes(vecs: pa.Array, encode) -> pa.Array:
+    """``encode`` over an Arrow batch's non-NULL vectors, stacked into
+    one float64 ``(n, dim)`` matrix, → its ``(n, w)`` integer codes as
+    ``array<int>`` rows, NULL where the vector is NULL. ``np.vstack``
+    raises on ragged vectors, where a flat reshape would not."""
+    valid = vecs.is_valid()
+    present = vecs.drop_null()
+    if len(present) == 0:
+        return pa.nulls(len(vecs), pa.list_(pa.int32()))
+    mat = np.vstack(present.to_numpy(zero_copy_only=False))
+    codes = encode(mat.astype(np.float64)).astype(np.int32)
+    offsets = np.concatenate(
+        ([0], np.cumsum(valid.to_numpy(zero_copy_only=False))
+         * codes.shape[1]))
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                    pa.array(codes.ravel()),
+                                    mask=pc.invert(valid))
+
+
 def srp_band_buckets_udf(dim: int, n_bands: int = 8,
                          planes_per_band: int = 16, seed: int = 42):
-    """Vectorized pandas UDF: n_bands independent SRP bucket ids per
+    """Vectorized Arrow UDF: n_bands independent SRP bucket ids per
     vector (one numpy matmul per Arrow batch over all bands' planes).
     This is the showcase 'Python only as Arrow-batched numpy' operator;
     a NULL vector gets NULL buckets."""
     planes = _hyperplanes(dim, n_bands * planes_per_band, seed)
     weights = (1 << np.arange(planes_per_band)).astype(np.int64)
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(col: pd.Series) -> pd.Series:
-        mask = col.notna().to_numpy()
-        out = pd.Series([None] * len(col), dtype=object)
-        if mask.any():
-            mat = np.vstack(col[mask].to_numpy())          # (batch, dim)
-            signs = (mat @ planes) > 0                     # (batch, B*P)
-            s = signs.reshape(len(mat), n_bands, planes_per_band)
-            ids = (s * weights).sum(axis=2).astype(np.int32)
-            out.iloc[np.flatnonzero(mask)] = list(ids)
-        return out
+    def ids(mat):
+        signs = (mat @ planes) > 0                         # (batch, B*P)
+        s = signs.reshape(len(mat), n_bands, planes_per_band)
+        return (s * weights).sum(axis=2)
+
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def buckets(col: pa.Array) -> pa.Array:
+        return _vector_codes(col, ids)
 
     return buckets
 
@@ -407,7 +424,7 @@ def pq_train(df: DataFrame, dim: int, m: int = 8, k: int = 16,
 def pq_encode(df: DataFrame, codebooks: list, vec_col: str = "embedding",
               code_col: str = "pq_code") -> DataFrame:
     """Append ``code_col``: the m nearest-codeword ids (array<int>).
-    One numpy argmin per Arrow batch (vectorized pandas UDF — the
+    One numpy argmin per Arrow batch (vectorized Arrow UDF — the
     legitimate-UDF tier, like the SRP bucketer); NULL embeddings encode
     as NULL. At 100 TB the encoded table is what you store and scan:
     m bytes of code per document instead of 4·dim of floats."""
@@ -415,22 +432,15 @@ def pq_encode(df: DataFrame, codebooks: list, vec_col: str = "embedding",
     m, k, dsub = C.shape
     c_norm2 = (C ** 2).sum(-1)                           # (m, k)
 
-    def _enc(vecs: pd.Series) -> pd.Series:
-        mask = vecs.notna().to_numpy()
-        out = pd.Series([None] * len(vecs), dtype=object)
-        if mask.any():
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in vecs[mask]])
-            n = np.sqrt((X * X).sum(1, keepdims=True))
-            np.divide(X, n, out=X, where=n > 0)
-            S = X.reshape(len(X), m, dsub)
-            # ||s - c||² = ||c||² - 2 s·c (+ ||s||², rank-invariant)
-            d = c_norm2[None] - 2 * np.einsum("nmd,mkd->nmk", S, C)
-            codes = d.argmin(-1).astype(np.int32)
-            out.iloc[np.flatnonzero(mask)] = list(codes)
-        return out
+    def codes(X):
+        n = np.sqrt((X * X).sum(1, keepdims=True))
+        np.divide(X, n, out=X, where=n > 0)
+        S = X.reshape(len(X), m, dsub)
+        # ||s - c||² = ||c||² - 2 s·c (+ ||s||², rank-invariant)
+        d = c_norm2[None] - 2 * np.einsum("nmd,mkd->nmk", S, C)
+        return d.argmin(-1)
 
-    udf = F.pandas_udf(_enc, "array<int>")
+    udf = F.arrow_udf(lambda vecs: _vector_codes(vecs, codes), "array<int>")
     return df.withColumn(code_col, udf(F.col(vec_col)))
 
 

@@ -17,7 +17,7 @@ exact by construction.
 
 Scale shape — the classic two-level sketch merge:
 
-1. partition-local partials in ``mapInPandas`` (one of the documented
+1. partition-local partials in ``mapInArrow`` (one of the documented
    legitimate-UDF cases: no builtin expresses bounded per-key state
    across a partition): NO shuffle, memory capped at ~k hashes per key,
    emits ≤ k hashes per (partition, key);
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..functions.text import hex_int, md5_of, valid_utf8
+from .extract import record_batch
 
 #: hex chars of the hash used as the uniform (0,1) fraction — 48 bits,
 #: exactly representable in a double in BOTH engines
@@ -75,26 +76,23 @@ def _kmv_sketch(df: DataFrame, key: Column, value_col: str,
     ])
 
     def _partials(batches):
-        import pandas as pd
-
         acc: dict = {}
-        for pdf in batches:
-            # dropna=False: a NULL key is a group like any other
-            # (matching Spark groupBy / SQL GROUP BY semantics)
-            for key, grp in pdf.groupby("key", sort=False,
-                                        dropna=False)["h"]:
-                if pd.isna(key):
-                    key = None
-                s = acc.setdefault(key, set())
-                s.update(grp)
+        for batch in batches:
+            # a NULL key (None) is a group like any other (matching
+            # Spark groupBy / SQL GROUP BY semantics)
+            for key, h in zip(batch.column(0).to_pylist(),
+                              batch.column(1).to_pylist()):
+                s = acc.get(key)
+                if s is None:
+                    s = acc[key] = set()
+                s.add(h)
                 # prune lazily: exact k-smallest is restored at yield
                 if len(s) > 4 * k:
                     acc[key] = set(sorted(s)[:k])
-        for key, s in acc.items():
-            ks = sorted(s)[:k]
-            yield pd.DataFrame({"key": [key] * len(ks), "h": ks})
+        yield record_batch([(key, h) for key, s in acc.items()
+                            for h in sorted(s)[:k]], out_schema)
 
-    part = valid_utf8(hashed).mapInPandas(_partials, schema=out_schema)
+    part = valid_utf8(hashed).mapInArrow(_partials, schema=out_schema)
     return part.groupBy("key").agg(
         F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("_ks"))
 

@@ -5,7 +5,7 @@ canonical composition, byte-level dedup misses true duplicates and
 token counts drift. NFC is the W3C-recommended interchange form.
 
 Spark has no normalization builtin, so this is legitimate-UDF
-territory: an Arrow-batched pandas UDF over ``unicodedata.normalize``
+territory: an Arrow UDF (``F.arrow_udf``) over ``unicodedata.normalize``
 (C implementation under the hood, with an ASCII fast path — NFC over
 pure-ASCII is the identity, and ``str.isascii`` is a cheap C check
 that skips the normalizer for the common case). The DuckDB oracle twin
@@ -13,13 +13,14 @@ is the built-in ``nfc_normalize``, making this one of the few places
 the engines' UNICODE behavior itself is cross-checked.
 
 The UDF is constructed lazily inside ``normalize_text``:
-``pandas_udf`` resolves its DDL return type against the active session,
+``arrow_udf`` resolves its DDL return type against the active session,
 so a module-level decorator would make importing this module require a
 running SparkSession (breaks pytest collection, spark-submit zip
 imports, and any driver that imports before building the session)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,21 +28,18 @@ from pyspark.sql import functions as F
 def _norm_batch(texts):
     import unicodedata
 
-    def norm(s):
-        if s is None or s.isascii():
-            return s
-        return unicodedata.normalize("NFC", s)
-
-    return texts.map(norm, na_action="ignore")
+    return pa.array([s if s is None or s.isascii()
+                     else unicodedata.normalize("NFC", s)
+                     for s in texts.to_pylist()], pa.string())
 
 
 def normalize_text(df: DataFrame, text_col: str = "text",
                    out_col: str | None = None) -> DataFrame:
     """Append (or replace) ``out_col`` with the NFC normalization of
     ``text_col``. NULL passes through; a string that is not valid UTF-8
-    is normalized after ``make_valid_utf8`` (pyarrow's pandas conversion
-    would fail the task on it)."""
-    udf = F.pandas_udf(_norm_batch, "string")
+    is normalized after ``make_valid_utf8`` (pyarrow's string
+    conversion would fail the task on it)."""
+    udf = F.arrow_udf(_norm_batch, "string")
     return df.withColumn(out_col or text_col,
                          udf(F.make_valid_utf8(text_col)))
 

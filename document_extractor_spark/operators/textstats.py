@@ -3,7 +3,7 @@ token counting, fingerprinting, language ID.
 
 All but two are pure column expressions (``functions/text.py``) with
 DuckDB-SQL oracle twins. Language ID needs the script/stopword tables
-→ a scalar *pandas* UDF (Arrow-batched; rows-only correctness check +
+→ a scalar Arrow UDF (``F.arrow_udf``; rows-only correctness check +
 pytest unit coverage). ``doc_top_terms`` is the module's one
 shuffle-bearing relational operator (tf/df aggregation + per-doc
 window; oracle-backed).
@@ -11,7 +11,7 @@ window; oracle-backed).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,16 +50,16 @@ def doc_fingerprints(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-@F.pandas_udf(T.StringType())
-def lang_id_udf(texts: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def lang_id_udf(texts: pa.Array) -> pa.Array:
     """Arrow-batched language ID: ``extractor.langid.detect_lang`` mapped
     over the batch, ``"und"`` for NULL. Callers pass
-    ``make_valid_utf8(text)``: pyarrow's pandas conversion fails the task
-    on a string that is not valid UTF-8."""
+    ``make_valid_utf8(text)``: pyarrow's string conversion fails the
+    task on a string that is not valid UTF-8."""
     from ..extractor.langid import detect_lang
 
-    return texts.map(lambda t: detect_lang(t) if isinstance(t, str)
-                     else "und")
+    return pa.array([detect_lang(t) if t is not None else "und"
+                     for t in texts.to_pylist()], pa.string())
 
 
 def detect_languages(df: DataFrame, id_col: str = "doc_id",
@@ -783,23 +783,20 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
     compresses ~30×, an md5-hex plant stays within 2×), not exact
     byte counts.
     """
-    import pandas as pd
     import zlib
 
-    @F.pandas_udf("struct<n_bytes: long, n_compressed: long>")
-    def _sizes(s: pd.Series) -> pd.DataFrame:
-        nb, nc = [], []
-        for raw in s:
-            if raw is None:
-                nb.append(None)
-                nc.append(None)
-                continue
-            nb.append(len(raw))
-            nc.append(len(zlib.compress(raw, level)))
-        return pd.DataFrame({"n_bytes": nb, "n_compressed": nc})
+    @F.arrow_udf("struct<n_bytes: long, n_compressed: long>")
+    def _sizes(raws: pa.Array) -> pa.Array:
+        rows = raws.to_pylist()
+        return pa.StructArray.from_arrays(
+            [pa.array([None if r is None else len(r) for r in rows],
+                      pa.int64()),
+             pa.array([None if r is None else len(zlib.compress(r, level))
+                       for r in rows], pa.int64())],
+            names=["n_bytes", "n_compressed"])
 
     # the row's own bytes: a string that is not valid UTF-8 fails
-    # pyarrow's pandas conversion, its binary cast does not
+    # pyarrow's string conversion, its binary cast does not
     staged = df.select(F.col(id_col),
                        _sizes(F.col(text_col).cast("binary")).alias("_z"))
     return staged.select(

@@ -76,12 +76,6 @@ def fim_transform(df: DataFrame, id_col: str = "doc_id",
     }).drop("_fim_chars")
 
 
-#: span-corruption geometry: a span *seed* fires per token position via
-#: an id+pos md5 draw; each seed masks this token and the next two, and
-#: overlapping/adjacent masked runs merge into ONE span (T5 semantics)
-SPAN_LEN = 3
-
-
 def span_corruption(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
                     seed_pct: int = 8) -> DataFrame:

@@ -2,7 +2,7 @@
 
     pages (Iceberg-style parquet, partitioned by warc_day)
       → scan with partition pruning (only uncommitted partitions)
-      → mapInPandas extraction (Arrow batches, byte-capped)   ← NARROW
+      → mapInArrow extraction (Arrow batches, byte-capped)    ← NARROW
       → observe() metrics
       → dynamic-partition-overwrite parquet write
       → per-partition manifest commit
@@ -94,7 +94,7 @@ def run_extract_job(
             "bytes_out": row.get("bytes_out") or 0,
         }
         commit_partition(out_path, in_path, part, metrics,
-                         time.monotonic() - t0, spark=spark)
+                         time.monotonic() - t0)
         summary["partitions_processed"] += 1
         for k, v in metrics.items():
             summary[k] += int(v)

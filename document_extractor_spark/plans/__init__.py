@@ -2,9 +2,10 @@
 
 The north rule forbids per-row Python in the hot path: every Python
 boundary must be Arrow-vectorized. Spark renders row-at-a-time UDFs as
-``BatchEvalPython`` nodes and vectorized ones as ``ArrowEvalPython`` /
-``MapInPandas`` / ``FlatMapGroupsInPandas`` — so the plan string is the
-enforcement point (SURVEY.md §4.5).
+``BatchEvalPython`` nodes; the package's boundaries are all Arrow in and
+Arrow out, ``F.arrow_udf`` as ``ArrowEvalPython`` and ``mapInArrow`` as
+``MapInArrow`` — so the plan string is the enforcement point (SURVEY.md
+§4.5).
 """
 
 from __future__ import annotations

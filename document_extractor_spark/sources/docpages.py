@@ -11,6 +11,7 @@ gate over the full extraction pipeline (boilerplate strip + typed spans).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,15 +56,6 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_id_from_url(col="url"):
     return F.element_at(F.split(col, "/"), -1).cast("bigint").alias("doc_id")
-
-
-# Figure-bearing variant for the S3/I2 media operators: two <figure>
-# blocks with deterministic src/captions derived from doc_id, so image
-# extraction and image↔caption linking both have closed-form oracles.
-_FIG_SUFFIX_TMPL = (
-    "<figure><img src='/img/{id}-{k}.jpg' alt='chart'>"
-    "<figcaption>Caption {k} for document {id}</figcaption></figure>"
-)
 
 
 # Formatting variant: the main paragraph is centered and wholly wrapped
@@ -322,18 +314,16 @@ def pages_with_mixed_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 40-char chunks of the (whitespace-normalized, ASCII-only) text — so
 # every extracted item position and every layout margin is a closed-form
 # constant the DuckDB oracle can state directly. PDF bytes are built in
-# an Arrow-batched pandas UDF (test source, not the extraction hot path).
+# an Arrow UDF (test source, not the extraction hot path).
 def pdf_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from .generator import build_pdf
 
-    @F.pandas_udf("binary")
+    @F.arrow_udf("binary")
     def _pdf_bytes(did, body):
         # /Info values are pure functions of doc_id so the metadata
         # probe has a closed-form oracle (S1 full coverage:
         # pdf_to_png_converter.py:198-236 field set).
-        return pd.Series([
+        return pa.array([
             build_pdf(
                 [[(72, 720, 18, [f"Document {d}"]),
                   (72, 680, 12, [a[:40], a[40:80]])]],
@@ -347,8 +337,8 @@ def pdf_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "ModDate": f"D:2026020{int(d) % 9 + 1}120000Z",
                 },
             )
-            for d, a in zip(did, body)
-        ])
+            for d, a in zip(did.to_pylist(), body.to_pylist())
+        ], pa.binary())
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id").cast("string")
@@ -425,14 +415,12 @@ def pages_with_eval_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-order walk, levels, and destination page resolution all have a
 # closed-form oracle (including the no-children path at doc_id%3==0).
 def pdf_pages_with_outlines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from .generator import build_pdf
 
-    @F.pandas_udf("binary")
+    @F.arrow_udf("binary")
     def _pdf_bytes(did):
         out = []
-        for d in did:
+        for d in did.to_pylist():
             k = int(d) % 3
             sections = [(f"Section 1.{j}", 1, []) for j in range(1, k + 1)]
             out.append(build_pdf(
@@ -441,7 +429,7 @@ def pdf_pages_with_outlines(spark: SparkSession, sf_dir: str) -> DataFrame:
                 outlines=[("Chapter 1", 0, sections),
                           ("Chapter 2", 1, [])],
             ))
-        return pd.Series(out)
+        return pa.array(out, pa.binary())
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     did = F.col("doc_id").cast("string")

@@ -12,7 +12,8 @@ bytes — per-record-gzip or plain — Content-Length-framed (no regex over
 the whole file), one record in memory at a time, and yields ``(url,
 warc_ts, body)`` for the records of one ``WARC-Type``. ``_read_records``
 is the only Spark shape: ``binaryFile`` scan (only ``content`` read) →
-one ``mapInPandas`` that runs the walk and yields bounded slices, so
+one ``mapInArrow`` that runs the walk and yields bounded Arrow slices
+(``warc_ts`` a tz-aware UTC ``datetime``, the Arrow UTC timestamp), so
 executor memory is bounded by the largest RECORD, not the archive.
 Parallelism is per-file (Common Crawl segments are ~1 GB × 64k files
 per crawl — far more files than executors); on a real cluster the same
@@ -40,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.extract import record_batch
 from .pages import PAGES_SCHEMA
 
 _CRLF2 = b"\r\n\r\n"
@@ -165,36 +167,33 @@ def _read_records(spark: SparkSession, path: str, glob: str,
     record", not "largest archive". A slice counts the larger of the
     raw and decoded body sizes, so neither multi-byte text nor a
     compressed HTTP payload under-counts."""
-    import pandas as pd
-
     schema = T.StructType([
         PAGES_SCHEMA["url"], PAGES_SCHEMA["warc_ts"],
         T.StructField("body", body_type),
         T.StructField("warc_day", T.StringType()),
     ])
-    cols = schema.fieldNames()
 
     def parse(batches):
         rows, nbytes = [], 0
-        for pdf in batches:
-            for data in pdf["content"]:
+        for batch in batches:
+            for data in batch.column(0).to_pylist():
                 for url, ts, raw in _records(data, warc_type):
                     body = decode(raw)
                     rows.append((url, ts, body,
                                  ts.strftime("%Y-%m-%d") if ts else None))
                     nbytes += max(len(raw), len(body))
                     if len(rows) >= _SLICE_ROWS or nbytes >= _SLICE_BYTES:
-                        yield pd.DataFrame(rows, columns=cols)
+                        yield record_batch(rows, schema)
                         rows, nbytes = [], 0
         if rows:
-            yield pd.DataFrame(rows, columns=cols)
+            yield record_batch(rows, schema)
 
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("content")
-        .mapInPandas(parse, schema)
+        .mapInArrow(parse, schema)
     )
 
 

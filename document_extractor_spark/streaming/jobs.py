@@ -5,7 +5,7 @@ ops exist), but a web-scale crawl pipeline ingests continuously, so the
 engine exposes its operators as streaming jobs:
 
 - ``stream_extract``   — the SAME ``extract_pages`` operator over
-  ``readStream`` micro-batches (mapInPandas works unchanged in streaming).
+  ``readStream`` micro-batches (mapInArrow works unchanged in streaming).
 - ``stream_event_counts`` — watermarked tumbling-window aggregation.
 - ``stream_sessionize`` — ``session_window`` gap sessions.
 - ``stream_host_stats`` — the batch ``textstats.host_stats``

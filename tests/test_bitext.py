@@ -151,10 +151,31 @@ def test_gale_church_null_sentence_is_empty(spark):
 
 
 def test_gale_church_cap_raises(spark):
-    import pytest
+    """An oversize pair fails the action loudly, naming the pair."""
+    from pyspark.errors import PythonException
 
     from document_extractor_spark.operators.bitext import gale_church_align
 
     df = _pairs(spark, [(1, ["a"] * 40, ["b"] * 3)])
-    with pytest.raises(ValueError, match="max_sentences"):
-        gale_church_align(df, max_sentences=30)
+    with pytest.raises(PythonException,
+                       match="pair 1 exceeds max_sentences=30"):
+        gale_church_align(df, max_sentences=30).collect()
+
+
+def test_gale_church_plan_build_runs_no_job(spark):
+    """The ``max_sentences`` guard runs in the kernel: building the plan
+    starts no Spark job, also over an input with a shuffle."""
+    from document_extractor_spark.operators.bitext import gale_church_align
+
+    sc = spark.sparkContext
+    local = _pairs(spark, [(1, ["a b", "c"], ["x y"]), (2, ["d"], ["z"])])
+    for name, df in (("local", local), ("shuffled", local.repartition(2))):
+        group = f"gale_church_plan_{name}"
+        sc.setJobGroup(group, "plan build only")
+        try:
+            out = gale_church_align(df, max_sentences=4)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == [], name
+        assert {r["pair_id"] for r in out.collect()} == {1, 2}, name

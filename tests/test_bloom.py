@@ -58,7 +58,7 @@ def test_bloom_build_partitioning_invariant(spark, monkeypatch):
     assert one == many and one[1] == 200
     assert plans
     for plan in plans:
-        assert "Python" not in plan and "MapInPandas" not in plan, plan
+        assert "Python" not in plan and "MapIn" not in plan, plan
         assert "SinglePartition" not in plan, plan
 
 

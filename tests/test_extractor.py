@@ -597,6 +597,19 @@ def test_image_items_block_level():
     assert img.src == "/pic.jpg" and img.content == "a nice chart"
 
 
+def test_image_after_indentation_is_block_level():
+    """A blank text run opens no block: an ``<img>`` after the
+    indentation of hand-written markup is still its own image block."""
+    from document_extractor_spark.extractor.html_extract import flatten
+
+    blocks = flatten("<figure>\n  <img src=/p.jpg alt=chart>\n</figure>"
+                     ).blocks
+    assert [(b.tag, b.src, b.text) for b in blocks] == [
+        ("img", "/p.jpg", "chart")]
+    pre = flatten("<pre>\n  <img src=/p.jpg alt=chart> x</pre>").blocks
+    assert [b.tag for b in pre] == ["pre"]
+
+
 def test_inline_image_does_not_split_paragraph():
     html = ("<main><p>Leading words of a long sentence "
             "<img src='/icon.png' alt='icon'> trailing words keep flowing "
@@ -777,14 +790,14 @@ def test_odd_whitespace_kept_in_text_but_splits_words(html, text, n_words,
         assert b.table_grid == [text.split("\t")]
 
 
-def test_entities_kept_raw_in_text_after_the_last_tag():
-    """Entities are decoded in text runs that end at a tag; the run after
-    the last tag of a page (a truncated page) is kept as it stands."""
+def test_entities_decoded_in_text_after_the_last_tag():
+    """Entities are decoded in every text run, the run after the last
+    tag of a page (a truncated page) included."""
     from document_extractor_spark.extractor.html_extract import flatten
 
-    raw = flatten("<p>a</p>Tom &amp; Jerry").blocks
-    assert [(b.tag, b.text, b.n_words) for b in raw] == [
-        ("p", "a", 1), ("body", "Tom &amp; Jerry", 3)]
+    tail = flatten("<p>a</p>Tom &amp; Jerry").blocks
+    assert [(b.tag, b.text, b.n_words) for b in tail] == [
+        ("p", "a", 1), ("body", "Tom & Jerry", 3)]
     decoded = flatten("<p>a</p>Tom &amp; Jerry<br>").blocks
     assert decoded[1].text == "Tom & Jerry"
 

@@ -78,7 +78,7 @@ def test_hll_partitioning_invariance(spark):
 
 
 def test_hll_plan_is_pure_relational(spark):
-    """Unlike KMV there is no mapInPandas partial pass — the whole
+    """Unlike KMV there is no mapInArrow partial pass — the whole
     sketch must be JVM relational algebra (no Python of any kind)."""
     df = spark.createDataFrame([("a", 1)], "key string, v bigint")
     assert_no_python(hll_distinct(df, "key", "v"))

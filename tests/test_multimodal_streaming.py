@@ -209,7 +209,7 @@ def kernel_scan(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", sorted(_KERNELS))
 def test_kernel_plans_one_map_and_prunes_scan(kernel_scan, name):
-    """Each kernel plans as exactly one MapInPandas over the scan, with no
+    """Each kernel plans as exactly one MapInArrow over the scan, with no
     Exchange, and the scan reads only the columns the kernel needs."""
     import re
 
@@ -223,7 +223,7 @@ def test_kernel_plans_one_map_and_prunes_scan(kernel_scan, name):
     out = op(kernel_scan)
     plan = physical_plan(out)
     assert_vectorized_python_only(out)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "Exchange" not in plan, plan
     read = set(re.findall(r"(\w+):", scan_read_schema(out)))
     want = {"url", col} | ({"lang"} if name == "extract_pages" else set())

@@ -64,7 +64,7 @@ def test_plan_has_no_per_row_python(spark, pages_df):
     result = extract_pages(pages_df, num_partitions=8)
     assert_vectorized_python_only(result)
     plan = result._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_arrow_max_bytes_per_batch_caps_worker_batches(spark, pages_df,
@@ -73,21 +73,21 @@ def test_arrow_max_bytes_per_batch_caps_worker_batches(spark, pages_df,
     extraction worker receives: set to a few KB, one partition of the
     fixture arrives as several batches, and the text stays
     byte-identical to the goldens. The setting is restored afterwards."""
-    import pandas as pd
+    import pyarrow as pa
 
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
     one = pages_df.coalesce(1)
 
     def batch_rows(it):
-        for pdf in it:
-            yield pd.DataFrame({"n": [len(pdf)]})
+        for batch in it:
+            yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
 
     prev = spark.conf.get(key)
     spark.conf.set(key, "4096")
     try:
         # the columns extract_pages hands its worker, batched identically
         batches = [r["n"] for r in one.select("url", "html", "lang")
-                   .mapInPandas(batch_rows, "n long").collect()]
+                   .mapInArrow(batch_rows, "n long").collect()]
         out = {r["url"]: r["extracted_text"]
                for r in extract_pages(one).collect()}
     finally:
@@ -268,23 +268,14 @@ def test_run_extract_job_from_catalog_table(spark, small_corpus, tmp_path):
         .option("path", str(tmp_path / "pages_cat_data"))
         .saveAsTable("pages_cat"))
     try:
-        out_t = str(tmp_path / "out_table")
-        s1 = run_extract_job(spark, "pages_cat", out_t, num_partitions=8)
-        assert s1["partitions_processed"] == s1["partitions_total"] == 8
-        assert s1["docs"] == 300
-        out_p = str(tmp_path / "out_path")
-        s2 = run_extract_job(spark, small_corpus, out_p, num_partitions=8)
-        got_t = {r["url"]: r["extracted_text"]
-                 for r in read_extracted(spark, out_t).collect()}
-        got_p = {r["url"]: r["extracted_text"]
-                 for r in read_extracted(spark, out_p).collect()}
-        assert got_t == got_p and s2["docs"] == 300
-        # Resume planning must fingerprint all 8 committed partitions
-        # off ONE batched groupBy-count job, never one Spark count()
-        # per manifest (at 100k partitions that is hours of planning).
+        # Commits fingerprint each partition from its observed docs
+        # (no count job per partition), and resume planning fingerprints
+        # all 8 committed partitions off ONE batched groupBy-count job,
+        # never one Spark count() per manifest (at 100k partitions that
+        # is hours of planning): every fingerprint carries a row count.
         import document_extractor_spark.checkpoint as ckpt
 
-        calls = {"batched": 0, "single": 0}
+        calls = {"batched": 0, "uncounted": 0}
         orig_cpc = ckpt.catalog_partition_counts
         orig_fp = ckpt.input_fingerprint
 
@@ -292,23 +283,38 @@ def test_run_extract_job_from_catalog_table(spark, small_corpus, tmp_path):
             calls["batched"] += 1
             return orig_cpc(sp, path)
 
-        def counting_fp(path, part, sp=None, counts=None):
-            if sp is not None and counts is None and \
-                    ckpt.is_catalog_table(path):
-                calls["single"] += 1
-            return orig_fp(path, part, sp, counts)
+        def counting_fp(path, part, counts=None):
+            if counts is None and ckpt.is_catalog_table(path):
+                calls["uncounted"] += 1
+            return orig_fp(path, part, counts)
 
+        out_t = str(tmp_path / "out_table")
         ckpt.catalog_partition_counts = counting_cpc
         ckpt.input_fingerprint = counting_fp
         try:
+            s1 = run_extract_job(spark, "pages_cat", out_t,
+                                 num_partitions=8)
+            assert calls == {"batched": 0, "uncounted": 0}
             s3 = run_extract_job(spark, "pages_cat", out_t,
                                  num_partitions=8)
         finally:
             ckpt.catalog_partition_counts = orig_cpc
             ckpt.input_fingerprint = orig_fp
+        assert s1["partitions_processed"] == s1["partitions_total"] == 8
+        assert s1["docs"] == 300
+        for m in ckpt.read_manifests(out_t):
+            assert m["input_fingerprint"] == (
+                f"table:pages_cat:warc_day={m['partition']}:n={m['docs']}")
         assert s3["partitions_processed"] == 0
         assert s3["partitions_skipped"] == 8
-        assert calls == {"batched": 1, "single": 0}
+        assert calls == {"batched": 1, "uncounted": 0}
+        out_p = str(tmp_path / "out_path")
+        s2 = run_extract_job(spark, small_corpus, out_p, num_partitions=8)
+        got_t = {r["url"]: r["extracted_text"]
+                 for r in read_extracted(spark, out_t).collect()}
+        got_p = {r["url"]: r["extracted_text"]
+                 for r in read_extracted(spark, out_p).collect()}
+        assert got_t == got_p and s2["docs"] == 300
         # Explicit table: prefix resolves to the same catalog read.
         s4 = run_extract_job(spark, "table:pages_cat", out_t,
                              num_partitions=8)
@@ -516,7 +522,7 @@ def test_warc_inflate_members_chunked_feed():
 
 
 def test_warc_reader_bounded_batches(spark, tmp_path):
-    """>1024 records in one archive: the mapInPandas parser must emit
+    """>1024 records in one archive: the mapInArrow parser must emit
     every record across its bounded-slice yields (flush-the-tail
     path included)."""
     from document_extractor_spark.sources.warc import (
@@ -661,7 +667,7 @@ def test_archive_reader_total_on_hostile_archives(spark, tmp_path, kind):
     """A good archive next to one with a corrupt middle gzip member and
     one with a negative Content-Length: the job finishes, every good
     record comes back unchanged, each hostile archive keeps the record
-    before the damage, and the reader plans as one MapInPandas with no
+    before the damage, and the reader plans as one MapInArrow with no
     Exchange."""
     from document_extractor_spark.plans import physical_plan
 
@@ -677,7 +683,7 @@ def test_archive_reader_total_on_hostile_archives(spark, tmp_path, kind):
         _negative_length_middle(build, recs("negative")))
     df = read(spark, str(tmp_path))
     plan = physical_plan(df)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "Exchange" not in plan, plan
     expected = recs("good") + recs("corrupt")[:1] + recs("negative")[:1]
     assert sorted(map(row_key, df.collect())) == \

@@ -169,8 +169,7 @@ def test_multipage_table_without_html_stays_apart(spark):
 
 
 def test_multipage_null_numeric_columns(spark):
-    """Nullable ints arrive in pandas as float64 NaN (Arrow conversion);
-    the merge must treat them as 0, not raise int(NaN)."""
+    """A NULL row_count / column_count merges as 0."""
     rows = [
         (7, 1, 0, "paragraph", "starts here and", None, None, None),
         (7, 2, 0, "paragraph", "continues onward.", None, None, None),
@@ -187,7 +186,7 @@ def test_multipage_merge_across_arrow_batches(spark):
     """The streaming kernel carries the open trailing article across
     Arrow batch boundaries: with maxRecordsPerBatch=2, a 6-page article
     spans 3+ batches and must still merge into one item. This is the
-    bounded-memory design: peak per-worker frame = one Arrow batch + one
+    bounded-memory design: peak per-worker merge input = one Arrow batch + one
     article, never corpus/buckets."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, "10000")
@@ -208,27 +207,6 @@ def test_multipage_merge_across_arrow_batches(spark):
         assert out[1].article_id == 12
     finally:
         spark.conf.set(key, old)
-
-
-def test_multipage_merge_bucket_does_not_write_into_a_slice():
-    """The streaming kernel hands ``_merge_bucket`` a slice of its batch
-    frame; normalizing the int columns must build a new frame, not
-    assign into that slice (pandas' chained-assignment check raises
-    here instead of warning)."""
-    import pandas as pd
-
-    from document_extractor_spark.operators.multipage import _merge_bucket
-
-    batch = pd.DataFrame({
-        "article_id": [1, 1, 2], "page_num": [1.0, 2.0, 1.0],
-        "order": [0.0, 0.0, None], "type": ["paragraph"] * 3,
-        "content": ["starts here and", "continues.", "Other."],
-        "html": [None] * 3, "row_count": [None] * 3,
-        "column_count": [0.0] * 3})
-    with pd.option_context("mode.chained_assignment", "raise"):
-        out = _merge_bucket(batch[batch["article_id"] == 1])
-    assert out["content"].tolist() == ["starts here and continues."]
-    assert batch["order"].isna().sum() == 1
 
 
 def test_multipage_plan_build_runs_no_job(spark):
@@ -384,7 +362,7 @@ def test_bpe_token_count_vs_whitespace(spark):
 def test_new_query_plans_pruned_and_vectorized(spark):
     """Round-2 driver queries keep the scale-shaped plans: parquet scans
     pruned to exactly the needed columns, Python only as Arrow-batched
-    mapInPandas (never BatchEvalPython)."""
+    mapInArrow (never BatchEvalPython)."""
     import __spark_entry__ as entry_mod
     from document_extractor_spark.plans import (
         assert_no_python,
